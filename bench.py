@@ -6,7 +6,8 @@ scale factor and prints ONE JSON line:
      "queries": {"<name>": sec, ...}, "sf": 0.1, ...}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS  (default 32 → master local[N]).
+     SPARK_GRAFT_CPUS  (default: the CPUs this process may run on,
+                        len(os.sched_getaffinity(0)) → master local[N]).
 
 Each query is forced end-to-end with the noop sink (full execution,
 no driver-side collect). A short warmup query absorbs JVM/codegen
@@ -117,7 +118,7 @@ def _cpu_ticks() -> tuple[int, int] | None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     os.environ["SPARK_GRAFT_CPUS"] = cpus
 
     import __spark_entry__ as entrymod

@@ -512,9 +512,11 @@ def minhash_ml_crosscheck(
     # the per-doc shingle-set table is needed TWICE — exact-Jaccard
     # verify of our band candidates and HashingTF's input — and both
     # consumers are set-semantic (array_intersect size; binary TF), so
-    # one checkpointed collect_list serves both instead of each leg
-    # re-aggregating the shingle stream (one groupBy exchange + one
-    # collect_list pass saved; outputs unchanged for any element order)
+    # both legs share this one lazy collect_list table. It is not
+    # checkpointed: within the final action ReusedExchange runs its
+    # groupBy exchange once for both legs (outputs unchanged for any
+    # element order). MinHashLSH.fit's head() probe for the vector size
+    # is a separate job and recomputes part of the aggregation.
     sets_ = shingles.groupBy("doc_id").agg(F.collect_list("shingle").alias("sh"))
     ours = (
         _jaccard_for_pairs(

@@ -8,8 +8,11 @@ for free. Whole-text-file ingestion lives in ``sources.text``.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Every table the driver generates under /root/testdata/sf*/ .
 TABLES = (
@@ -32,6 +35,27 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
 
+#: Raw parquet file schemas, one per (session, file version). Without a
+#: schema, ``spark.read.parquet`` launches a one-task Spark job only to
+#: read the file footer, so a query that loads three tables would pay
+#: three such jobs before doing any work. Keyed like ``_PAIR_GRAPH_CACHE`` by
+#: applicationId, plus the file's realpath, mtime and size, so a fixture
+#: regenerated at the same path gets a new entry instead of a stale one.
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def _file_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark infers for the parquet file at ``path``, inferred
+    once per session and file version. Holds the raw file schema: the
+    caller applies any type normalisation after reading with it."""
+    st = os.stat(path)
+    key = (spark.sparkContext.applicationId, os.path.realpath(path), st.st_mtime_ns, st.st_size)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is None:
+        schema = _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
+    return schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Parquet scan → pushdown/pruning apply.
 
@@ -44,11 +68,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     session-TZ TIMESTAMP type (session TZ is pinned UTC, so the rendered
     instants are identical) so operators can rely on one ts type —
     `unix_micros` & friends reject NTZ inputs.
+
+    The read passes the file's schema from ``_file_schema``, so only the
+    first read of a file in a session pays the footer-read job of schema
+    inference; later reads launch no Spark job. The memo is keyed by
+    (applicationId, realpath, mtime, size), so rewriting the file gives a
+    new key. It holds schemas, not DataFrames: every call still builds a
+    fresh relation with fresh attribute ids, which two ``load_table``
+    calls of one table need to self-join without ambiguity.
     """
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = spark.read.schema(_file_schema(spark, path)).parquet(path)
     for col, dtype in df.dtypes:
         if name == "events" and col == "ts" and dtype == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))

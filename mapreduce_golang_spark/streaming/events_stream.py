@@ -27,20 +27,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..sources.tables import _file_schema
+
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
-
-
-def _events_raw_schema(ts_type) -> StructType:
-    return StructType(
-        [
-            StructField("event_id", LongType()),
-            StructField("ts", ts_type),
-            StructField("user_id", LongType()),
-            StructField("event_type", StringType()),
-            StructField("value", DoubleType()),
-            StructField("props", StringType()),
-        ]
-    )
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -48,23 +37,19 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Streaming sources need the schema up front, but the fixture's
     physical ts layout has varied between driver rounds (INT64 nanos,
-    naive timestamp[us]/NTZ — see sources/tables.py). Sniff the layout
-    with a zero-cost batch schema read, declare the matching streaming
-    schema, and normalize to session-TZ TIMESTAMP so every downstream
-    event-time operator sees one type.
+    naive timestamp[us]/NTZ — see sources/tables.py). Declare the file's
+    own schema, memoised per session and file version by
+    ``tables._file_schema`` (only the first drain of a session pays its
+    footer-read job), and normalize to session-TZ TIMESTAMP so every
+    downstream event-time operator sees one type.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    physical = dict(spark.read.parquet(f"{sf_dir}/events.parquet").dtypes)["ts"]
-    from pyspark.sql.types import TimestampNTZType, TimestampType
-
-    ts_type = {
-        "bigint": LongType(),
-        "timestamp_ntz": TimestampNTZType(),
-    }.get(physical, TimestampType())
+    schema = _file_schema(spark, f"{sf_dir}/events.parquet")
+    physical = schema["ts"].dataType.simpleString()
     # The file stream source requires a directory basePath; select just
     # the events file out of the fixture dir with a glob filter.
     raw = (
-        spark.readStream.schema(_events_raw_schema(ts_type))
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )

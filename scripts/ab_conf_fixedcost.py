@@ -14,8 +14,9 @@ Candidates:
              coalescePartitions.parallelismFirst=false (AQE coalesces
              tiny shuffles to FEWER reduce tasks instead of
              parallelism-first 1MB floors)
-  initial  — adaptive.coalescePartitions.initialPartitionNum high +
-             shuffle.partitions low (scale-adaptive initial width)
+  shj      — join.preferSortMergeJoin=false (shuffled hash join where
+             the build side fits, no sort on either side)
+  maxpart  — files.maxPartitionBytes=512m (fewer, larger scan splits)
 
 Usage: python scripts/ab_conf_fixedcost.py <config-name>
 Run each config in its OWN process, alternating, several reps.
@@ -70,6 +71,8 @@ CONFIGS = {
 
 
 def main() -> None:
+    if len(sys.argv) < 2 or sys.argv[1] not in CONFIGS:
+        sys.exit(f"usage: python scripts/ab_conf_fixedcost.py <{'|'.join(CONFIGS)}>")
     name = sys.argv[1]
     extra = CONFIGS[name]
     from pyspark.sql import SparkSession

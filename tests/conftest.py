@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -23,3 +25,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def launched_jobs(spark):
+    """``with launched_jobs() as jobs:`` — after the block, ``jobs`` holds
+    the ids of every Spark job the block launched (counted through a job
+    group and the status tracker, once the listener bus has drained)."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def counting():
+        group = f"count-{uuid.uuid4().hex}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield jobs
+        finally:
+            sc._jsc.clearJobGroup()
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return counting

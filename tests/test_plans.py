@@ -33,6 +33,20 @@ def test_q1_prunes_columns(spark, sf_dir):
             "l_linestatus", "l_shipdate"} == cols
 
 
+def test_fixed_cost_queries_build_without_jobs(spark, sf_dir, launched_jobs):
+    # job budget of the fixed-cost tier: once a session has read each
+    # table's schema, building these plans (no action) runs no Spark job
+    names = ["wc", "q1_pricing_summary", "q3_shipping_priority",
+             "q6_forecast_revenue", "crash_data", "hourly_event_counts"]
+    qs = entrymod.queries()
+    for name in names:
+        qs[name](spark, sf_dir)
+    for name in names:
+        with launched_jobs() as jobs:
+            qs[name](spark, sf_dir)
+        assert jobs == [], name
+
+
 def test_top_k_words_short_circuits(spark, sf_dir):
     assert "TakeOrderedAndProject" in _plan(spark, sf_dir, "top_k_words")
 

@@ -1,13 +1,41 @@
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from mapreduce_golang_spark.sources import formats
-from mapreduce_golang_spark.sources.tables import load_table
+from mapreduce_golang_spark.sources.tables import TABLES, load_table
 
 
 def _events_sample(spark, sf_dir):
     return load_table(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
+
+
+def test_warm_load_table_launches_no_job(spark, sf_dir, launched_jobs):
+    first = {name: load_table(spark, sf_dir, name).dtypes for name in TABLES}
+    with launched_jobs() as jobs:
+        again = {name: load_table(spark, sf_dir, name).dtypes for name in TABLES}
+    assert jobs == []
+    assert again == first
+    assert dict(again["events"])["ts"] == "timestamp"
+
+
+def test_load_table_schema_follows_rewritten_file(spark, tmp_path, launched_jobs):
+    # the schema memo is keyed by the file's version: a file rewritten
+    # at the same path with other columns must not read the old schema
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+    with launched_jobs() as cold:
+        assert load_table(spark, str(tmp_path), "t").columns == ["a", "b"]
+    with launched_jobs() as warm:
+        load_table(spark, str(tmp_path), "t")
+    assert len(cold) == 1 and warm == []
+
+    pq.write_table(pa.table({"a": [3], "c": [0.5], "d": [True]}), path)
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.dtypes == [("a", "bigint"), ("c", "double"), ("d", "boolean")]
+    assert [tuple(r) for r in df.collect()] == [(3, 0.5, True)]
 
 
 def test_csv_roundtrip(spark, sf_dir, tmp_path):
