@@ -1720,23 +1720,14 @@ def _journeys(spark, sf_dir):
     return W.user_journey_signatures(load_table(spark, sf_dir, "events"))
 
 
-# ROUND-12 WINDOW: the driver grades the FIRST 50 queries() entries only.
-# Round 11 left exactly 2 registered queries with no driver CORRECTNESS
-# row ever — wave 38 (state_schema_evolution_counts, foreach_batch_fanout,
-# the ROUND-12 ROTATION LIST staged by the round-11 verdict). This head
-# is those 2 padded to 50 with 48 already-driver-green queries (the 43
-# round-11 pads plus 5 of the wave-37 queries that went green in
-# CORRECTNESS_r11 — re-grading a green query costs nothing). Done =
-# CORRECTNESS_r12 50/50 green → driver-cumulative 308/308: EVERY query
-# ever registered has a driver row.
-# Any round-12 additions MUST register BELOW slot 50 (they get
-# full-gate coverage this round and the driver window next round).
-# Historical round-11 head (wave 37 + 43 pads): see the ROUND-11
-# ROTATION comment above _RAW_QUERIES.
-_ROUND12_HEAD: list[str] = [
-    # wave 38 — the only 2 queries with no driver row yet
+# The driver grades the FIRST 50 queries() entries only. The window
+# holds only oracle-checkable, driver-green queries (a rows-only query
+# there could never grade green); every other query registers below
+# slot 50 and is covered by the full gate (scripts/correctness_gate.py).
+# How the window rotated from round to round is in the comment above
+# _RAW_QUERIES and in git history.
+_DRIVER_WINDOW: list[str] = [
     "state_schema_evolution_counts", "foreach_batch_fanout",
-    # pads: already-driver-green (48 = 43 r11 pads + 5 wave-37 r11 greens)
     "ps_orders_status_profile", "sql_scripting_coverage_threshold",
     "sql_udf_price_bands", "collated_type_counts", "state_store_audit",
     "deterministic_doc_sample", "posexplode_tokens", "kwic_snippets",
@@ -1756,23 +1747,6 @@ _ROUND12_HEAD: list[str] = [
     "lineitem_price_stats", "orders_above_customer_avg",
     "trailing_hour_value", "scd2_customers",
 ]
-
-# ROUND-14 head (historical): led with minhash_ml_crosscheck_scaled +
-# _ROUND12_HEAD[:49], dropping scd2_customers. The round-14 verdict
-# found this unachievable by construction: minhash_ml_crosscheck_scaled
-# is rows-only BY DESIGN (MLlib's seeded affine MinHash functions are
-# not SQL-reproducible, so no DuckDB oracle exists — documented at
-# _minhash_ml_crosscheck_scaled), so the driver records err=no_oracle
-# for it and the window can never be 50/50 while it occupies a slot.
-# Its standing evidence is the full in-repo gate's rows-only row
-# (CORRECTNESS_FULL.json), like the HLL sketch.
-#
-# ROUND-15 head: restore the round-12 window verbatim (50 oracle-
-# checkable, driver-green queries incl. scd2_customers at slot 50);
-# minhash_ml_crosscheck_scaled registers below slot 50 permanently.
-# Amended rotation protocol (round-14 verdict #1): ONLY oracle-checkable
-# queries enter the driver window. Driver-verifiable ceiling: 308/309.
-_ROUND15_HEAD: list[str] = list(_ROUND12_HEAD)
 
 
 def _embedding_stats_arrow(spark, sf_dir):
@@ -2257,7 +2231,7 @@ def _streaming_cdc_state(spark, sf_dir):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     ordered: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for name in _ROUND15_HEAD:
+    for name in _DRIVER_WINDOW:
         ordered[name] = _shipped(_RAW_QUERIES[name])
     for name, fn in _RAW_QUERIES.items():
         if name not in ordered:
@@ -2296,7 +2270,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # observed_ingest_metrics — the only 4 without a driver row) padded to
 # 50 with the same 46 green pads as round 9. CORRECTNESS_r10 came back
 # 50/50 → driver-cumulative 299/299 for every pre-wave-37 query.
-# ROUND-12 ROTATION (executed): _ROUND12_HEAD above leads with wave 38
+# ROUND-12 ROTATION (executed): the round-12 head leads with wave 38
 # (state_schema_evolution_counts, foreach_batch_fanout — the only 2
 # queries without a driver row after CORRECTNESS_r11's 50/50) padded to
 # 50 with 48 driver-green queries. Done = CORRECTNESS_r12 50/50 →
@@ -2316,7 +2290,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # (scd2_customers dropped). The r14 verdict flagged this as a window
 # regression: the rotated-in query is rows-only by design (no oracle →
 # err=no_oracle forever), so the window read 49/50 and a green query
-# had left it. ROUND-15 ROTATION (executed): _ROUND15_HEAD restores the
+# had left it. ROUND-15 ROTATION (executed): _DRIVER_WINDOW restores the
 # r12 window verbatim; minhash_ml_crosscheck_scaled sits below slot 50
 # permanently with the full gate's rows-only row as standing evidence.
 # Protocol amendment: only oracle-checkable queries enter the window.

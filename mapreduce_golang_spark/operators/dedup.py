@@ -26,7 +26,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreduce_golang_spark.functions.tokenize import LETTERS_ONLY_RE, widen_for_cpu
@@ -598,37 +598,54 @@ GRAPH_ROWS_PER_PARTITION = 2_000_000
 GRAPH_BROADCAST_MAX_ROWS = 1_000_000
 
 
-def right_size_graph(df: DataFrame, key: str, min_parts: int = 4, max_parts: int = 2048) -> DataFrame:
+def checkpoint_counted(df: DataFrame, *aggs: Column) -> tuple[DataFrame, dict]:
+    """Eagerly localCheckpoint ``df`` with ``aggs`` observed on that same
+    job; returns (checkpointed frame, metrics). One scheduler round-trip
+    instead of checkpoint + a separate count action. ``Observation.get``
+    blocks until the observed plan has run, so the eager action and the
+    read stay together here: a lazy checkpoint would hang the caller.
+    Over an empty frame ``count`` reads 0 and ``sum`` reads None."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    d = df.observe(obs, *aggs).localCheckpoint(eager=True)
+    return d, obs.get
+
+
+def right_size_graph(
+    df: DataFrame, key: str, min_parts: int = 4, max_parts: int = 2048
+) -> tuple[DataFrame, int]:
     """Materialize a graph-loop table and hash-partition it on ``key``
     at a width derived from its MEASURED size — not the session's
     corpus-sized shuffle width (waste: a tiny pair graph through 200
     shuffle partitions per round) and not a fixture-sized constant (a
     billion-edge graph through 4 partitions is a serial bottleneck).
-    The extra count is against checkpointed data and is amortized over
-    every loop iteration that follows."""
-    return right_size_graph_counted(df, key, min_parts, max_parts)[0]
-
-
-def right_size_graph_counted(
-    df: DataFrame, key: str, min_parts: int = 4, max_parts: int = 2048
-) -> tuple[DataFrame, int]:
-    """right_size_graph plus the row count it already measured — the
-    graph loops all need that count anyway (n_nodes, edge fixpoint
-    detection), and re-counting a just-checkpointed table is one more
-    scheduler round-trip per loop setup (round-11 verdict #4). Since
-    round 15 the count rides the checkpoint job itself as an observed
-    metric (``Dataset.observe`` + eager localCheckpoint — verified to
-    deliver metrics with zero extra action), so the setup is ONE job,
-    not checkpoint + count."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    d = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-    n = int(obs.get["n"])
+    Returns the table and its row count, which the loops need anyway
+    (n_nodes, edge fixpoint detection); the count rides the checkpoint
+    job as an observed metric."""
+    d, m = checkpoint_counted(df, F.count(F.lit(1)).alias("n"))
+    n = int(m["n"])
     k = int(max(min_parts, min(max_parts, n // GRAPH_ROWS_PER_PARTITION + 1)))
     if k != d.rdd.getNumPartitions():
         d = d.repartition(k, key).localCheckpoint(eager=True)
     return d, n
+
+
+def _sym_edges(
+    pairs: DataFrame, src: str = "u", dst: str = "v", extra: tuple[str, ...] = ()
+) -> DataFrame:
+    """The undirected pair graph as directed edges: (doc_a→doc_b) ∪
+    (doc_b→doc_a) named (``src``, ``dst``), ``extra`` columns carried on
+    both directions. No distinct; callers that need one add it."""
+    return pairs.select(F.col("doc_a").alias(src), F.col("doc_b").alias(dst), *extra).union(
+        pairs.select(F.col("doc_b").alias(src), F.col("doc_a").alias(dst), *extra)
+    )
+
+
+def _graph_bc(t: DataFrame, n: int) -> DataFrame:
+    """Broadcast hint for a loop side table whose rows are bounded by the
+    measured ``n``; left unhinted above GRAPH_BROADCAST_MAX_ROWS."""
+    return F.broadcast(t) if n <= GRAPH_BROADCAST_MAX_ROWS else t
 
 
 def near_dup_components(
@@ -673,12 +690,7 @@ def near_dup_components(
     """
     if pairs is None:
         pairs = ngram_jaccard_pairs(df)
-    edges = right_size_graph(
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).union(
-            pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-        ),
-        "v",
-    )  # computed once, reused every round
+    edges, _ = right_size_graph(_sym_edges(pairs), "v")  # reused every round
     # the loop iterates over PAIR-GRAPH NODES only (round 13): a doc
     # with no near-dup edge can never change labels — it is a
     # singleton by construction — so singletons rejoin ONCE after
@@ -686,33 +698,28 @@ def near_dup_components(
     # convergence count. At 100 TB this is the difference between
     # shuffling/broadcasting the CORPUS per hop and only the dup-graph
     # nodes (dups are the minority by design of a deduped pipeline);
-    # at sf0.1 it A/B'd a wash (scripts/ab_loop_nodes.py: min-of-6
-    # 1.13 vs 1.02 s components-alone, identical on the hist
-    # composition — the fixture loop is scheduler-bound, not
+    # at sf0.1 it A/B'd a wash (scripts/ab_loop_nodes.py at commit
+    # a48fc12: min-of-6 1.13 vs 1.02 s components-alone, identical on
+    # the hist composition — the fixture loop is scheduler-bound, not
     # data-bound), landed for the scale shape with outputs proven
     # identical either way.
-    labels, n_labels = right_size_graph_counted(
+    labels, n_labels = right_size_graph(
         edges.select("u").distinct().withColumn("label", F.col("u")), "u"
     )
-    # measured-gate broadcast (GRAPH_BROADCAST_MAX_ROWS): every
-    # per-hop side table is ≤ n_labels rows, so below the cap each
+
+    # every per-hop side table is ≤ n_labels rows, so below the gate each
     # hop's joins go broadcast-hash and a hop costs one shuffle
-    small = n_labels <= GRAPH_BROADCAST_MAX_ROWS
-
-    def bc(t: DataFrame) -> DataFrame:
-        return F.broadcast(t) if small else t
-
     def hop(lab: DataFrame) -> DataFrame:
         """One propagation + pointer-jump step over (u, label, old);
         ``old`` (the label before this ROUND) rides along untouched."""
         neighbor_min = (
             edges.join(
-                bc(lab.select(F.col("u").alias("v"), "label")), "v"
+                _graph_bc(lab.select(F.col("u").alias("v"), "label"), n_labels), "v"
             )
             .groupBy("u")
             .agg(F.min("label").alias("nmin"))
         )
-        prop = lab.join(bc(neighbor_min), "u", "left").select(
+        prop = lab.join(_graph_bc(neighbor_min, n_labels), "u", "left").select(
             "u", "old", F.least("label", F.coalesce("nmin", "label")).alias("label")
         )
         # pointer jump: label(u) <- label(label(u)). label(u) is always
@@ -727,17 +734,16 @@ def near_dup_components(
         # min run twice per hop. Materializing prop per hop instead
         # (localCheckpoint before the jump) A/B'd SLIGHTLY SLOWER at
         # sf0.1 — min-of-6 interleaved 1.00 vs 0.96 s per loop
-        # (scripts/ab_pointer_jump.py; identical outputs) — the extra
+        # (scripts/ab_pointer_jump.py at commit a48fc12; identical
+        # outputs) — the extra
         # per-hop materialization job costs more than the recompute of
         # a ≤ GRAPH_BROADCAST_MAX_ROWS subtree. Above the gate the
         # joins are shuffle joins and ReusedExchange shares the
         # subtree's exchange, so the double-compute is small-path-only.
         lookup = prop.select(F.col("u").alias("label"), F.col("label").alias("ll"))
-        return prop.join(bc(lookup), "label", "left").select(
+        return prop.join(_graph_bc(lookup, n_labels), "label", "left").select(
             "u", "old", F.least("label", F.coalesce("ll", "label")).alias("label")
         )
-
-    from pyspark.sql import Observation
 
     changed = -1
     for _ in range(max_iter):
@@ -748,18 +754,13 @@ def near_dup_components(
         # hop-1 chain each (broadcast stages don't share un-shuffled
         # subtrees the way ReusedExchange shares shuffles).
         # The convergence count rides the checkpoint job as an observed
-        # metric (round 15): one scheduler round-trip per hop, not two
-        # (checkpoint + count). sum over an empty frame is NULL → 0.
+        # metric: sum over an empty frame is NULL → 0.
         stepped = hop(labels.select("u", F.col("label").alias("old"), "label"))
-        obs = Observation()
-        new_labels = (
-            stepped.select(
-                "u", "label", (F.col("label") != F.col("old")).alias("moved")
-            )
-            .observe(obs, F.sum(F.col("moved").cast("long")).alias("changed"))
-            .localCheckpoint(eager=True)
+        new_labels, m = checkpoint_counted(
+            stepped.select("u", "label", (F.col("label") != F.col("old")).alias("moved")),
+            F.sum(F.col("moved").cast("long")).alias("changed"),
         )
-        changed = int(obs.get["changed"] or 0)
+        changed = int(m["changed"] or 0)
         labels = new_labels.select("u", "label")
         if changed == 0:
             break
@@ -775,7 +776,7 @@ def near_dup_components(
     # gate this is one broadcast join over the corpus scan.
     return (
         df.select(F.col(id_col).alias("u"))
-        .join(bc(labels), "u", "left")
+        .join(_graph_bc(labels, n_labels), "u", "left")
         .select(
             F.col("u").alias(id_col),
             F.coalesce("label", F.col("u")).alias("component_id"),

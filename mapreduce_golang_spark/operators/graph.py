@@ -8,20 +8,22 @@ into chained CTEs so DuckDB computes the identical fixed number of
 steps.
 
 Scale notes: per iteration one join (ranks ⋈ edges, both hash-
-partitioned on the node key) + one aggregation; caching each
-iteration's ranks keeps lineage flat. Classic Pregel-on-DataFrames.
+partitioned on the node key) + one aggregation; checkpointing the
+ranks every second iteration keeps lineage at most two iterations
+deep. Classic Pregel-on-DataFrames.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from mapreduce_golang_spark.operators.dedup import (
-    GRAPH_BROADCAST_MAX_ROWS,
+    _graph_bc,
+    _sym_edges,
+    checkpoint_counted,
     ngram_jaccard_pairs,
     right_size_graph,
-    right_size_graph_counted,
 )
 
 PAGERANK_ITERATIONS = 10
@@ -41,60 +43,45 @@ def near_dup_pagerank(
     Returns (doc_id, rank) with rank rounded to 6 decimals."""
     if pairs is None:
         pairs = ngram_jaccard_pairs(df)
-    # partition width for the loop derives from the MEASURED graph
-    # size (right_size_graph): a near-dup graph is usually orders of
-    # magnitude smaller than the corpus (session shuffle width would
-    # waste a round-trip per iteration), but a fixed small constant
-    # would serialize a genuinely large graph.
-    sym = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .union(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-        .distinct()
-    )
     # out-degree is loop-invariant — fold it onto the edge list ONCE
-    # (u, v, deg) instead of re-aggregating + re-joining it from the
-    # checkpointed edges inside every iteration (round-11 verdict #4)
-    edges = right_size_graph(
-        sym.withColumn("deg", F.count("*").over(Window.partitionBy("u"))), "u"
-    )
-    # nodes are needed only to seed rank₀ (the per-iteration re-attach
-    # join is the identity — see the loop comment); the count rides
-    # the node-table checkpoint as an observed metric and round 1
-    # reads the materialized distinct instead of re-deriving it
-    # (round 15: one setup job, not distinct-count + re-distinct)
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    nodes = (
-        edges.select(F.col("u").alias("node"))
+    # (u, v, deg) instead of re-aggregating it inside every iteration
+    edges, _ = right_size_graph(
+        _sym_edges(pairs)
         .distinct()
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .withColumn("deg", F.count("*").over(Window.partitionBy("u"))),
+        "u",
     )
-    n_nodes = int(obs.get["n"])
+    return _pagerank(edges, F.col("rank") / F.col("deg"), iterations, damping, id_col)
+
+
+def _pagerank(
+    edges: DataFrame, contrib: Column, iterations: int, damping: float, id_col: str
+) -> DataFrame:
+    """The PageRank loop shared by the plain and weighted forms: ``edges``
+    is the right-sized (u, v, …) table and ``contrib`` the rank a source
+    ``u`` sends along one edge. Returns (id_col, rank) rounded to 6."""
+    # nodes are needed only to seed rank₀; the count rides the node-table
+    # checkpoint as an observed metric (one setup job)
+    nodes, m = checkpoint_counted(
+        edges.select(F.col("u").alias("node")).distinct(), F.count(F.lit(1)).alias("n")
+    )
+    n_nodes = int(m["n"])
     if n_nodes == 0:
-        return df.sparkSession.createDataFrame([], "doc_id long, rank double")
-    # measured-gate broadcast (dedup.GRAPH_BROADCAST_MAX_ROWS): the
-    # rank table is exactly n_nodes rows forever, so below the cap the
-    # per-iteration join goes broadcast-hash against the checkpointed
-    # edges and an iteration costs ONE shuffle (the inflow agg)
-    small = n_nodes <= GRAPH_BROADCAST_MAX_ROWS
+        return edges.sparkSession.createDataFrame([], "doc_id long, rank double")
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
     base = (1.0 - damping) / n_nodes
     for step in range(iterations):
-        # the edge list is symmetrized, so EVERY node has ≥1 incoming
-        # edge and ranks are strictly positive by induction — the
-        # inflow aggregation's domain is exactly the node set, making
-        # a re-attach join against `nodes` (and its coalesce-to-0)
-        # the identity. One join + one agg per iteration, nothing else.
+        # the edge list is symmetrized and every contribution is
+        # positive, so EVERY node has inflow and ranks stay strictly
+        # positive — the inflow aggregation's domain is exactly the node
+        # set, making a re-attach join against `nodes` the identity. One
+        # join + one agg per iteration; the rank table is n_nodes rows,
+        # so below the gate the join is broadcast-hash and an iteration
+        # costs ONE shuffle (the inflow agg).
         ranks = (
-            edges.join(
-                F.broadcast(ranks.withColumnRenamed("node", "u")) if small
-                else ranks.withColumnRenamed("node", "u"),
-                "u",
-            )
-            .select(F.col("v").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
+            edges.join(_graph_bc(ranks.withColumnRenamed("node", "u"), n_nodes), "u")
+            .select(F.col("v").alias("node"), contrib.alias("c"))
             .groupBy("node")
             .agg((F.lit(base) + damping * F.sum("c")).alias("rank"))
         )
@@ -165,11 +152,7 @@ def near_dup_reachability(
         pairs = ngram_jaccard_pairs(df)
     # symmetrize (u→v and v→u) so frontier-expansion is one equi-join;
     # min(src) over the symmetric list is the global min endpoint
-    sym = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    sym = _sym_edges(pairs, "src", "dst").localCheckpoint(eager=True)
     return spark.sql(
         f"""
         WITH RECURSIVE reach(doc, depth) AS (
@@ -324,20 +307,11 @@ def kcore_docs(
     """
     if pairs is None:
         pairs = ngram_jaccard_pairs(df)
-    edges, n_edges = right_size_graph_counted(
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .union(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-        .distinct(),
-        "u",
-    )
-
-    # the keep list is ≤ node count ≤ edge count rows — below the
-    # measured gate both semi-joins go broadcast-hash and a prune
-    # step costs one shuffle (the degree agg)
-    small = n_edges <= GRAPH_BROADCAST_MAX_ROWS
-
-    def bc(t: DataFrame) -> DataFrame:
-        return F.broadcast(t) if small else t
+    edges, n_edges = right_size_graph(_sym_edges(pairs).distinct(), "u")
+    # the keep list is ≤ node count ≤ the initial edge count — below the
+    # measured gate both semi-joins go broadcast-hash and a prune step
+    # costs one shuffle (the degree agg)
+    n_gate = n_edges
 
     def prune(e: DataFrame) -> DataFrame:
         keep = (
@@ -347,8 +321,8 @@ def kcore_docs(
             .select("u")
         )
         return (
-            e.join(bc(keep), "u", "left_semi")
-            .join(bc(keep.withColumnRenamed("u", "v")), "v", "left_semi")
+            e.join(_graph_bc(keep, n_gate), "u", "left_semi")
+            .join(_graph_bc(keep.withColumnRenamed("u", "v"), n_gate), "v", "left_semi")
             .select("u", "v")
         )
 
@@ -357,20 +331,12 @@ def kcore_docs(
     # broadcast and both semi-join probes each rebuild the first
     # prune's un-materialized subtree (same recompute trap as the
     # components hop fusion; see near_dup_components). The fixpoint
-    # edge count rides the checkpoint job as an observed metric
-    # (round 15): one scheduler round-trip per prune, not two.
-    from pyspark.sql import Observation
-
+    # edge count rides the checkpoint job as an observed metric.
     for _ in range(max_rounds):
         if n_edges == 0:
             break
-        obs = Observation()
-        pruned = (
-            prune(edges)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_pruned = int(obs.get["n"])
+        pruned, m = checkpoint_counted(prune(edges), F.count(F.lit(1)).alias("n"))
+        n_pruned = int(m["n"])
         if n_pruned == n_edges:
             break
         edges, n_edges = pruned, n_pruned
@@ -395,10 +361,9 @@ def near_dup_weighted_pagerank(
     than borderline matches, so the top-ranked docs are the true
     template centers rather than merely high-degree nodes.
 
-    Same loop discipline as near_dup_pagerank: weights and their
+    Runs near_dup_pagerank's loop (_pagerank): weights and their
     per-node sums materialize once (right-sized, checkpointed), each
-    round is one equi-join + agg on the vertex key, localCheckpoint
-    keeps lineage flat. Weight sums are exact only up to float
+    round is one equi-join + agg on the vertex key. Weight sums are exact only up to float
     re-association, but magnitudes are O(degree) and the oracle
     re-sums in the same double precision — round(6) output absorbs it.
 
@@ -406,56 +371,14 @@ def near_dup_weighted_pagerank(
     """
     if pairs is None:
         pairs = ngram_jaccard_pairs(df)
-    # per-node outgoing weight W(u) is loop-invariant — computed once
-    # as a window over the symmetrized weighted edges and folded onto
-    # the checkpointed edge list (u, v, jaccard, wsum), so each
-    # iteration is one equi-join + agg, with checkpoints every second
-    # iteration; same loop discipline (and rationale) as
-    # near_dup_pagerank above (round-11 verdict #4).
-    sym = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"), "jaccard")
-        .union(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"), "jaccard"))
+    # per-node outgoing weight W(u) is loop-invariant — computed once as
+    # a window over the symmetrized weighted edges and folded onto the
+    # checkpointed edge list (u, v, jaccard, wsum)
+    edges, _ = right_size_graph(
+        _sym_edges(pairs, extra=("jaccard",))
         .distinct()
+        .withColumn("wsum", F.sum("jaccard").over(Window.partitionBy("u"))),
+        "u",
     )
-    edges = right_size_graph(
-        sym.withColumn("wsum", F.sum("jaccard").over(Window.partitionBy("u"))), "u"
-    )
-    # same observed-metric setup as near_dup_pagerank (round 15)
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    nodes = (
-        edges.select(F.col("u").alias("node"))
-        .distinct()
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_nodes = int(obs.get["n"])
-    if n_nodes == 0:
-        return df.sparkSession.createDataFrame([], "doc_id long, rank double")
-    small = n_nodes <= GRAPH_BROADCAST_MAX_ROWS
-
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    base = (1.0 - damping) / n_nodes
-    for step in range(iterations):
-        # same invariant as near_dup_pagerank: symmetric edges + all
-        # weights > 0 (jaccard ≥ threshold) → every node has positive
-        # inflow, so the agg's domain is the node set and the
-        # re-attach join is the identity
-        ranks = (
-            edges.join(
-                F.broadcast(ranks.withColumnRenamed("node", "u")) if small
-                else ranks.withColumnRenamed("node", "u"),
-                "u",
-            )
-            .select(
-                F.col("v").alias("node"),
-                (F.col("rank") * F.col("jaccard") / F.col("wsum")).alias("c"),
-            )
-            .groupBy("node")
-            .agg((F.lit(base) + damping * F.sum("c")).alias("rank"))
-        )
-        # same cadence rationale as near_dup_pagerank
-        if step % 2 == 1:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select(F.col("node").alias(id_col), F.round("rank", 6).alias("rank"))
+    contrib = F.col("rank") * F.col("jaccard") / F.col("wsum")
+    return _pagerank(edges, contrib, iterations, damping, id_col)

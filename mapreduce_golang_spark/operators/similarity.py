@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 EMBEDDING_DIM = 64
@@ -256,13 +256,42 @@ def kmeans_assign(
 
     Returns (vec_id, cluster, dist) for the final assignment.
     """
-    vecs = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    vecs = _kmeans_vecs(embeddings)
     if centroids is None:
         centroids = _kmeans_fit(vecs, k, updates)
     return _kmeans_assign_to(vecs, centroids, k_rows=k).select(
         "vec_id", "cluster", F.round("dist", 4).alias("dist")
+    )
+
+
+def _kmeans_vecs(embeddings: DataFrame) -> DataFrame:
+    """(vec_id, e): the k-means input, embeddings promoted to double."""
+    return embeddings.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
+
+
+def _sq_dist() -> Column:
+    """Squared Euclidean distance between the ``e`` and ``c`` arrays."""
+    return F.aggregate(
+        F.zip_with(F.col("e"), F.col("c"), lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda a, x: a + x,
+    )
+
+
+def _mean_vectors(vecs: DataFrame, *keys: str) -> DataFrame:
+    """Element-wise mean of the ``e`` arrays per ``keys`` group, as
+    (*keys, c): posexplode → avg per (keys, dim) hash agg → the k·dim
+    means re-assembled in dim order. No keys = one global mean row."""
+    return (
+        vecs.select(*keys, F.posexplode("e").alias("dim", "v"))
+        .groupBy(*keys, "dim")
+        .agg(F.avg("v").alias("cv"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "cv"))), lambda s: s["cv"]
+            ).alias("c")
+        )
     )
 
 
@@ -278,18 +307,13 @@ def _kmeans_alldists(
     BROADCAST_CENTROIDS_MAX. An unknown or over-cap count leaves the
     cross expansion unhinted so the planner never driver-collects a
     corpus-proportional table (round-8 verdict #1)."""
-    sq = F.aggregate(
-        F.zip_with(F.col("e"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
     build = (
         F.broadcast(cents)
         if k_rows is not None and k_rows <= BROADCAST_CENTROIDS_MAX
         else cents
     )
     return vecs.join(build, F.lit(True)).select(
-        "vec_id", "e", "cluster", F.round(sq, 6).alias("dist")
+        "vec_id", "e", "cluster", F.round(_sq_dist(), 6).alias("dist")
     )
 
 
@@ -316,9 +340,7 @@ def kmeans_fit_centroids(
     materializes ONCE and feeds to kmeans_assign / kmeans_silhouette /
     cluster_balanced_sample (each stays independently correct when
     called without it)."""
-    vecs = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    vecs = _kmeans_vecs(embeddings)
     return _kmeans_fit(vecs, k, updates)
 
 
@@ -338,18 +360,7 @@ def _kmeans_fit(vecs: DataFrame, k: int, updates: int) -> DataFrame:
     )
     for _ in range(updates):
         assigned = _kmeans_assign_to(vecs, centroids, k_rows=k)
-        centroids = (
-            assigned.select("cluster", F.posexplode("e").alias("dim", "v"))
-            .groupBy("cluster", "dim")
-            .agg(F.avg("v").alias("cv"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "cv"))), lambda s: s["cv"]
-                ).alias("c")
-            )
-            .localCheckpoint(eager=True)
-        )
+        centroids = _mean_vectors(assigned, "cluster").localCheckpoint(eager=True)
     return centroids
 
 
@@ -379,9 +390,7 @@ def kmeans_silhouette(
     (cluster, n_vectors, mean_silhouette, min_silhouette), floats
     rounded to 6.
     """
-    vecs = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    vecs = _kmeans_vecs(embeddings)
     cents = _kmeans_fit(vecs, k, updates) if centroids is None else centroids
     per_vec = (
         _kmeans_alldists(vecs, cents, k_rows=k)
@@ -416,9 +425,9 @@ def centroid_outliers(embeddings: DataFrame, per_label: int = 3) -> DataFrame:
     QA pass runs per class before training.
 
     Plan shape: centroids come from ONE posexplode + hash agg keyed on
-    (label, pos) — shuffle ∝ n_vectors × dim, with map-side partials —
-    re-assembled into an array via sort_array(collect_list(struct)),
-    yielding a LABEL-COUNT-sized table that broadcasts back onto the
+    (label, dim) — shuffle ∝ n_vectors × dim, with map-side partials —
+    re-assembled into an array in dim order (_mean_vectors), yielding
+    a LABEL-COUNT-sized table that broadcasts back onto the
     corpus (labels are a bounded dimension, unlike the corpus). The
     cosine is a narrow zip_with/aggregate pass; the per-label top-k is
     a window over the label key. Ranking orders by the ROUNDED cosine
@@ -431,25 +440,15 @@ def centroid_outliers(embeddings: DataFrame, per_label: int = 3) -> DataFrame:
     # promoted BEFORE any arithmetic: float*float stays float in Spark
     # while the oracle computes in double — last-bit drift survives
     # round(6) often enough to flake a differential hash
-    exploded = embeddings.select("label", F.posexplode(emb).alias("pos", "x"))
-    centroids = (
-        exploded.groupBy("label", "pos")
-        .agg(F.avg("x").alias("c"))
-        .groupBy("label")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-            ).alias("centroid")
-        )
-    )
+    centroids = _mean_vectors(embeddings.select("label", emb.alias("e")), "label")
     # reuse the module's shared norm/cosine expressions (one rounding
     # and determinism policy for every cosine operator in this file);
     # zero-norm rows (all-zero padding / failed-encode vectors) score
     # 0.0 instead of NaN — NaN would rank, hash, and compare
     # differently across engines (DuckDB yields NULL for 0/0)
     na = _norm_expr(emb)
-    nb = _norm_expr(F.col("centroid"))
-    cos_raw = _cosine(emb, F.col("centroid"), na, nb)
+    nb = _norm_expr(F.col("c"))
+    cos_raw = _cosine(emb, F.col("c"), na, nb)
     scored = embeddings.join(F.broadcast(centroids), "label").select(
         "label",
         "vec_id",
@@ -707,9 +706,7 @@ def cluster_balanced_sample(
     """
     from mapreduce_golang_spark.operators.mixing import _md5_bucket
 
-    vecs = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    vecs = _kmeans_vecs(embeddings)
     if centroids is None:
         centroids = _kmeans_fit(vecs, k, updates)
     assigned = _kmeans_assign_to(vecs, centroids, k_rows=k).select(
@@ -763,17 +760,7 @@ def mmr_diverse_topk(embeddings: DataFrame, k: int = 10, lam: float = MMR_LAMBDA
     mmr_score), floats rounded to 6.
     """
     base = _with_norm(embeddings)
-    cent = (
-        base.select(F.posexplode("e").alias("dim", "v"))
-        .groupBy("dim")
-        .agg(F.avg("v").alias("cv"))
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "cv"))), lambda s: s["cv"]
-            ).alias("c")
-        )
-        .select("c", _norm_expr(F.col("c")).alias("cnrm"))
-    )
+    cent = _mean_vectors(base).select("c", _norm_expr(F.col("c")).alias("cnrm"))
     scored = (
         base.crossJoin(F.broadcast(cent))
         .select(
@@ -851,7 +838,7 @@ SEMDEDUP_MAX_K = 4096
 
 def semdedup_auto_k(n_vectors: int) -> int:
     """Derive the SemDeDup cluster count from the MEASURED corpus size —
-    the same self-tuning move as dedup.right_size_graph (dedup.py:476):
+    the same self-tuning move as dedup.right_size_graph:
     ceil(n / SEMDEDUP_ROWS_PER_CLUSTER), clamped to [KMEANS_K,
     SEMDEDUP_MAX_K]. The DuckDB oracle computes the identical formula
     in SQL, so the choice is engine-portable."""
@@ -887,9 +874,7 @@ def semdedup_survivors(
     KMEANS_K; otherwise SemDeDup runs its own fit at its own k.
     Returns the surviving (vec_id, cluster) rows.
     """
-    vecs = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    vecs = _kmeans_vecs(embeddings)
     if k is None:
         k = semdedup_auto_k(vecs.count())
     if centroids is None or k != KMEANS_K:
@@ -946,19 +931,7 @@ def _kmeans_fit_grouped(pts: DataFrame, k2: int, updates: int) -> DataFrame:
     )
     for _ in range(updates):
         asg = _assign_grouped(pts, cents)
-        cents = (
-            asg.select("cell", "sub", F.posexplode("e").alias("dim", "v"))
-            .groupBy("cell", "sub", "dim")
-            .agg(F.avg("v").alias("cv"))
-            .groupBy("cell", "sub")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "cv"))),
-                    lambda s: s["cv"],
-                ).alias("c")
-            )
-            .localCheckpoint(eager=True)
-        )
+        cents = _mean_vectors(asg, "cell", "sub").localCheckpoint(eager=True)
     return cents
 
 
@@ -976,15 +949,10 @@ def _assign_grouped(pts: DataFrame, cents: DataFrame) -> DataFrame:
     As a plain equi-join on cell it plans as a shuffle hash join that
     scales with executors; AQE still converts it to a broadcast join
     at runtime whenever the measured build side is actually small."""
-    sq = F.aggregate(
-        F.zip_with(F.col("e"), F.col("c"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
     w = Window.partitionBy("vec_id").orderBy("dist", "sub")
     return (
         pts.join(cents, ["cell"])
-        .select("vec_id", "e", "cell", "sub", F.round(sq, 6).alias("dist"))
+        .select("vec_id", "e", "cell", "sub", F.round(_sq_dist(), 6).alias("dist"))
         .withColumn("_rk", F.row_number().over(w))
         .where(F.col("_rk") == 1)
         .drop("_rk")
@@ -1015,9 +983,7 @@ def semdedup_hier_survivors(
     Returns the surviving (vec_id, cluster) rows with
     cluster = cell · k2 + sub.
     """
-    vecs = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    vecs = _kmeans_vecs(embeddings)
     k = semdedup_auto_k(vecs.count())
     import math
 

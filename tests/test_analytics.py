@@ -50,6 +50,10 @@ def test_every_query_has_oracle_or_documented_exemption():
         "minhash_ml_crosscheck",
         "minhash_ml_crosscheck_scaled",
     }
+    # the driver grades only the first 50 registrations, so only
+    # oracle-checkable queries may sit there
+    window = list(entrymod.queries())[:50]
+    assert len(window) == 50 and set(window) <= oracles, set(window) - oracles
 
 
 def test_cumulative_active_users_invariants(spark, sf_dir):

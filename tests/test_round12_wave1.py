@@ -39,8 +39,7 @@ def tiny_graph(spark):
 
 
 def _force_big_path(monkeypatch):
-    # graph.py binds the name at import; dedup.py reads its own global
-    monkeypatch.setattr(graph_mod, "GRAPH_BROADCAST_MAX_ROWS", 0)
+    # every loop reads the gate through dedup's own global at call time
     monkeypatch.setattr(dedup_mod, "GRAPH_BROADCAST_MAX_ROWS", 0)
 
 
@@ -118,3 +117,43 @@ def test_small_path_pagerank_plan_is_broadcast(spark, tiny_graph):
     plan = ranks._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") == 1
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+
+
+#: Spark jobs each loop launches on ``tiny_graph`` (build + collect) at
+#: the test session's local[4]. Pinned from the loops as they stood
+#: before they shared one set of primitives (checkpoint_counted,
+#: _sym_edges, _graph_bc, _pagerank), so a change that adds or drops a
+#: scheduler round-trip on either path fails here.
+_TINY_GRAPH_JOBS = {
+    "small": {
+        "near_dup_components": 19,
+        "near_dup_pagerank": 33,
+        "near_dup_weighted_pagerank": 33,
+        "kcore_docs": 14,
+    },
+    "big": {
+        "near_dup_components": 29,
+        "near_dup_pagerank": 48,
+        "near_dup_weighted_pagerank": 48,
+        "kcore_docs": 16,
+    },
+}
+
+
+@pytest.mark.parametrize("path", ["small", "big"])
+def test_graph_loop_job_counts(spark, tiny_graph, monkeypatch, launched_jobs, path):
+    docs, pairs = tiny_graph
+    if path == "big":
+        _force_big_path(monkeypatch)
+    loops = {
+        "near_dup_components": dedup_mod.near_dup_components,
+        "near_dup_pagerank": graph_mod.near_dup_pagerank,
+        "near_dup_weighted_pagerank": graph_mod.near_dup_weighted_pagerank,
+        "kcore_docs": graph_mod.kcore_docs,
+    }
+    counts = {}
+    for name, fn in loops.items():
+        with launched_jobs() as jobs:
+            fn(docs, pairs=pairs).collect()
+        counts[name] = len(jobs)
+    assert counts == _TINY_GRAPH_JOBS[path]
