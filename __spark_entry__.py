@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 import sys
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F_
@@ -24,10 +25,12 @@ from mapreduce_golang_spark.operators import (
     analytics,
     corpus,
     dedup,
+    graph,
     joins,
     multimodal,
     parity,
     similarity,
+    skew,
     text_analysis,
     windows,
     wordcount,
@@ -42,223 +45,66 @@ def _shipped(fn):
     SparkSession, so anything it didn't configure must be set lazily:
     ship the package to executors (addPyFile) and pin the session
     timezone to UTC (timestamp→string formatting must match the
-    UTC-naive DuckDB oracle regardless of the host JVM timezone)."""
+    UTC-naive DuckDB oracle regardless of the host JVM timezone). The
+    zone is written only when it differs, so building a query leaves a
+    session that is already on UTC untouched."""
 
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_package_shipped(spark)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        if spark.conf.get("spark.sql.session.timeZone") != "UTC":
+            spark.conf.set("spark.sql.session.timeZone", "UTC")
         return fn(spark, sf_dir)
 
     return wrapper
+
 
 _SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: W1 word count over documents.text at sf0.001."""
-    ensure_package_shipped(spark)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    docs = load_table(spark, _SMOKE_SF_DIR, "documents")
-    return wordcount.word_count(docs, text_col="text")
+    return _shipped(_REGISTRY["wc"])(spark, _SMOKE_SF_DIR)
 
 
 # --------------------------------------------------------------------------
-# queries() — one entry per implemented operator (SURVEY.md §2)
+# queries() — one registry row per implemented operator (SURVEY.md §2)
 # --------------------------------------------------------------------------
 
-
-def _wc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return wordcount.word_count(load_table(spark, sf_dir, "documents"), text_col="text")
-
-
-def _top_k_words(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return wordcount.top_k_words(load_table(spark, sf_dir, "documents"), k=20, text_col="text")
-
-
-def _indexer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return parity.inverted_index(load_table(spark, sf_dir, "documents"))
-
-
-def _indexer_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return parity.inverted_index(load_table(spark, sf_dir, "documents"), packed=True)
-
-
-def _file_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return parity.file_counts(load_table(spark, sf_dir, "documents"), file_col="source")
-
-
-def _crash_data(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return parity.crash_data(load_table(spark, sf_dir, "documents"))
-
-
-# --- star-schema joins -----------------------------------------------------
-
-
-def _q1(spark, sf_dir):
-    return joins.q1_pricing_summary(load_table(spark, sf_dir, "lineitem"))
-
-
-def _q3(spark, sf_dir):
-    return joins.q3_shipping_priority(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q5(spark, sf_dir):
-    return joins.q5_local_supplier_volume(
-        load_table(spark, sf_dir, "region"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _top_customers(spark, sf_dir):
-    return joins.top_customers_by_revenue(
-        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "orders")
-    )
-
-
-def _semi(spark, sf_dir):
-    return joins.orders_with_lineitems_semi(
-        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
-    )
-
-
-def _anti(spark, sf_dir):
-    return joins.customers_without_orders_anti(
-        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "orders")
-    )
-
-
-def _rank_in_nation(spark, sf_dir):
-    return joins.revenue_rank_in_nation(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "nation"),
-    )
-
-
-# --- event-time / window analytics ----------------------------------------
-
-
-def _hourly(spark, sf_dir):
-    return windows.hourly_event_counts(load_table(spark, sf_dir, "events"))
-
-
-def _sessionize(spark, sf_dir):
-    return windows.sessionize(load_table(spark, sf_dir, "events"))
-
-
-def _top_users(spark, sf_dir):
-    return windows.top_users_per_event_type(load_table(spark, sf_dir, "events"))
-
-
-def _rolling(spark, sf_dir):
-    return windows.rolling_user_value(load_table(spark, sf_dir, "events"))
-
-
-def _trailing(spark, sf_dir):
-    return windows.trailing_hour_value(load_table(spark, sf_dir, "events"))
-
-
-def _hmean_query(spark, sf_dir):
-    return analytics.event_value_hmean(load_table(spark, sf_dir, "events"))
-
-
-def _props(spark, sf_dir):
-    return windows.props_key_stats(load_table(spark, sf_dir, "events"))
-
-
-def _cube(spark, sf_dir):
-    return windows.event_type_share_cube(load_table(spark, sf_dir, "events"))
-
-
-def _range_join(spark, sf_dir):
-    return windows.events_near_errors_range_join(load_table(spark, sf_dir, "events"))
-
-
-def _rollup(spark, sf_dir):
-    return windows.multi_granularity_rollup(load_table(spark, sf_dir, "events"))
-
-
-# --- text analysis ---------------------------------------------------------
-
-
-def _lang_id(spark, sf_dir):
-    return text_analysis.lang_id(spark, load_table(spark, sf_dir, "documents"))
-
-
-def _text_quality(spark, sf_dir):
-    return text_analysis.text_quality(load_table(spark, sf_dir, "documents"))
-
-
-def _token_stats(spark, sf_dir):
-    return text_analysis.token_stats(load_table(spark, sf_dir, "documents"))
-
-
-def _fingerprints(spark, sf_dir):
-    return text_analysis.doc_fingerprints(load_table(spark, sf_dir, "documents"))
-
-
-def _repetition(spark, sf_dir):
-    return text_analysis.repetition_ratio(load_table(spark, sf_dir, "documents"))
-
-
-def _source_overlap(spark, sf_dir):
-    return text_analysis.cross_source_overlap(load_table(spark, sf_dir, "documents"))
-
-
-def _mixing_sample(spark, sf_dir):
-    return corpus.balanced_mixing_sample(load_table(spark, sf_dir, "documents"))
-
-
-def _vocab_growth(spark, sf_dir):
-    return text_analysis.vocab_growth(load_table(spark, sf_dir, "documents"))
-
-
-def _source_doc_stats(spark, sf_dir):
-    return text_analysis.source_doc_stats(load_table(spark, sf_dir, "documents"))
-
-
-def _triangles(spark, sf_dir):
-    from mapreduce_golang_spark.operators.graph import near_dup_triangles
-
-    return near_dup_triangles(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
-def _reachability(spark, sf_dir):
-    from mapreduce_golang_spark.operators.graph import near_dup_reachability
-
-    return near_dup_reachability(
-        spark, load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
-def _kcore(spark, sf_dir):
-    from mapreduce_golang_spark.operators.graph import kcore_docs
-
-    return kcore_docs(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
-def _twap(spark, sf_dir):
-    return windows.time_weighted_user_value(load_table(spark, sf_dir, "events"))
-
-
-def _mad_anomalies(spark, sf_dir):
-    return windows.value_mad_anomalies(load_table(spark, sf_dir, "events"))
-
-
-def _session_incidents(spark, sf_dir):
-    return windows.session_incident_overlap(load_table(spark, sf_dir, "events"))
+#: Registry-row inputs that are not table names: the session and the
+#: shared near-dup pair graph (``_pair_graph``).
+_SPARK, _PAIRS = object(), object()
+
+
+class _Op(NamedTuple):
+    """One registry row: ``fn`` called on ``args`` and ``kwargs``.
+
+    A positional string names a fixture table, read with ``load_table``;
+    ``_SPARK`` and ``_PAIRS`` stand for the session and the pair graph;
+    every other value is passed as it is. ``load_table`` and
+    ``_pair_graph`` are looked up in the module globals on each call, so
+    rebinding them (perfbench's layer hooks do) reaches every row."""
+
+    fn: Callable[..., DataFrame]
+    args: tuple
+    kwargs: dict
+
+    def __call__(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        def resolve(x, positional):
+            if x is _SPARK:
+                return spark
+            if x is _PAIRS:
+                return _pair_graph(spark, sf_dir)
+            if positional and isinstance(x, str):
+                return load_table(spark, sf_dir, x)
+            return x
+
+        args = [resolve(a, True) for a in self.args]
+        kwargs = {k: resolve(v, False) for k, v in self.kwargs.items()}
+        return self.fn(*args, **kwargs)
+
+
+def _op(fn: Callable[..., DataFrame], *args, **kwargs) -> _Op:
+    return _Op(fn, args, kwargs)
 
 
 def _snapshot_diff(spark, sf_dir):
@@ -284,26 +130,6 @@ def _snapshot_diff(spark, sf_dir):
     )
 
 
-def _quality_drift(spark, sf_dir):
-    return text_analysis.source_quality_drift(load_table(spark, sf_dir, "documents"))
-
-
-def _weighted_pagerank(spark, sf_dir):
-    from mapreduce_golang_spark.operators.graph import near_dup_weighted_pagerank
-
-    return near_dup_weighted_pagerank(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
-def _winsorized(spark, sf_dir):
-    return analytics.winsorized_value_stats(load_table(spark, sf_dir, "events"))
-
-
-def _weekday_chi2(spark, sf_dir):
-    return analytics.event_weekday_chi2(load_table(spark, sf_dir, "events"))
-
-
 def _incr_agg(spark, sf_dir):
     """Materialized-view refresh: the stored rollup is everything
     shipped before 1996, the delta batch everything after; the merged
@@ -323,26 +149,6 @@ def _incr_agg(spark, sf_dir):
     )
 
 
-def _bigrams(spark, sf_dir):
-    return text_analysis.bigram_counts(load_table(spark, sf_dir, "documents"))
-
-
-def _det_sample(spark, sf_dir):
-    return corpus.deterministic_doc_sample(load_table(spark, sf_dir, "documents"))
-
-
-def _cumulative_users(spark, sf_dir):
-    return analytics.cumulative_active_users(load_table(spark, sf_dir, "events"))
-
-
-def _event_gaps(spark, sf_dir):
-    return windows.event_gap_stats(load_table(spark, sf_dir, "events"))
-
-
-def _props_variant(spark, sf_dir):
-    return windows.props_variant_stats(load_table(spark, sf_dir, "events"))
-
-
 def _stream_segments(spark, sf_dir):
     import uuid
 
@@ -357,13 +163,6 @@ def _stream_hopping(spark, sf_dir):
     return events_stream.streaming_hopping_counts(
         spark, sf_dir, f"shop_{uuid.uuid4().hex[:8]}"
     )
-
-
-# --- dedup -----------------------------------------------------------------
-
-
-def _exact_dedup(spark, sf_dir):
-    return dedup.exact_dedup(load_table(spark, sf_dir, "documents"))
 
 
 #: materialize-once near-dup pair graph, keyed by (Spark application,
@@ -462,153 +261,9 @@ def _simhash_sigs(spark, sf_dir):
     )
 
 
-def _minhash_lsh(spark, sf_dir):
-    return dedup.minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
-
-
-def _simhash(spark, sf_dir):
-    return _simhash_sigs(spark, sf_dir)
-
-
-def _simhash64(spark, sf_dir):
-    return dedup.simhash64(load_table(spark, sf_dir, "documents"))
-
-
 def _simhash_pairs(spark, sf_dir):
     return dedup.simhash_pairs(
         load_table(spark, sf_dir, "documents"), sigs=_simhash_sigs(spark, sf_dir)
-    )
-
-
-def _embedding_pairs(spark, sf_dir):
-    return dedup.embedding_cosine_pairs(load_table(spark, sf_dir, "embeddings"))
-
-
-# --- similarity search -----------------------------------------------------
-
-
-def _ann_brute(spark, sf_dir):
-    return similarity.cosine_topk_bruteforce(load_table(spark, sf_dir, "embeddings"))
-
-
-def _ann_ivf(spark, sf_dir):
-    return similarity.ann_ivf_topk(load_table(spark, sf_dir, "embeddings"))
-
-
-def _ann_lsh(spark, sf_dir):
-    return similarity.ann_lsh_topk(load_table(spark, sf_dir, "embeddings"))
-
-
-# --- more TPC-H shapes -----------------------------------------------------
-
-
-def _q6(spark, sf_dir):
-    return joins.q6_forecast_revenue(load_table(spark, sf_dir, "lineitem"))
-
-
-def _q10(spark, sf_dir):
-    return joins.q10_returned_items(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q12(spark, sf_dir):
-    return joins.q12_late_shipments(
-        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
-    )
-
-
-def _q14(spark, sf_dir):
-    return joins.q14_promo_revenue_share(
-        load_table(spark, sf_dir, "part"), load_table(spark, sf_dir, "lineitem")
-    )
-
-
-def _chunks(spark, sf_dir):
-    return corpus.chunk_documents(load_table(spark, sf_dir, "documents"))
-
-
-def _packing(spark, sf_dir):
-    return corpus.pack_sequences(load_table(spark, sf_dir, "documents"))
-
-
-def _redact(spark, sf_dir):
-    return corpus.redact_numbers(load_table(spark, sf_dir, "events"))
-
-
-def _final_selection(spark, sf_dir):
-    return corpus.corpus_final_selection(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
-def _q18(spark, sf_dir):
-    return joins.q18_large_orders(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _above_avg(spark, sf_dir):
-    return joins.orders_above_customer_avg(load_table(spark, sf_dir, "orders"))
-
-
-def _q4(spark, sf_dir):
-    return joins.q4_order_priority(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q7(spark, sf_dir):
-    return joins.q7_volume_shipping(
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "lineitem"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "nation"),
-    )
-
-
-def _q8(spark, sf_dir):
-    return joins.q8_market_share(
-        load_table(spark, sf_dir, "region"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q13(spark, sf_dir):
-    return joins.q13_customer_distribution(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
-    )
-
-
-def _q17(spark, sf_dir):
-    return joins.q17_small_quantity_revenue(
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q19(spark, sf_dir):
-    return joins.q19_discounted_revenue(
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q22(spark, sf_dir):
-    return joins.q22_sales_opportunity(
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -639,185 +294,10 @@ def _scd2_customers(spark, sf_dir):
     )
 
 
-def _salted_counts(spark, sf_dir):
-    """Salted two-phase aggregation — result must equal the plain
-    GROUP BY (the oracle computes the plain form), demonstrating the
-    hot-key mitigation is a pure exchange-layout change."""
-    from mapreduce_golang_spark.operators.skew import salted_count
-
-    return salted_count(load_table(spark, sf_dir, "events"), ["event_type"], out="n_events")
-
-
-def _stream_dedup(spark, sf_dir):
-    return events_stream.streaming_dedup_events(spark, sf_dir)
-
-
-def _tfidf(spark, sf_dir):
-    return text_analysis.tfidf_top_terms(load_table(spark, sf_dir, "documents"))
-
-
-def _contamination(spark, sf_dir):
-    return text_analysis.contamination_check(load_table(spark, sf_dir, "documents"))
-
-
-def _stratified_sample(spark, sf_dir):
-    return corpus.stratified_sample(load_table(spark, sf_dir, "documents"))
-
-
-def _semantic_dedup(spark, sf_dir):
-    from mapreduce_golang_spark.operators.similarity import semantic_dedup_survivors
-
-    return semantic_dedup_survivors(load_table(spark, sf_dir, "embeddings"))
-
-
-def _incremental_dedup(spark, sf_dir):
-    return dedup.incremental_dedup(load_table(spark, sf_dir, "documents"))
-
-
-def _corpus_funnel(spark, sf_dir):
-    return corpus.corpus_funnel_report(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
-def _q2(spark, sf_dir):
-    return joins.q2_min_cost_supplier(
-        load_table(spark, sf_dir, "region"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q9(spark, sf_dir):
-    return joins.q9_product_type_profit(
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q11(spark, sf_dir):
-    return joins.q11_important_stock(
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q15(spark, sf_dir):
-    return joins.q15_top_supplier(
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q16(spark, sf_dir):
-    return joins.q16_supplier_part_counts(
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q20(spark, sf_dir):
-    return joins.q20_dominant_suppliers(
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "part"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q21(spark, sf_dir):
-    return joins.q21_suppliers_kept_waiting(
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "lineitem"),
-    )
-
-
-def _survivors(spark, sf_dir):
-    return dedup.near_dup_survivors(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
-def _components(spark, sf_dir):
-    return dedup.near_dup_components(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
-def _pagerank(spark, sf_dir):
-    from mapreduce_golang_spark.operators.graph import near_dup_pagerank
-
-    return near_dup_pagerank(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
-def _near_dup_pipeline(spark, sf_dir):
-    return dedup.near_dup_pipeline(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
 def _bucketed_join(spark, sf_dir):
     from mapreduce_golang_spark.sources.formats import bucketed_join_revenue
 
     return bucketed_join_revenue(spark, sf_dir)
-
-
-# --- analytics pack --------------------------------------------------------
-
-
-def _percentiles(spark, sf_dir):
-    return analytics.value_percentiles(load_table(spark, sf_dir, "events"))
-
-
-def _user_stats(spark, sf_dir):
-    return analytics.event_type_user_stats(load_table(spark, sf_dir, "events"))
-
-
-def _approx_users(spark, sf_dir):
-    return analytics.approx_distinct_users(load_table(spark, sf_dir, "events"))
-
-
-def _except_users(spark, sf_dir):
-    return analytics.users_purchase_not_error(load_table(spark, sf_dir, "events"))
-
-
-def _intersect_users(spark, sf_dir):
-    return analytics.users_signup_and_purchase(load_table(spark, sf_dir, "events"))
-
-
-def _pivot(spark, sf_dir):
-    return analytics.event_counts_pivot(load_table(spark, sf_dir, "events"))
-
-
-def _asof(spark, sf_dir):
-    return analytics.last_click_before_purchase(load_table(spark, sf_dir, "events"))
-
-
-def _wmedian(spark, sf_dir):
-    return analytics.weighted_median_value(load_table(spark, sf_dir, "events"))
-
-
-def _histogram(spark, sf_dir):
-    return analytics.event_value_histogram(load_table(spark, sf_dir, "events"))
-
-
-def _price_stats(spark, sf_dir):
-    return analytics.lineitem_price_stats(load_table(spark, sf_dir, "lineitem"))
-
-
-def _dq_report(spark, sf_dir):
-    return analytics.data_quality_report(load_table(spark, sf_dir, "lineitem"))
 
 
 def _mr_wc(spark, sf_dir):
@@ -966,9 +446,6 @@ def _date_dimensions(spark, sf_dir):
     )
 
 
-# --- streaming + multimodal ------------------------------------------------
-
-
 def _stream_hourly(spark, sf_dir):
     import uuid
 
@@ -1009,130 +486,12 @@ def _media_features(spark, sf_dir):
     )
 
 
-def _hopping_windows(spark, sf_dir):
-    return windows.hopping_window_counts(load_table(spark, sf_dir, "events"))
-
-
-def _gap_fill(spark, sf_dir):
-    return windows.gap_fill_locf(load_table(spark, sf_dir, "events"))
-
-
-def _moment_stats(spark, sf_dir):
-    return analytics.value_moment_stats(load_table(spark, sf_dir, "events"))
-
-
-def _retention_cohorts(spark, sf_dir):
-    return analytics.user_retention_cohorts(load_table(spark, sf_dir, "events"))
-
-
-def _sentence_stats(spark, sf_dir):
-    return text_analysis.sentence_stats(load_table(spark, sf_dir, "documents"))
-
-
-def _lang_confusion(spark, sf_dir):
-    return text_analysis.lang_confusion_matrix(load_table(spark, sf_dir, "documents"))
-
-
-def _zipf_slope(spark, sf_dir):
-    return text_analysis.zipf_slope(load_table(spark, sf_dir, "documents"))
-
-
-def _pii_scan(spark, sf_dir):
-    return text_analysis.pii_scan(load_table(spark, sf_dir, "documents"))
-
-
-def _ntile_deciles(spark, sf_dir):
-    return analytics.value_ntile_deciles(load_table(spark, sf_dir, "events"))
-
-
-def _orphan_events(spark, sf_dir):
-    return analytics.orphan_events(
-        load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "customer")
-    )
-
-
-def _conversion_funnel(spark, sf_dir):
-    return analytics.user_conversion_funnel(load_table(spark, sf_dir, "events"))
-
-
-def _doc_length_gini(spark, sf_dir):
-    return text_analysis.doc_length_gini(load_table(spark, sf_dir, "documents"))
-
-
-def _weighted_sample(spark, sf_dir):
-    return corpus.weighted_doc_sample(load_table(spark, sf_dir, "documents"))
-
-
-def _edit_pairs(spark, sf_dir):
-    return dedup.edit_distance_pairs(load_table(spark, sf_dir, "documents"))
-
-
-def _clustering_coeff(spark, sf_dir):
-    from mapreduce_golang_spark.operators.graph import near_dup_clustering_coeff
-
-    return near_dup_clustering_coeff(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
 def _kmeans(spark, sf_dir):
     from mapreduce_golang_spark.operators.similarity import kmeans_assign
 
     return kmeans_assign(
         load_table(spark, sf_dir, "embeddings"), centroids=_kmeans_cents(spark, sf_dir)
     )
-
-
-def _block_dedup(spark, sf_dir):
-    return text_analysis.duplicate_block_fraction(load_table(spark, sf_dir, "documents"))
-
-
-def _gopher_flags(spark, sf_dir):
-    return text_analysis.gopher_quality_flags(load_table(spark, sf_dir, "documents"))
-
-
-def _token_pmi(spark, sf_dir):
-    return text_analysis.token_pmi_pairs(load_table(spark, sf_dir, "documents"))
-
-
-def _bm25(spark, sf_dir):
-    return text_analysis.bm25_top_docs(load_table(spark, sf_dir, "documents"))
-
-
-def _containment_pairs(spark, sf_dir):
-    return dedup.overlap_containment_pairs(load_table(spark, sf_dir, "documents"))
-
-
-def _degree_hist(spark, sf_dir):
-    from mapreduce_golang_spark.operators.graph import near_dup_degree_hist
-
-    return near_dup_degree_hist(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
-def _cluster_size_hist(spark, sf_dir):
-    from mapreduce_golang_spark.operators.graph import dup_cluster_size_hist
-
-    return dup_cluster_size_hist(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
-def _markov(spark, sf_dir):
-    return windows.markov_transitions(load_table(spark, sf_dir, "events"))
-
-
-def _ewma(spark, sf_dir):
-    return windows.ewma_user_value(load_table(spark, sf_dir, "events"))
-
-
-def _zscore_anomalies(spark, sf_dir):
-    return windows.value_zscore_anomalies(load_table(spark, sf_dir, "events"))
-
-
-def _rfm(spark, sf_dir):
-    return analytics.rfm_user_segments(load_table(spark, sf_dir, "events"))
 
 
 #: SCD2 reprice timestamp for the point-in-time demo — INSIDE the
@@ -1177,43 +536,6 @@ def _scd2_pit(spark, sf_dir):
     )
 
 
-def _centroid_outliers(spark, sf_dir):
-    from mapreduce_golang_spark.operators.similarity import centroid_outliers
-
-    return centroid_outliers(load_table(spark, sf_dir, "embeddings"))
-
-
-def _ann_recall(spark, sf_dir):
-    from mapreduce_golang_spark.operators.similarity import ann_recall_report
-
-    return ann_recall_report(load_table(spark, sf_dir, "embeddings"))
-
-
-def _minhash_calibration(spark, sf_dir):
-    return dedup.minhash_estimate_error(load_table(spark, sf_dir, "documents"))
-
-
-def _path_trigrams(spark, sf_dir):
-    return windows.user_path_trigrams(load_table(spark, sf_dir, "events"))
-
-
-def _label_znorm(spark, sf_dir):
-    from mapreduce_golang_spark.operators.similarity import label_znorm_check
-
-    return label_znorm_check(load_table(spark, sf_dir, "embeddings"))
-
-
-def _trigram_logprob(spark, sf_dir):
-    return _nll_table(spark, sf_dir)
-
-
-def _lang_entropy(spark, sf_dir):
-    return text_analysis.source_lang_entropy(load_table(spark, sf_dir, "documents"))
-
-
-# --- round-6 wave: data-mixing / selection (operators/mixing.py) ---
-
-
 def _dsir_weights(spark, sf_dir):
     from mapreduce_golang_spark.operators import mixing
 
@@ -1246,60 +568,16 @@ def _eval_decontam(spark, sf_dir):
     )
 
 
-def _minhash_ml_crosscheck(spark, sf_dir):
-    from mapreduce_golang_spark.operators import dedup as _dedup
-
-    return _dedup.minhash_ml_crosscheck(load_table(spark, sf_dir, "documents"))
-
-
-def _minhash_ml_crosscheck_scaled(spark, sf_dir):
-    # num_features=None → corpus-scaled HashingTF sizing (next pow2 ≥
-    # 4× approx distinct shingles) — the remedy the round-12 100×
-    # probe's MLlib-bend caveat recommends, registered so the remedy
-    # is measured on the same ladder (SCALING_XL.md), not asserted.
-    from mapreduce_golang_spark.operators import dedup as _dedup
-
-    return _dedup.minhash_ml_crosscheck(
-        load_table(spark, sf_dir, "documents"), num_features=None
-    )
-
-
-def _pca_topvar(spark, sf_dir):
-    from mapreduce_golang_spark.operators import similarity
-
-    return similarity.embedding_pca_topvar(load_table(spark, sf_dir, "embeddings"))
-
-
 def _quality_sample(spark, sf_dir):
     from mapreduce_golang_spark.operators import mixing
 
     return mixing.quality_weighted_sample(load_table(spark, sf_dir, "documents"))
 
 
-def _packing_efficiency(spark, sf_dir):
-    return corpus.packing_efficiency_report(load_table(spark, sf_dir, "documents"))
-
-
-def _common_sentences(spark, sf_dir):
-    return text_analysis.common_sentence_filter(load_table(spark, sf_dir, "documents"))
-
-
-def _streaming_wc(spark, sf_dir):
-    return events_stream.streaming_word_counts(spark, sf_dir)
-
-
-def _bpe_candidates(spark, sf_dir):
-    return text_analysis.bpe_merge_candidates(load_table(spark, sf_dir, "documents"))
-
-
 def _top_p_selection(spark, sf_dir):
     from mapreduce_golang_spark.operators import mixing
 
     return mixing.corpus_top_p_selection(load_table(spark, sf_dir, "documents"))
-
-
-def _quant_report(spark, sf_dir):
-    return similarity.embedding_quantization_report(load_table(spark, sf_dir, "embeddings"))
 
 
 def _leakage_splits(spark, sf_dir):
@@ -1332,43 +610,15 @@ def _ccnet_sample(spark, sf_dir):
     )
 
 
-def _type_cooccurrence(spark, sf_dir):
-    return analytics.event_type_cooccurrence(load_table(spark, sf_dir, "events"))
-
-
-def _key_skew(spark, sf_dir):
-    from mapreduce_golang_spark.operators import skew
-
-    return skew.join_key_skew_report(load_table(spark, sf_dir, "events"))
-
-
 def _silhouette(spark, sf_dir):
     return similarity.kmeans_silhouette(
         load_table(spark, sf_dir, "embeddings"), centroids=_kmeans_cents(spark, sf_dir)
     )
 
 
-def _conversion_latency(spark, sf_dir):
-    return analytics.conversion_latency_stats(load_table(spark, sf_dir, "events"))
-
-
 def _decontaminated(spark, sf_dir):
     return text_analysis.decontaminated_corpus(
         load_table(spark, sf_dir, "documents"), overlap=_decontam_overlap(spark, sf_dir)
-    )
-
-
-def _length_cume(spark, sf_dir):
-    return text_analysis.doc_length_cume_dist(load_table(spark, sf_dir, "documents"))
-
-
-def _first_last(spark, sf_dir):
-    return windows.user_first_last_events(load_table(spark, sf_dir, "events"))
-
-
-def _best_rep(spark, sf_dir):
-    return dedup.component_best_representative(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
     )
 
 
@@ -1384,116 +634,10 @@ def _cluster_sample(spark, sf_dir):
     )
 
 
-def _streaming_distinct(spark, sf_dir):
-    return events_stream.streaming_distinct_users(spark, sf_dir)
-
-
-def _hot_shingles(spark, sf_dir):
-    return dedup.hot_shingles_report(load_table(spark, sf_dir, "documents"))
-
-
-def _equidepth(spark, sf_dir):
-    return analytics.value_equidepth_bins(load_table(spark, sf_dir, "events"))
-
-
-def _mmr(spark, sf_dir):
-    return similarity.mmr_diverse_topk(load_table(spark, sf_dir, "embeddings"))
-
-
-def _rake(spark, sf_dir):
-    return text_analysis.rake_keywords(load_table(spark, sf_dir, "documents"))
-
-
-def _script_profile(spark, sf_dir):
-    return text_analysis.char_script_profile(load_table(spark, sf_dir, "documents"))
-
-
-def _markov_accuracy(spark, sf_dir):
-    return windows.markov_prediction_accuracy(load_table(spark, sf_dir, "events"))
-
-
-def _monthly_growth(spark, sf_dir):
-    return analytics.orders_monthly_growth(load_table(spark, sf_dir, "orders"))
-
-
-def _value_pareto(spark, sf_dir):
-    return analytics.user_value_pareto(load_table(spark, sf_dir, "events"))
-
-
-def _brand_hhi(spark, sf_dir):
-    return analytics.part_brand_hhi(load_table(spark, sf_dir, "part"))
-
-
-def _session_hist(spark, sf_dir):
-    return windows.session_duration_histogram(load_table(spark, sf_dir, "events"))
-
-
-def _bpe_merges(spark, sf_dir):
-    return text_analysis.bpe_learn_merges(load_table(spark, sf_dir, "documents"))
-
-
 def _semdedup(spark, sf_dir):
     return similarity.semdedup_survivors(
         load_table(spark, sf_dir, "embeddings"), centroids=_kmeans_cents(spark, sf_dir)
     )
-
-
-def _dataset_card(spark, sf_dir):
-    from mapreduce_golang_spark.operators import corpus
-
-    return corpus.dataset_card_report(load_table(spark, sf_dir, "documents"))
-
-
-def _ohlc(spark, sf_dir):
-    return windows.hourly_value_ohlc(load_table(spark, sf_dir, "events"))
-
-
-def _metric_unpivot(spark, sf_dir):
-    return analytics.monthly_metric_unpivot(load_table(spark, sf_dir, "orders"))
-
-
-def _name_matches(spark, sf_dir):
-    return dedup.part_name_near_matches(load_table(spark, sf_dir, "part"))
-
-
-def _ngram_diversity(spark, sf_dir):
-    return text_analysis.ngram_diversity_by_source(load_table(spark, sf_dir, "documents"))
-
-
-def _bpe_encode(spark, sf_dir):
-    return text_analysis.bpe_encode_stats(load_table(spark, sf_dir, "documents"))
-
-
-def _qual_calib(spark, sf_dir):
-    return text_analysis.quality_dup_calibration(load_table(spark, sf_dir, "documents"))
-
-
-def _norm_gain(spark, sf_dir):
-    return dedup.normalized_dedup_gain(load_table(spark, sf_dir, "documents"))
-
-
-def _jl_qa(spark, sf_dir):
-    return similarity.jl_projection_qa(load_table(spark, sf_dir, "embeddings"))
-
-
-def _attribution(spark, sf_dir):
-    return analytics.multi_touch_attribution(load_table(spark, sf_dir, "events"))
-
-
-def _roll_median(spark, sf_dir):
-    return windows.rolling_median_value(load_table(spark, sf_dir, "events"))
-
-
-def _basket_rules(spark, sf_dir):
-    return analytics.order_basket_rules(load_table(spark, sf_dir, "lineitem"))
-
-
-def _k_anon(spark, sf_dir):
-    return analytics.k_anonymity_audit(load_table(spark, sf_dir, "customer"))
-
-
-def _benford(spark, sf_dir):
-    return analytics.benford_price_audit(load_table(spark, sf_dir, "orders"))
 
 
 def _stream_ohlc(spark, sf_dir):
@@ -1502,92 +646,6 @@ def _stream_ohlc(spark, sf_dir):
     return events_stream.streaming_hourly_ohlc(
         spark, sf_dir, f"sohlc_{uuid.uuid4().hex[:8]}"
     )
-
-
-def _rrf(spark, sf_dir):
-    return text_analysis.rrf_hybrid_ranking(load_table(spark, sf_dir, "documents"))
-
-
-def _psi(spark, sf_dir):
-    return analytics.value_psi_drift(load_table(spark, sf_dir, "events"))
-
-
-def _debounce(spark, sf_dir):
-    return windows.debounced_event_stats(load_table(spark, sf_dir, "events"))
-
-
-def _rate_spikes(spark, sf_dir):
-    return windows.event_rate_spikes(load_table(spark, sf_dir, "events"))
-
-
-def _share_shift(spark, sf_dir):
-    return joins.nation_share_shift(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "nation"),
-    )
-
-
-def _ship_latency(spark, sf_dir):
-    return joins.order_ship_latency(
-        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
-    )
-
-
-def _bootstrap_ci(spark, sf_dir):
-    return analytics.bootstrap_mean_ci(load_table(spark, sf_dir, "events"))
-
-
-def _skyline(spark, sf_dir):
-    return analytics.part_price_size_skyline(load_table(spark, sf_dir, "part"))
-
-
-def _curriculum(spark, sf_dir):
-    return corpus.curriculum_phases(load_table(spark, sf_dir, "documents"))
-
-
-def _stopword_sim(spark, sf_dir):
-    return text_analysis.source_stopword_similarity(
-        load_table(spark, sf_dir, "documents")
-    )
-
-
-def _km_survival(spark, sf_dir):
-    return windows.km_gap_survival(load_table(spark, sf_dir, "events"))
-
-
-def _ab_ztest(spark, sf_dir):
-    return analytics.ab_conversion_ztest(
-        load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "customer")
-    )
-
-
-def _bpe_roundtrip(spark, sf_dir):
-    return text_analysis.bpe_roundtrip_audit(load_table(spark, sf_dir, "documents"))
-
-
-def _hour_regression(spark, sf_dir):
-    return analytics.value_hour_regression(load_table(spark, sf_dir, "events"))
-
-
-def _qq_drift(spark, sf_dir):
-    return analytics.value_qq_drift(load_table(spark, sf_dir, "events"))
-
-
-def _kwic(spark, sf_dir):
-    return text_analysis.kwic_snippets(load_table(spark, sf_dir, "documents"))
-
-
-def _template_report(spark, sf_dir):
-    return text_analysis.template_opening_report(load_table(spark, sf_dir, "documents"))
-
-
-def _abc(spark, sf_dir):
-    return analytics.part_abc_classification(load_table(spark, sf_dir, "lineitem"))
-
-
-def _type_corr(spark, sf_dir):
-    return analytics.type_hourly_correlation(load_table(spark, sf_dir, "events"))
 
 
 def _try_functions(spark, sf_dir):
@@ -1678,313 +736,6 @@ def _metric_transpose(spark, sf_dir):
     return wide.transpose()
 
 
-def _hourly_acf(spark, sf_dir):
-    return windows.hourly_acf(load_table(spark, sf_dir, "events"))
-
-
-def _crosscorr_leadlag(spark, sf_dir):
-    return windows.type_crosscorr_leadlag(load_table(spark, sf_dir, "events"))
-
-
-def _day_streaks(spark, sf_dir):
-    return windows.user_active_day_streaks(load_table(spark, sf_dir, "events"))
-
-
-def _max_concurrency(spark, sf_dir):
-    return windows.max_concurrent_sessions(load_table(spark, sf_dir, "events"))
-
-
-def _bigram_xent(spark, sf_dir):
-    from mapreduce_golang_spark.operators import text_analysis as T
-
-    return T.source_bigram_cross_entropy(load_table(spark, sf_dir, "documents"))
-
-
-def _l_diversity(spark, sf_dir):
-    from mapreduce_golang_spark.operators import analytics
-
-    return analytics.l_diversity_audit(
-        load_table(spark, sf_dir, "customer"), load_table(spark, sf_dir, "orders")
-    )
-
-
-def _mwu(spark, sf_dir):
-    from mapreduce_golang_spark.operators import analytics
-
-    return analytics.mann_whitney_u(load_table(spark, sf_dir, "events"))
-
-
-def _journeys(spark, sf_dir):
-    from mapreduce_golang_spark.operators import windows as W
-
-    return W.user_journey_signatures(load_table(spark, sf_dir, "events"))
-
-
-# The driver grades the FIRST 50 queries() entries only. The window
-# holds only oracle-checkable, driver-green queries (a rows-only query
-# there could never grade green); every other query registers below
-# slot 50 and is covered by the full gate (scripts/correctness_gate.py).
-# How the window rotated from round to round is in the comment above
-# _RAW_QUERIES and in git history.
-_DRIVER_WINDOW: list[str] = [
-    "state_schema_evolution_counts", "foreach_batch_fanout",
-    "ps_orders_status_profile", "sql_scripting_coverage_threshold",
-    "sql_udf_price_bands", "collated_type_counts", "state_store_audit",
-    "deterministic_doc_sample", "posexplode_tokens", "kwic_snippets",
-    "stratified_sample", "file_counts", "string_functions",
-    "near_dup_survivors", "weighted_doc_sample", "q6_forecast_revenue",
-    "redact_numbers", "array_functions", "event_value_histogram",
-    "crash_data", "near_dup_triangles", "k_anonymity_audit",
-    "sentence_stats", "source_doc_stats", "salted_event_counts",
-    "value_moment_stats", "doc_length_gini", "exact_dedup",
-    "pack_sequences", "decontaminated_corpus", "wc",
-    "join_key_skew_report", "hourly_event_counts",
-    "users_signup_and_purchase", "part_price_size_skyline",
-    "top_k_words", "part_brand_hhi", "cumulative_active_users",
-    "doc_length_cume_dist", "pii_scan", "customer_snapshot_diff",
-    "near_dup_degree_hist", "part_name_near_matches", "media_features",
-    "benford_price_audit", "event_type_user_stats",
-    "lineitem_price_stats", "orders_above_customer_avg",
-    "trailing_hour_value", "scd2_customers",
-]
-
-
-def _embedding_stats_arrow(spark, sf_dir):
-    return similarity.embedding_stats_arrow(load_table(spark, sf_dir, "embeddings"))
-
-
-def _label_centroids_arrow(spark, sf_dir):
-    return similarity.label_centroids_arrow(load_table(spark, sf_dir, "embeddings"))
-
-
-def _source_shingle_overlap(spark, sf_dir):
-    return dedup.source_shingle_overlap(load_table(spark, sf_dir, "documents"))
-
-
-def _trigram_novelty(spark, sf_dir):
-    return text_analysis.trigram_novelty_curve(load_table(spark, sf_dir, "documents"))
-
-
-# --- wave 23: nonparametric stats / seasonal time-series / span-dup ---
-
-def _spearman(spark, sf_dir):
-    return analytics.spearman_time_value(load_table(spark, sf_dir, "events"))
-
-
-def _kendall(spark, sf_dir):
-    return analytics.kendall_tau_daily(load_table(spark, sf_dir, "events"))
-
-
-def _theil_sen(spark, sf_dir):
-    return analytics.theil_sen_daily_trend(load_table(spark, sf_dir, "events"))
-
-
-def _kruskal(spark, sf_dir):
-    return analytics.kruskal_wallis_value(load_table(spark, sf_dir, "events"))
-
-
-def _cusum(spark, sf_dir):
-    return windows.cusum_hourly_changepoint(load_table(spark, sf_dir, "events"))
-
-
-def _seasonality_profile(spark, sf_dir):
-    return windows.hourly_seasonality_profile(load_table(spark, sf_dir, "events"))
-
-
-def _seasonal_anomalies(spark, sf_dir):
-    return windows.seasonal_adjusted_anomalies(load_table(spark, sf_dir, "events"))
-
-
-def _seasonal_backtest(spark, sf_dir):
-    return windows.seasonal_naive_backtest(load_table(spark, sf_dir, "events"))
-
-
-def _dup_shingle_fraction(spark, sf_dir):
-    return text_analysis.duplicate_shingle_fraction(load_table(spark, sf_dir, "documents"))
-
-
-def _truncation_loss(spark, sf_dir):
-    return text_analysis.truncation_loss_report(load_table(spark, sf_dir, "documents"))
-
-
-def _token_fertility(spark, sf_dir):
-    return text_analysis.token_fertility_by_source(load_table(spark, sf_dir, "documents"))
-
-
-# --- wave 24: data-quality profiling / embedding geometry / Heaps fit ---
-
-def _column_profile(spark, sf_dir):
-    return analytics.lineitem_column_profile(load_table(spark, sf_dir, "lineitem"))
-
-
-def _constraint_audit(spark, sf_dir):
-    return analytics.orders_constraint_audit(
-        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "customer")
-    )
-
-
-def _isotropy(spark, sf_dir):
-    return similarity.embedding_isotropy_report(load_table(spark, sf_dir, "embeddings"))
-
-
-def _norm_deciles(spark, sf_dir):
-    return similarity.embedding_norm_deciles(load_table(spark, sf_dir, "embeddings"))
-
-
-def _heaps_fit(spark, sf_dir):
-    return text_analysis.heaps_law_fit(load_table(spark, sf_dir, "documents"))
-
-
-# --- wave 25: prefix-filter join / arrival-process stats / decile drift ---
-
-def _prefix_filter_pairs(spark, sf_dir):
-    return dedup.prefix_filter_jaccard_pairs(load_table(spark, sf_dir, "documents"))
-
-
-def _interarrival(spark, sf_dir):
-    return windows.interarrival_stats(load_table(spark, sf_dir, "events"))
-
-
-def _fano(spark, sf_dir):
-    return windows.hourly_fano_burstiness(load_table(spark, sf_dir, "events"))
-
-
-def _decile_drift(spark, sf_dir):
-    return text_analysis.decile_shingle_drift(load_table(spark, sf_dir, "documents"))
-
-
-# --- wave 26: association & agreement pack ---
-
-def _cramers_v(spark, sf_dir):
-    return analytics.cramers_v_order_attrs(load_table(spark, sf_dir, "orders"))
-
-
-def _mi_source_lang(spark, sf_dir):
-    return text_analysis.mutual_information_source_lang(
-        load_table(spark, sf_dir, "documents")
-    )
-
-
-def _cohens_kappa(spark, sf_dir):
-    return text_analysis.cohens_kappa_langid(load_table(spark, sf_dir, "documents"))
-
-
-def _theil_u(spark, sf_dir):
-    return windows.theil_u_event_transitions(load_table(spark, sf_dir, "events"))
-
-
-def _sign_bucket_purity(spark, sf_dir):
-    return similarity.embedding_sign_bucket_purity(
-        load_table(spark, sf_dir, "embeddings")
-    )
-
-
-# --- wave 27: binned two-sample distribution distances ---
-
-def _dist_distances(spark, sf_dir):
-    return analytics.value_distribution_distances(load_table(spark, sf_dir, "events"))
-
-
-# --- wave 28: engine introspection / shuffle advisory pack ---
-
-def _skew_advisory(spark, sf_dir):
-    return analytics.join_key_skew_advisory(load_table(spark, sf_dir, "lineitem"))
-
-
-def _partition_balance(spark, sf_dir):
-    return analytics.shuffle_partition_balance(load_table(spark, sf_dir, "lineitem"))
-
-
-def _broadcast_report(spark, sf_dir):
-    return analytics.broadcast_planning_report(
-        load_table(spark, sf_dir, "region"),
-        load_table(spark, sf_dir, "nation"),
-        load_table(spark, sf_dir, "supplier"),
-        load_table(spark, sf_dir, "customer"),
-    )
-
-
-# --- wave 29: readability / pricing-economics pack ---
-
-def _flesch(spark, sf_dir):
-    return text_analysis.flesch_reading_ease_by_source(
-        load_table(spark, sf_dir, "documents")
-    )
-
-
-def _elasticity(spark, sf_dir):
-    return analytics.brand_price_elasticity(
-        load_table(spark, sf_dir, "lineitem"), load_table(spark, sf_dir, "part")
-    )
-
-
-def _discount_response(spark, sf_dir):
-    return analytics.discount_quantity_response(load_table(spark, sf_dir, "lineitem"))
-
-
-# --- wave 30: inequality decomposition / survival pack ---
-
-def _nation_inequality(spark, sf_dir):
-    return analytics.nation_revenue_inequality(
-        load_table(spark, sf_dir, "orders"),
-        load_table(spark, sf_dir, "customer"),
-        load_table(spark, sf_dir, "nation"),
-    )
-
-
-def _nelson_aalen(spark, sf_dir):
-    return windows.nelson_aalen_hazard(load_table(spark, sf_dir, "events"))
-
-
-# --- wave 31: sparse-vector similarity / nonparametric CI / layout ---
-
-def _tfidf_cosine(spark, sf_dir):
-    return text_analysis.tfidf_cosine_pairs(load_table(spark, sf_dir, "documents"))
-
-
-def _median_ci(spark, sf_dir):
-    return analytics.median_order_stat_ci(load_table(spark, sf_dir, "events"))
-
-
-def _layout_advisory(spark, sf_dir):
-    return analytics.partition_layout_advisory(load_table(spark, sf_dir, "events"))
-
-
-def _segmented_trend(spark, sf_dir):
-    return windows.changepoint_segmented_trend(load_table(spark, sf_dir, "events"))
-
-
-# --- wave 33: Apriori triples / drift series / sampling design ---
-
-def _basket_triples(spark, sf_dir):
-    return analytics.basket_triple_itemsets(load_table(spark, sf_dir, "lineitem"))
-
-
-def _weekly_psi(spark, sf_dir):
-    return analytics.weekly_psi_series(load_table(spark, sf_dir, "events"))
-
-
-def _neyman(spark, sf_dir):
-    return analytics.neyman_allocation(load_table(spark, sf_dir, "events"))
-
-
-def _reconciliation(spark, sf_dir):
-    return analytics.order_reconciliation_audit(
-        load_table(spark, sf_dir, "orders"), load_table(spark, sf_dir, "lineitem")
-    )
-
-
-# --- wave 35 (round 8): new capability classes — streaming near-dup,
-# polymorphic analyze-phase UDTF, full CDC MERGE (I/U/D + sequence) ---
-
-def _streaming_near_dup(spark, sf_dir):
-    return events_stream.streaming_near_dup_docs(spark, sf_dir)
-
-
-def _semdedup_hier(spark, sf_dir):
-    return similarity.semdedup_hier_survivors(load_table(spark, sf_dir, "embeddings"))
-
-
 def _polymorphic_trigrams(spark, sf_dir):
     """Top trigrams via the DYNAMIC-SCHEMA UDTF (NgramExplode.analyze
     resolves (tok_1..tok_3) from the literal 3 at plan time) — the
@@ -2050,9 +801,6 @@ def _cdc_state(spark, sf_dir):
     return cdc_apply_changes(target, changes, "o_orderkey", "seq")
 
 
-# --- wave 36 (round 9): applied salted join --------------------------------
-
-
 def _salted_segment_value(spark, sf_dir):
     """operators/skew.py::salted_join applied to the events→customer
     enrichment: the fact's user_id is the prospective hot key
@@ -2102,18 +850,6 @@ def _sessionize_table_udtf(spark, sf_dir):
         "n_events",
         F_.round(F_.col("dur_us") / F_.lit(1_000_000.0), 6).alias("duration_secs"),
     )
-
-
-def _asof_cogrouped(spark, sf_dir):
-    return analytics.last_click_before_purchase_cogrouped(
-        load_table(spark, sf_dir, "events")
-    )
-
-
-def _observed_metrics(spark, sf_dir):
-    from mapreduce_golang_spark.operators.corpus import observed_ingest_metrics
-
-    return observed_ingest_metrics(load_table(spark, sf_dir, "documents"))
 
 
 def _streaming_kill_recover(spark, sf_dir):
@@ -2229,470 +965,393 @@ def _streaming_cdc_state(spark, sf_dir):
     return streaming_cdc_apply(spark, target, changes, "o_orderkey", work_dir)
 
 
+# The driver grades the FIRST 50 queries() entries only, so only
+# oracle-checkable queries sit in slots 1–50; every other query is
+# covered by the full gate (scripts/correctness_gate.py). How the window
+# rotated from round to round is in git history.
+_DRIVER_WINDOW: list[str] = [
+    "state_schema_evolution_counts", "foreach_batch_fanout",
+    "ps_orders_status_profile", "sql_scripting_coverage_threshold",
+    "sql_udf_price_bands", "collated_type_counts", "state_store_audit",
+    "deterministic_doc_sample", "posexplode_tokens", "kwic_snippets",
+    "stratified_sample", "file_counts", "string_functions",
+    "near_dup_survivors", "weighted_doc_sample", "q6_forecast_revenue",
+    "redact_numbers", "array_functions", "event_value_histogram",
+    "crash_data", "near_dup_triangles", "k_anonymity_audit",
+    "sentence_stats", "source_doc_stats", "salted_event_counts",
+    "value_moment_stats", "doc_length_gini", "exact_dedup",
+    "pack_sequences", "decontaminated_corpus", "wc",
+    "join_key_skew_report", "hourly_event_counts",
+    "users_signup_and_purchase", "part_price_size_skyline",
+    "top_k_words", "part_brand_hhi", "cumulative_active_users",
+    "doc_length_cume_dist", "pii_scan", "customer_snapshot_diff",
+    "near_dup_degree_hist", "part_name_near_matches", "media_features",
+    "benford_price_audit", "event_type_user_stats",
+    "lineitem_price_stats", "orders_above_customer_avg",
+    "trailing_hour_value", "scd2_customers",
+]
+
+
+#: The query registry, in registration order: a bespoke ``(spark,
+#: sf_dir)`` function, or an ``_op`` row for a query that is one operator
+#: call on its inputs. ``queries()`` puts ``_DRIVER_WINDOW`` first.
+_REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    "ngram_jaccard_pairs": _ngram_jaccard,
+    "rfm_user_segments": _op(analytics.rfm_user_segments, "events"),
+    "scd2_point_in_time": _scd2_pit,
+    "centroid_outliers": _op(similarity.centroid_outliers, "embeddings"),
+    "ann_recall_report": _op(similarity.ann_recall_report, "embeddings"),
+    "minhash_estimate_error": _op(dedup.minhash_estimate_error, "documents"),
+    "user_path_trigrams": _op(windows.user_path_trigrams, "events"),
+    "label_znorm_check": _op(similarity.label_znorm_check, "embeddings"),
+    "char_trigram_logprob": _nll_table,
+    "source_lang_entropy": _op(text_analysis.source_lang_entropy, "documents"),
+    "multi_granularity_rollup": _op(windows.multi_granularity_rollup, "events"),
+    "sql_revenue_by_nation_year": _sql_interface,
+    "dsir_importance_weights": _dsir_weights,
+    "quality_classifier_scores": _quality_scores,
+    "source_mixing_weights": _mixing_weights,
+    "ccnet_perplexity_buckets": _ccnet_buckets,
+    "eval_decontamination": _eval_decontam,
+    "minhash_ml_crosscheck": _op(dedup.minhash_ml_crosscheck, "documents"),
+    "embedding_pca_topvar": _op(similarity.embedding_pca_topvar, "embeddings"),
+    "quality_weighted_sample": _quality_sample,
+    "packing_efficiency_report": _op(corpus.packing_efficiency_report, "documents"),
+    "common_sentence_filter": _op(text_analysis.common_sentence_filter, "documents"),
+    "streaming_word_counts": events_stream.streaming_word_counts,
+    "bpe_merge_candidates": _op(text_analysis.bpe_merge_candidates, "documents"),
+    "corpus_top_p_selection": _top_p_selection,
+    "embedding_quantization_report": _op(similarity.embedding_quantization_report, "embeddings"),
+    "leakage_safe_splits": _leakage_splits,
+    "split_leakage_audit": _split_leakage,
+    "token_budget_allocation": _token_budget,
+    "ccnet_bucket_sample": _ccnet_sample,
+    "event_type_cooccurrence": _op(analytics.event_type_cooccurrence, "events"),
+    "join_key_skew_report": _op(skew.join_key_skew_report, "events"),
+    "kmeans_silhouette": _silhouette,
+    "conversion_latency_stats": _op(analytics.conversion_latency_stats, "events"),
+    "decontaminated_corpus": _decontaminated,
+    "doc_length_cume_dist": _op(text_analysis.doc_length_cume_dist, "documents"),
+    "user_first_last_events": _op(windows.user_first_last_events, "events"),
+    "component_best_representative": _op(
+        dedup.component_best_representative, "documents", pairs=_PAIRS,
+    ),
+    "source_token_js_divergence": _token_js,
+    "cluster_balanced_sample": _cluster_sample,
+    "streaming_distinct_users": events_stream.streaming_distinct_users,
+    "hot_shingles_report": _op(dedup.hot_shingles_report, "documents"),
+    "value_equidepth_bins": _op(analytics.value_equidepth_bins, "events"),
+    "mmr_diverse_topk": _op(similarity.mmr_diverse_topk, "embeddings"),
+    "rake_keywords": _op(text_analysis.rake_keywords, "documents"),
+    "char_script_profile": _op(text_analysis.char_script_profile, "documents"),
+    "markov_prediction_accuracy": _op(windows.markov_prediction_accuracy, "events"),
+    "kcore_docs": _op(graph.kcore_docs, "documents", pairs=_PAIRS),
+    "time_weighted_user_value": _op(windows.time_weighted_user_value, "events"),
+    "value_mad_anomalies": _op(windows.value_mad_anomalies, "events"),
+    "session_incident_overlap": _op(windows.session_incident_overlap, "events"),
+    "customer_snapshot_diff": _snapshot_diff,
+    "incremental_agg_refresh": _incr_agg,
+    "streaming_incident_hours": _stream_incidents,
+    "winsorized_value_stats": _op(analytics.winsorized_value_stats, "events"),
+    "event_weekday_chi2": _op(analytics.event_weekday_chi2, "events"),
+    "near_dup_weighted_pagerank": _op(graph.near_dup_weighted_pagerank, "documents", pairs=_PAIRS),
+    "source_quality_drift": _op(text_analysis.source_quality_drift, "documents"),
+    "source_doc_stats": _op(text_analysis.source_doc_stats, "documents"),
+    "near_dup_triangles": _op(graph.near_dup_triangles, "documents", pairs=_PAIRS),
+    "trailing_hour_value": _op(windows.trailing_hour_value, "events"),
+    "event_value_hmean": _op(analytics.event_value_hmean, "events"),
+    "near_dup_reachability": _op(graph.near_dup_reachability, _SPARK, "documents", pairs=_PAIRS),
+    "bigram_counts": _op(text_analysis.bigram_counts, "documents"),
+    "deterministic_doc_sample": _op(corpus.deterministic_doc_sample, "documents"),
+    "cumulative_active_users": _op(analytics.cumulative_active_users, "events"),
+    "event_gap_stats": _op(windows.event_gap_stats, "events"),
+    "streaming_segment_counts": _stream_segments,
+    "props_variant_stats": _op(windows.props_variant_stats, "events"),
+    "hopping_window_counts": _op(windows.hopping_window_counts, "events"),
+    "gap_fill_locf": _op(windows.gap_fill_locf, "events"),
+    "value_moment_stats": _op(analytics.value_moment_stats, "events"),
+    "user_retention_cohorts": _op(analytics.user_retention_cohorts, "events"),
+    "sentence_stats": _op(text_analysis.sentence_stats, "documents"),
+    "streaming_hopping_counts": _stream_hopping,
+    "value_ntile_deciles": _op(analytics.value_ntile_deciles, "events"),
+    "orphan_events": _op(analytics.orphan_events, "events", "customer"),
+    "lang_confusion_matrix": _op(text_analysis.lang_confusion_matrix, "documents"),
+    "zipf_slope": _op(text_analysis.zipf_slope, "documents"),
+    "pii_scan": _op(text_analysis.pii_scan, "documents"),
+    "user_conversion_funnel": _op(analytics.user_conversion_funnel, "events"),
+    "doc_length_gini": _op(text_analysis.doc_length_gini, "documents"),
+    "weighted_doc_sample": _op(corpus.weighted_doc_sample, "documents"),
+    "edit_distance_pairs": _op(dedup.edit_distance_pairs, "documents"),
+    "near_dup_clustering_coeff": _op(graph.near_dup_clustering_coeff, "documents", pairs=_PAIRS),
+    "kmeans_clusters": _kmeans,
+    "block_dedup_fraction": _op(text_analysis.duplicate_block_fraction, "documents"),
+    "gopher_quality_flags": _op(text_analysis.gopher_quality_flags, "documents"),
+    "token_pmi_pairs": _op(text_analysis.token_pmi_pairs, "documents"),
+    "bm25_top_docs": _op(text_analysis.bm25_top_docs, "documents"),
+    "containment_pairs": _op(dedup.overlap_containment_pairs, "documents"),
+    "near_dup_degree_hist": _op(graph.near_dup_degree_hist, "documents", pairs=_PAIRS),
+    "dup_cluster_size_hist": _op(graph.dup_cluster_size_hist, "documents", pairs=_PAIRS),
+    "markov_transitions": _op(windows.markov_transitions, "events"),
+    "ewma_user_value": _op(windows.ewma_user_value, "events"),
+    "value_zscore_anomalies": _op(windows.value_zscore_anomalies, "events"),
+    # streaming_user_stats_tws (transformWithStateInPandas) exists in
+    # streaming/events_stream.py but is NOT registered: the API's
+    # JVM↔Python state protocol needs protobuf, absent from this
+    # container (documented environment seam, like multimodal decode).
+    "date_dimensions": _date_dimensions,
+    "rollup_nation_year": _rollup_nation_year,
+    "string_functions": _string_functions,
+    "math_functions": _math_functions,
+    "array_functions": _array_functions,
+    "q6_forecast_revenue": _op(joins.q6_forecast_revenue, "lineitem"),
+    "q10_returned_items": _op(joins.q10_returned_items, "customer", "orders", "lineitem"),
+    "q12_late_shipments": _op(joins.q12_late_shipments, "orders", "lineitem"),
+    "q14_promo_revenue_share": _op(joins.q14_promo_revenue_share, "part", "lineitem"),
+    "q18_large_orders": _op(joins.q18_large_orders, "customer", "orders", "lineitem"),
+    "orders_above_customer_avg": _op(joins.orders_above_customer_avg, "orders"),
+    "near_dup_survivors": _op(dedup.near_dup_survivors, "documents", pairs=_PAIRS),
+    "near_dup_components": _op(dedup.near_dup_components, "documents", pairs=_PAIRS),
+    "near_dup_pagerank": _op(graph.near_dup_pagerank, "documents", pairs=_PAIRS),
+    "chunk_documents": _op(corpus.chunk_documents, "documents"),
+    "pack_sequences": _op(corpus.pack_sequences, "documents"),
+    "redact_numbers": _op(corpus.redact_numbers, "events"),
+    "corpus_final_selection": _op(corpus.corpus_final_selection, "documents", pairs=_PAIRS),
+    "indexer_packed": _op(parity.inverted_index, "documents", packed=True),
+    "near_dup_pipeline": _op(dedup.near_dup_pipeline, "documents", pairs=_PAIRS),
+    "q4_order_priority": _op(joins.q4_order_priority, "orders", "lineitem"),
+    "q7_volume_shipping": _op(
+        joins.q7_volume_shipping, "supplier", "lineitem", "orders", "customer", "nation",
+    ),
+    "q8_market_share": _op(
+        joins.q8_market_share, "region", "nation", "customer", "supplier", "orders", "lineitem",
+    ),
+    "q13_customer_distribution": _op(joins.q13_customer_distribution, "customer", "orders"),
+    "q17_small_quantity_revenue": _op(joins.q17_small_quantity_revenue, "part", "lineitem"),
+    "q19_discounted_revenue": _op(joins.q19_discounted_revenue, "part", "lineitem"),
+    "q22_sales_opportunity": _op(joins.q22_sales_opportunity, "customer", "orders"),
+    "bucketed_join_revenue": _bucketed_join,
+    "q2_min_cost_supplier": _op(
+        joins.q2_min_cost_supplier, "region", "nation", "supplier", "part", "lineitem",
+    ),
+    "q9_product_type_profit": _op(
+        joins.q9_product_type_profit, "part", "supplier", "nation", "orders", "lineitem",
+    ),
+    "q11_important_stock": _op(joins.q11_important_stock, "supplier", "nation", "lineitem"),
+    "q15_top_supplier": _op(joins.q15_top_supplier, "supplier", "lineitem"),
+    "q16_supplier_part_counts": _op(
+        joins.q16_supplier_part_counts, "part", "supplier", "lineitem",
+    ),
+    "q20_dominant_suppliers": _op(
+        joins.q20_dominant_suppliers, "supplier", "nation", "part", "lineitem",
+    ),
+    "q21_suppliers_kept_waiting": _op(
+        joins.q21_suppliers_kept_waiting, "supplier", "nation", "orders", "lineitem",
+    ),
+    "streaming_dedup_events": events_stream.streaming_dedup_events,
+    "scd2_customers": _scd2_customers,
+    # salted two-phase aggregation; the oracle is the plain GROUP BY, so
+    # the hot-key mitigation is shown to change only the exchange layout
+    "salted_event_counts": _op(skew.salted_count, "events", ["event_type"], out="n_events"),
+    "tfidf_top_terms": _op(text_analysis.tfidf_top_terms, "documents"),
+    "contamination_check": _op(text_analysis.contamination_check, "documents"),
+    "stratified_sample": _op(corpus.stratified_sample, "documents"),
+    "semantic_dedup_survivors": _op(similarity.semantic_dedup_survivors, "embeddings"),
+    "incremental_dedup": _op(dedup.incremental_dedup, "documents"),
+    "corpus_funnel_report": _op(corpus.corpus_funnel_report, "documents", pairs=_PAIRS),
+    "repetition_ratio": _op(text_analysis.repetition_ratio, "documents"),
+    "cross_source_overlap": _op(text_analysis.cross_source_overlap, "documents"),
+    "balanced_mixing_sample": _op(corpus.balanced_mixing_sample, "documents"),
+    "vocab_growth": _op(text_analysis.vocab_growth, "documents"),
+    "wc": _op(wordcount.word_count, "documents", text_col="text"),
+    "q1_pricing_summary": _op(joins.q1_pricing_summary, "lineitem"),
+    "mr_wc": _mr_wc,
+    "minhash_lsh_pairs": _op(dedup.minhash_lsh_pairs, "documents"),
+    "top_k_words": _op(wordcount.top_k_words, "documents", k=20, text_col="text"),
+    "indexer": _op(parity.inverted_index, "documents"),
+    "file_counts": _op(parity.file_counts, "documents", file_col="source"),
+    "crash_data": _op(parity.crash_data, "documents"),
+    "q3_shipping_priority": _op(joins.q3_shipping_priority, "customer", "orders", "lineitem"),
+    "q5_local_supplier_volume": _op(
+        joins.q5_local_supplier_volume,
+        "region", "nation", "customer", "supplier", "orders", "lineitem",
+    ),
+    "top_customers": _op(joins.top_customers_by_revenue, "customer", "orders"),
+    "orders_semi_join": _op(joins.orders_with_lineitems_semi, "orders", "lineitem"),
+    "customers_anti_join": _op(joins.customers_without_orders_anti, "customer", "orders"),
+    "revenue_rank_in_nation": _op(joins.revenue_rank_in_nation, "customer", "orders", "nation"),
+    "hourly_event_counts": _op(windows.hourly_event_counts, "events"),
+    "sessionize": _op(windows.sessionize, "events"),
+    "top_users_per_event_type": _op(windows.top_users_per_event_type, "events"),
+    "rolling_user_value": _op(windows.rolling_user_value, "events"),
+    "props_key_stats": _op(windows.props_key_stats, "events"),
+    "event_type_cube": _op(windows.event_type_share_cube, "events"),
+    "lang_id": _op(text_analysis.lang_id, _SPARK, "documents"),
+    "text_quality": _op(text_analysis.text_quality, "documents"),
+    "token_stats": _op(text_analysis.token_stats, "documents"),
+    "doc_fingerprints": _op(text_analysis.doc_fingerprints, "documents"),
+    "exact_dedup": _op(dedup.exact_dedup, "documents"),
+    "simhash": _simhash_sigs,
+    "simhash64": _op(dedup.simhash64, "documents"),
+    "simhash_pairs": _simhash_pairs,
+    "embedding_cosine_pairs": _op(dedup.embedding_cosine_pairs, "embeddings"),
+    "ann_topk_bruteforce": _op(similarity.cosine_topk_bruteforce, "embeddings"),
+    "ann_ivf_topk": _op(similarity.ann_ivf_topk, "embeddings"),
+    "ann_lsh_topk": _op(similarity.ann_lsh_topk, "embeddings"),
+    "streaming_hourly_counts": _stream_hourly,
+    "streaming_sessionize": _stream_sessionize,
+    "streaming_stream_join": _stream_ssj,
+    "streaming_user_counts": _stream_user_counts,
+    "media_features": _media_features,
+    "value_percentiles": _op(analytics.value_percentiles, "events"),
+    "event_type_user_stats": _op(analytics.event_type_user_stats, "events"),
+    "approx_distinct_users": _op(analytics.approx_distinct_users, "events"),
+    "users_purchase_not_error": _op(analytics.users_purchase_not_error, "events"),
+    "users_signup_and_purchase": _op(analytics.users_signup_and_purchase, "events"),
+    "event_counts_pivot": _op(analytics.event_counts_pivot, "events"),
+    "last_click_before_purchase": _op(analytics.last_click_before_purchase, "events"),
+    "weighted_median_value": _op(analytics.weighted_median_value, "events"),
+    "event_value_histogram": _op(analytics.event_value_histogram, "events"),
+    "lineitem_price_stats": _op(analytics.lineitem_price_stats, "lineitem"),
+    "data_quality_report": _op(analytics.data_quality_report, "lineitem"),
+    "events_range_join": _op(windows.events_near_errors_range_join, "events"),
+    "orders_monthly_growth": _op(analytics.orders_monthly_growth, "orders"),
+    "user_value_pareto": _op(analytics.user_value_pareto, "events"),
+    "part_brand_hhi": _op(analytics.part_brand_hhi, "part"),
+    "session_duration_histogram": _op(windows.session_duration_histogram, "events"),
+    "bpe_learn_merges": _op(text_analysis.bpe_learn_merges, "documents"),
+    "semdedup_survivors": _semdedup,
+    "dataset_card_report": _op(corpus.dataset_card_report, "documents"),
+    "hourly_value_ohlc": _op(windows.hourly_value_ohlc, "events"),
+    "monthly_metric_unpivot": _op(analytics.monthly_metric_unpivot, "orders"),
+    "part_name_near_matches": _op(dedup.part_name_near_matches, "part"),
+    "ngram_diversity_by_source": _op(text_analysis.ngram_diversity_by_source, "documents"),
+    "bpe_encode_stats": _op(text_analysis.bpe_encode_stats, "documents"),
+    "quality_dup_calibration": _op(text_analysis.quality_dup_calibration, "documents"),
+    "normalized_dedup_gain": _op(dedup.normalized_dedup_gain, "documents"),
+    "jl_projection_qa": _op(similarity.jl_projection_qa, "embeddings"),
+    "multi_touch_attribution": _op(analytics.multi_touch_attribution, "events"),
+    "rolling_median_value": _op(windows.rolling_median_value, "events"),
+    "order_basket_rules": _op(analytics.order_basket_rules, "lineitem"),
+    "k_anonymity_audit": _op(analytics.k_anonymity_audit, "customer"),
+    "benford_price_audit": _op(analytics.benford_price_audit, "orders"),
+    "streaming_hourly_ohlc": _stream_ohlc,
+    "rrf_hybrid_ranking": _op(text_analysis.rrf_hybrid_ranking, "documents"),
+    "value_psi_drift": _op(analytics.value_psi_drift, "events"),
+    "debounced_event_stats": _op(windows.debounced_event_stats, "events"),
+    "event_rate_spikes": _op(windows.event_rate_spikes, "events"),
+    "nation_share_shift": _op(joins.nation_share_shift, "orders", "customer", "nation"),
+    "order_ship_latency": _op(joins.order_ship_latency, "orders", "lineitem"),
+    "bootstrap_mean_ci": _op(analytics.bootstrap_mean_ci, "events"),
+    "part_price_size_skyline": _op(analytics.part_price_size_skyline, "part"),
+    "curriculum_phases": _op(corpus.curriculum_phases, "documents"),
+    "source_stopword_similarity": _op(text_analysis.source_stopword_similarity, "documents"),
+    "km_gap_survival": _op(windows.km_gap_survival, "events"),
+    "ab_conversion_ztest": _op(analytics.ab_conversion_ztest, "events", "customer"),
+    "bpe_roundtrip_audit": _op(text_analysis.bpe_roundtrip_audit, "documents"),
+    "value_hour_regression": _op(analytics.value_hour_regression, "events"),
+    "value_qq_drift": _op(analytics.value_qq_drift, "events"),
+    "kwic_snippets": _op(text_analysis.kwic_snippets, "documents"),
+    "template_opening_report": _op(text_analysis.template_opening_report, "documents"),
+    "part_abc_classification": _op(analytics.part_abc_classification, "lineitem"),
+    "type_hourly_correlation": _op(analytics.type_hourly_correlation, "events"),
+    "try_arithmetic_functions": _try_functions,
+    "posexplode_tokens": _posexplode_tokens,
+    "map_functions_pack": _map_functions,
+    "event_metric_transpose": _metric_transpose,
+    "hourly_acf": _op(windows.hourly_acf, "events"),
+    "type_crosscorr_leadlag": _op(windows.type_crosscorr_leadlag, "events"),
+    "user_active_day_streaks": _op(windows.user_active_day_streaks, "events"),
+    "max_concurrent_sessions": _op(windows.max_concurrent_sessions, "events"),
+    "source_bigram_cross_entropy": _op(text_analysis.source_bigram_cross_entropy, "documents"),
+    "l_diversity_audit": _op(analytics.l_diversity_audit, "customer", "orders"),
+    "mann_whitney_u": _op(analytics.mann_whitney_u, "events"),
+    "user_journey_signatures": _op(windows.user_journey_signatures, "events"),
+    "embedding_stats_arrow": _op(similarity.embedding_stats_arrow, "embeddings"),
+    "label_centroids_arrow": _op(similarity.label_centroids_arrow, "embeddings"),
+    "source_shingle_overlap": _op(dedup.source_shingle_overlap, "documents"),
+    "trigram_novelty_curve": _op(text_analysis.trigram_novelty_curve, "documents"),
+    "spearman_time_value": _op(analytics.spearman_time_value, "events"),
+    "kendall_tau_daily": _op(analytics.kendall_tau_daily, "events"),
+    "theil_sen_daily_trend": _op(analytics.theil_sen_daily_trend, "events"),
+    "kruskal_wallis_value": _op(analytics.kruskal_wallis_value, "events"),
+    "cusum_hourly_changepoint": _op(windows.cusum_hourly_changepoint, "events"),
+    "hourly_seasonality_profile": _op(windows.hourly_seasonality_profile, "events"),
+    "seasonal_adjusted_anomalies": _op(windows.seasonal_adjusted_anomalies, "events"),
+    "seasonal_naive_backtest": _op(windows.seasonal_naive_backtest, "events"),
+    "duplicate_shingle_fraction": _op(text_analysis.duplicate_shingle_fraction, "documents"),
+    "truncation_loss_report": _op(text_analysis.truncation_loss_report, "documents"),
+    "token_fertility_by_source": _op(text_analysis.token_fertility_by_source, "documents"),
+    "lineitem_column_profile": _op(analytics.lineitem_column_profile, "lineitem"),
+    "orders_constraint_audit": _op(analytics.orders_constraint_audit, "orders", "customer"),
+    "embedding_isotropy_report": _op(similarity.embedding_isotropy_report, "embeddings"),
+    "embedding_norm_deciles": _op(similarity.embedding_norm_deciles, "embeddings"),
+    "heaps_law_fit": _op(text_analysis.heaps_law_fit, "documents"),
+    "prefix_filter_jaccard_pairs": _op(dedup.prefix_filter_jaccard_pairs, "documents"),
+    "interarrival_stats": _op(windows.interarrival_stats, "events"),
+    "hourly_fano_burstiness": _op(windows.hourly_fano_burstiness, "events"),
+    "decile_shingle_drift": _op(text_analysis.decile_shingle_drift, "documents"),
+    "cramers_v_order_attrs": _op(analytics.cramers_v_order_attrs, "orders"),
+    "mutual_information_source_lang": _op(
+        text_analysis.mutual_information_source_lang, "documents",
+    ),
+    "cohens_kappa_langid": _op(text_analysis.cohens_kappa_langid, "documents"),
+    "theil_u_event_transitions": _op(windows.theil_u_event_transitions, "events"),
+    "embedding_sign_bucket_purity": _op(similarity.embedding_sign_bucket_purity, "embeddings"),
+    "value_distribution_distances": _op(analytics.value_distribution_distances, "events"),
+    "join_key_skew_advisory": _op(analytics.join_key_skew_advisory, "lineitem"),
+    "shuffle_partition_balance": _op(analytics.shuffle_partition_balance, "lineitem"),
+    "broadcast_planning_report": _op(
+        analytics.broadcast_planning_report, "region", "nation", "supplier", "customer",
+    ),
+    "flesch_reading_ease_by_source": _op(text_analysis.flesch_reading_ease_by_source, "documents"),
+    "brand_price_elasticity": _op(analytics.brand_price_elasticity, "lineitem", "part"),
+    "discount_quantity_response": _op(analytics.discount_quantity_response, "lineitem"),
+    "nation_revenue_inequality": _op(
+        analytics.nation_revenue_inequality, "orders", "customer", "nation",
+    ),
+    "nelson_aalen_hazard": _op(windows.nelson_aalen_hazard, "events"),
+    "tfidf_cosine_pairs": _op(text_analysis.tfidf_cosine_pairs, "documents"),
+    "median_order_stat_ci": _op(analytics.median_order_stat_ci, "events"),
+    "partition_layout_advisory": _op(analytics.partition_layout_advisory, "events"),
+    "changepoint_segmented_trend": _op(windows.changepoint_segmented_trend, "events"),
+    "basket_triple_itemsets": _op(analytics.basket_triple_itemsets, "lineitem"),
+    "weekly_psi_series": _op(analytics.weekly_psi_series, "events"),
+    "neyman_allocation": _op(analytics.neyman_allocation, "events"),
+    "order_reconciliation_audit": _op(analytics.order_reconciliation_audit, "orders", "lineitem"),
+    "cdc_orders_state": _cdc_state,
+    "streaming_near_dup_docs": events_stream.streaming_near_dup_docs,
+    "polymorphic_trigram_topk": _polymorphic_trigrams,
+    "semdedup_hier_survivors": _op(similarity.semdedup_hier_survivors, "embeddings"),
+    "salted_segment_value": _salted_segment_value,
+    "sessionize_table_udtf": _sessionize_table_udtf,
+    "asof_cogrouped_clicks": _op(analytics.last_click_before_purchase_cogrouped, "events"),
+    "observed_ingest_metrics": _op(corpus.observed_ingest_metrics, "documents"),
+    "streaming_kill_recover_dedup": _streaming_kill_recover,
+    "streaming_cdc_apply_changes": _streaming_cdc_state,
+    "state_store_audit": _state_store_audit,
+    "ps_orders_status_profile": _ps_orders_profile,
+    "sql_scripting_coverage_threshold": _sql_scripting_threshold,
+    "sql_udf_price_bands": _sql_udf_bands,
+    "collated_type_counts": _collated_counts,
+    "state_schema_evolution_counts": _state_schema_evolution,
+    "foreach_batch_fanout": _foreach_batch_fanout,
+    # num_features=None: corpus-scaled HashingTF sizing (next pow2 ≥ 4×
+    # approx distinct shingles), measured on the same ladder as the
+    # pinned crosscheck (SCALING_XL.md)
+    "minhash_ml_crosscheck_scaled": _op(
+        dedup.minhash_ml_crosscheck, "documents", num_features=None,
+    ),
+}
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     ordered: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for name in _DRIVER_WINDOW:
-        ordered[name] = _shipped(_RAW_QUERIES[name])
-    for name, fn in _RAW_QUERIES.items():
+        ordered[name] = _shipped(_REGISTRY[name])
+    for name, fn in _REGISTRY.items():
         if name not in ordered:
             ordered[name] = _shipped(fn)
     return ordered
-
-
-# Registration order is load-bearing: the driver's correctness gate records
-# rows for the FIRST 50 entries only (observed: CORRECTNESS_r01–r03 each hold
-# exactly the first 50 registrations). Rounds 1–3 hard-confirmed the original
-# first 50; round 4 rotated the 46 windowless queries in (50/50 green);
-# round 5 rotated its 11 wave-6/7 additions plus the 5 post-r4 stragglers
-# in (50/50 green). Round 6's window: the pair-graph derivation query
-# (bench attribution), then the NINE queries that had never received a
-# driver row after the round-5 head insertions displaced them —
-# rfm_user_segments, scd2_point_in_time, centroid_outliers,
-# ann_recall_report, minhash_estimate_error, user_path_trigrams,
-# label_znorm_check, char_trigram_logprob, source_lang_entropy — then the
-# two r4-green re-windows (multi_granularity_rollup,
-# sql_revenue_by_nation_year), then the 35 round-6 additions (waves 1-9),
-# padded to exactly 50 with three already-driver-green round-5 queries
-# (kcore_docs, time_weighted_user_value, value_mad_anomalies — re-grading
-# a green query costs nothing). FINAL for round 6: the head is full; any
-# further additions must register BELOW slot 50 (full-gate coverage this
-# round, driver rotation next round). The HLL sketch stays rows-only by
-# design.
-# ROUND-7 ROTATION (executed): reordered queries() so the first 50
-# entries were exactly the first 50 of the 52 queries that had never
-# received a driver CORRECTNESS row (waves 10-22, registration order).
-# ROUND-8 ROTATION (executed): the round-8 head held the 48-query
-# remainder (judge-verified list) + 2 green pads; CORRECTNESS_r08 came
-# back 50/50 → every round-7-era query has a driver row (291/291
-# cumulative).
-# ROUND-10 ROTATION (executed): the round-10 head led with wave 36
-# (salted_segment_value, sessionize_table_udtf, asof_cogrouped_clicks,
-# observed_ingest_metrics — the only 4 without a driver row) padded to
-# 50 with the same 46 green pads as round 9. CORRECTNESS_r10 came back
-# 50/50 → driver-cumulative 299/299 for every pre-wave-37 query.
-# ROUND-12 ROTATION (executed): the round-12 head leads with wave 38
-# (state_schema_evolution_counts, foreach_batch_fanout — the only 2
-# queries without a driver row after CORRECTNESS_r11's 50/50) padded to
-# 50 with 48 driver-green queries. Done = CORRECTNESS_r12 50/50 →
-# driver-cumulative 308/308. Round-12 added NO new queries (a depth
-# round: loop/derivation optimization + advice fixes), so there is no
-# remainder — the ROUND-13 ROTATION LIST is empty and the round-13
-# head may keep this window (re-grading greens costs nothing) unless
-# round 13 registers new queries, which go BELOW slot 50 as always.
-# ROUND-13 (executed): kept the r12 head unchanged; registered ONE new
-# query below slot 50 (wave 39: minhash_ml_crosscheck_scaled, the
-# corpus-scaled-numFeatures leg the r12 verdict #3 prescribed). The
-# ROUND-14 ROTATION LIST is therefore exactly
-# [minhash_ml_crosscheck_scaled] — put it first in the round-14 head,
-# padded to 50 with already-green queries.
-# ROUND-14 ROTATION (executed, then REVERTED in round 15): the r14 head
-# led with minhash_ml_crosscheck_scaled + 49 of the r12/r13 green pads
-# (scd2_customers dropped). The r14 verdict flagged this as a window
-# regression: the rotated-in query is rows-only by design (no oracle →
-# err=no_oracle forever), so the window read 49/50 and a green query
-# had left it. ROUND-15 ROTATION (executed): _DRIVER_WINDOW restores the
-# r12 window verbatim; minhash_ml_crosscheck_scaled sits below slot 50
-# permanently with the full gate's rows-only row as standing evidence.
-# Protocol amendment: only oracle-checkable queries enter the window.
-# ROUND-11 ROTATION (executed): the round-11 head led with wave 37
-# (streaming_kill_recover_dedup, streaming_cdc_apply_changes,
-# state_store_audit, ps_orders_status_profile,
-# sql_scripting_coverage_threshold, sql_udf_price_bands,
-# collated_type_counts — the only 7 without a driver row) padded to 50
-# with 43 of the round-10 green pads. Done = CORRECTNESS_r11 50/50 →
-# driver-cumulative 306/306. Round-11 additions register BELOW slot 50
-# and form the ROUND-12 ROTATION LIST (wave 38:
-# state_schema_evolution_counts, foreach_batch_fanout — put these 2
-# first in the round-12 window, padded to 50 with already-green
-# queries).
-# ROUND-9 ROTATION (executed): the round-9 head led with wave 35
-# (cdc_orders_state, streaming_near_dup_docs, polymorphic_trigram_topk,
-# semdedup_hier_survivors — the only 4 queries without a driver row)
-# padded to 50 with 46 sub-second hash-green queries. Done =
-# CORRECTNESS_r09 50/50 → driver-cumulative 295/295. Any round-9
-# additions register BELOW slot 50 and form the ROUND-10 ROTATION LIST
-# (wave 36: salted_segment_value, sessionize_table_udtf,
-# asof_cogrouped_clicks, observed_ingest_metrics — put these first in
-# the round-10 window, padded to 50 with already-green queries).
-# The historical ROUND-8 ROTATION LIST (the 2-query remainder — put
-# these first in the round-8 window, then any round-7 additions
-# registered below slot 50): mann_whitney_u, user_journey_signatures,
-# embedding_stats_arrow, label_centroids_arrow, source_shingle_overlap,
-# trigram_novelty_curve, then wave 23: spearman_time_value,
-# kendall_tau_daily, theil_sen_daily_trend, kruskal_wallis_value,
-# cusum_hourly_changepoint, hourly_seasonality_profile,
-# seasonal_adjusted_anomalies, seasonal_naive_backtest,
-# duplicate_shingle_fraction, truncation_loss_report,
-# token_fertility_by_source, then wave 24: lineitem_column_profile,
-# orders_constraint_audit, embedding_isotropy_report,
-# embedding_norm_deciles, heaps_law_fit, then wave 25:
-# prefix_filter_jaccard_pairs, interarrival_stats,
-# hourly_fano_burstiness, decile_shingle_drift, then wave 26:
-# cramers_v_order_attrs, mutual_information_source_lang,
-# cohens_kappa_langid, theil_u_event_transitions,
-# embedding_sign_bucket_purity, then wave 27:
-# value_distribution_distances, then wave 28: join_key_skew_advisory,
-# shuffle_partition_balance, broadcast_planning_report, then wave 29:
-# flesch_reading_ease_by_source, brand_price_elasticity,
-# discount_quantity_response, then wave 30: nation_revenue_inequality,
-# nelson_aalen_hazard, then wave 31: tfidf_cosine_pairs,
-# median_order_stat_ci, partition_layout_advisory, then wave 32:
-# changepoint_segmented_trend, then wave 33: basket_triple_itemsets,
-# weekly_psi_series, neyman_allocation, then wave 34:
-# order_reconciliation_audit (48 total — pad to 50 with already-green).
-# Queries outside the window remain covered every round by
-# scripts/correctness_gate.py (CORRECTNESS_FULL.json).
-_RAW_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        # ngram_jaccard_pairs leads so the materialize-once pair graph's
-        # one-time derivation cost lands on the derivation query in the
-        # bench table, not on whichever consumer happens to run first
-        # (r1-green; re-graded in this round's window at no cost).
-        "ngram_jaccard_pairs": _ngram_jaccard,
-        # --- round-6 rotation: the 9 queries with no driver row yet ---
-        "rfm_user_segments": _rfm,
-        "scd2_point_in_time": _scd2_pit,
-        "centroid_outliers": _centroid_outliers,
-        "ann_recall_report": _ann_recall,
-        "minhash_estimate_error": _minhash_calibration,
-        "user_path_trigrams": _path_trigrams,
-        "label_znorm_check": _label_znorm,
-        "char_trigram_logprob": _trigram_logprob,
-        "source_lang_entropy": _lang_entropy,
-        # --- round-6 re-window: r4-green, displaced since round 5 ---
-        "multi_granularity_rollup": _rollup,
-        "sql_revenue_by_nation_year": _sql_interface,
-        # --- round-6 additions (slots 13+; keep total new-to-window ≤ 50) ---
-        "dsir_importance_weights": _dsir_weights,
-        "quality_classifier_scores": _quality_scores,
-        "source_mixing_weights": _mixing_weights,
-        "ccnet_perplexity_buckets": _ccnet_buckets,
-        "eval_decontamination": _eval_decontam,
-        "minhash_ml_crosscheck": _minhash_ml_crosscheck,
-        "embedding_pca_topvar": _pca_topvar,
-        "quality_weighted_sample": _quality_sample,
-        "packing_efficiency_report": _packing_efficiency,
-        "common_sentence_filter": _common_sentences,
-        "streaming_word_counts": _streaming_wc,
-        "bpe_merge_candidates": _bpe_candidates,
-        "corpus_top_p_selection": _top_p_selection,
-        "embedding_quantization_report": _quant_report,
-        "leakage_safe_splits": _leakage_splits,
-        "split_leakage_audit": _split_leakage,
-        "token_budget_allocation": _token_budget,
-        "ccnet_bucket_sample": _ccnet_sample,
-        "event_type_cooccurrence": _type_cooccurrence,
-        "join_key_skew_report": _key_skew,
-        "kmeans_silhouette": _silhouette,
-        "conversion_latency_stats": _conversion_latency,
-        "decontaminated_corpus": _decontaminated,
-        "doc_length_cume_dist": _length_cume,
-        "user_first_last_events": _first_last,
-        "component_best_representative": _best_rep,
-        "source_token_js_divergence": _token_js,
-        "cluster_balanced_sample": _cluster_sample,
-        "streaming_distinct_users": _streaming_distinct,
-        "hot_shingles_report": _hot_shingles,
-        "value_equidepth_bins": _equidepth,
-        "mmr_diverse_topk": _mmr,
-        "rake_keywords": _rake,
-        "char_script_profile": _script_profile,
-        "markov_prediction_accuracy": _markov_accuracy,
-        # --- round-5 wave 6 (all driver-green in CORRECTNESS_r05) ---
-        "kcore_docs": _kcore,
-        "time_weighted_user_value": _twap,
-        "value_mad_anomalies": _mad_anomalies,
-        "session_incident_overlap": _session_incidents,
-        "customer_snapshot_diff": _snapshot_diff,
-        "incremental_agg_refresh": _incr_agg,
-        "streaming_incident_hours": _stream_incidents,
-        "winsorized_value_stats": _winsorized,
-        "event_weekday_chi2": _weekday_chi2,
-        "near_dup_weighted_pagerank": _weighted_pagerank,
-        "source_quality_drift": _quality_drift,
-        # --- round-5 window head: the 5 entries never driver-graded ---
-        "source_doc_stats": _source_doc_stats,
-        "near_dup_triangles": _triangles,
-        "trailing_hour_value": _trailing,
-        "event_value_hmean": _hmean_query,
-        "near_dup_reachability": _reachability,
-        # --- new in round 5 ---
-        "bigram_counts": _bigrams,
-        "deterministic_doc_sample": _det_sample,
-        "cumulative_active_users": _cumulative_users,
-        "event_gap_stats": _event_gaps,
-        "streaming_segment_counts": _stream_segments,
-        "props_variant_stats": _props_variant,
-        "hopping_window_counts": _hopping_windows,
-        "gap_fill_locf": _gap_fill,
-        "value_moment_stats": _moment_stats,
-        "user_retention_cohorts": _retention_cohorts,
-        "sentence_stats": _sentence_stats,
-        "streaming_hopping_counts": _stream_hopping,
-        "value_ntile_deciles": _ntile_deciles,
-        "orphan_events": _orphan_events,
-        "lang_confusion_matrix": _lang_confusion,
-        "zipf_slope": _zipf_slope,
-        "pii_scan": _pii_scan,
-        "user_conversion_funnel": _conversion_funnel,
-        "doc_length_gini": _doc_length_gini,
-        "weighted_doc_sample": _weighted_sample,
-        "edit_distance_pairs": _edit_pairs,
-        "near_dup_clustering_coeff": _clustering_coeff,
-        "kmeans_clusters": _kmeans,
-        # --- round-5 second batch (all inside the driver's 50-row window) ---
-        "block_dedup_fraction": _block_dedup,
-        "gopher_quality_flags": _gopher_flags,
-        "token_pmi_pairs": _token_pmi,
-        "bm25_top_docs": _bm25,
-        "containment_pairs": _containment_pairs,
-        "near_dup_degree_hist": _degree_hist,
-        "dup_cluster_size_hist": _cluster_size_hist,
-        "markov_transitions": _markov,
-        "ewma_user_value": _ewma,
-        "value_zscore_anomalies": _zscore_anomalies,
-        # streaming_user_stats_tws (transformWithStateInPandas) exists in
-        # streaming/events_stream.py but is NOT registered: the API's
-        # JVM↔Python state protocol needs protobuf, absent from this
-        # container (documented environment seam, like multimodal decode).
-        # --- driver-green in round 4 (CORRECTNESS_r04) ---
-        "date_dimensions": _date_dimensions,
-        "rollup_nation_year": _rollup_nation_year,
-        "string_functions": _string_functions,
-        "math_functions": _math_functions,
-        "array_functions": _array_functions,
-        "q6_forecast_revenue": _q6,
-        "q10_returned_items": _q10,
-        "q12_late_shipments": _q12,
-        "q14_promo_revenue_share": _q14,
-        "q18_large_orders": _q18,
-        "orders_above_customer_avg": _above_avg,
-        "near_dup_survivors": _survivors,
-        "near_dup_components": _components,
-        "near_dup_pagerank": _pagerank,
-        "chunk_documents": _chunks,
-        "pack_sequences": _packing,
-        "redact_numbers": _redact,
-        "corpus_final_selection": _final_selection,
-        "indexer_packed": _indexer_packed,
-        "near_dup_pipeline": _near_dup_pipeline,
-        "q4_order_priority": _q4,
-        "q7_volume_shipping": _q7,
-        "q8_market_share": _q8,
-        "q13_customer_distribution": _q13,
-        "q17_small_quantity_revenue": _q17,
-        "q19_discounted_revenue": _q19,
-        "q22_sales_opportunity": _q22,
-        "bucketed_join_revenue": _bucketed_join,
-        "q2_min_cost_supplier": _q2,
-        "q9_product_type_profit": _q9,
-        "q11_important_stock": _q11,
-        "q15_top_supplier": _q15,
-        "q16_supplier_part_counts": _q16,
-        "q20_dominant_suppliers": _q20,
-        "q21_suppliers_kept_waiting": _q21,
-        "streaming_dedup_events": _stream_dedup,
-        "scd2_customers": _scd2_customers,
-        "salted_event_counts": _salted_counts,
-        "tfidf_top_terms": _tfidf,
-        "contamination_check": _contamination,
-        "stratified_sample": _stratified_sample,
-        "semantic_dedup_survivors": _semantic_dedup,
-        "incremental_dedup": _incremental_dedup,
-        "corpus_funnel_report": _corpus_funnel,
-        "repetition_ratio": _repetition,
-        "cross_source_overlap": _source_overlap,
-        "balanced_mixing_sample": _mixing_sample,
-        "vocab_growth": _vocab_growth,
-        # --- remainder: driver-green in rounds 1–3 (CORRECTNESS_r01–r03) ---
-        "wc": _wc,
-        "q1_pricing_summary": _q1,
-        "mr_wc": _mr_wc,
-        "minhash_lsh_pairs": _minhash_lsh,
-        "top_k_words": _top_k_words,
-        "indexer": _indexer,
-        "file_counts": _file_counts,
-        "crash_data": _crash_data,
-        "q3_shipping_priority": _q3,
-        "q5_local_supplier_volume": _q5,
-        "top_customers": _top_customers,
-        "orders_semi_join": _semi,
-        "customers_anti_join": _anti,
-        "revenue_rank_in_nation": _rank_in_nation,
-        "hourly_event_counts": _hourly,
-        "sessionize": _sessionize,
-        "top_users_per_event_type": _top_users,
-        "rolling_user_value": _rolling,
-        "props_key_stats": _props,
-        "event_type_cube": _cube,
-        "lang_id": _lang_id,
-        "text_quality": _text_quality,
-        "token_stats": _token_stats,
-        "doc_fingerprints": _fingerprints,
-        "exact_dedup": _exact_dedup,
-        "simhash": _simhash,
-        "simhash64": _simhash64,
-        "simhash_pairs": _simhash_pairs,
-        "embedding_cosine_pairs": _embedding_pairs,
-        "ann_topk_bruteforce": _ann_brute,
-        "ann_ivf_topk": _ann_ivf,
-        "ann_lsh_topk": _ann_lsh,
-        "streaming_hourly_counts": _stream_hourly,
-        "streaming_sessionize": _stream_sessionize,
-        "streaming_stream_join": _stream_ssj,
-        "streaming_user_counts": _stream_user_counts,
-        "media_features": _media_features,
-        "value_percentiles": _percentiles,
-        "event_type_user_stats": _user_stats,
-        "approx_distinct_users": _approx_users,
-        "users_purchase_not_error": _except_users,
-        "users_signup_and_purchase": _intersect_users,
-        "event_counts_pivot": _pivot,
-        "last_click_before_purchase": _asof,
-        "weighted_median_value": _wmedian,
-        "event_value_histogram": _histogram,
-        "lineitem_price_stats": _price_stats,
-        "data_quality_report": _dq_report,
-        "events_range_join": _range_join,
-        # --- round-6 wave 10: registered BELOW slot 50 on purpose (the
-        # driver window is full; these are full-gate-covered this round
-        # and rotate into the head in round 7) ---
-        "orders_monthly_growth": _monthly_growth,
-        "user_value_pareto": _value_pareto,
-        "part_brand_hhi": _brand_hhi,
-        "session_duration_histogram": _session_hist,
-        "bpe_learn_merges": _bpe_merges,
-        "semdedup_survivors": _semdedup,
-        "dataset_card_report": _dataset_card,
-        "hourly_value_ohlc": _ohlc,
-        "monthly_metric_unpivot": _metric_unpivot,
-        "part_name_near_matches": _name_matches,
-        "ngram_diversity_by_source": _ngram_diversity,
-        "bpe_encode_stats": _bpe_encode,
-        "quality_dup_calibration": _qual_calib,
-        "normalized_dedup_gain": _norm_gain,
-        "jl_projection_qa": _jl_qa,
-        "multi_touch_attribution": _attribution,
-        "rolling_median_value": _roll_median,
-        "order_basket_rules": _basket_rules,
-        "k_anonymity_audit": _k_anon,
-        "benford_price_audit": _benford,
-        "streaming_hourly_ohlc": _stream_ohlc,
-        "rrf_hybrid_ranking": _rrf,
-        "value_psi_drift": _psi,
-        "debounced_event_stats": _debounce,
-        "event_rate_spikes": _rate_spikes,
-        "nation_share_shift": _share_shift,
-        "order_ship_latency": _ship_latency,
-        "bootstrap_mean_ci": _bootstrap_ci,
-        "part_price_size_skyline": _skyline,
-        "curriculum_phases": _curriculum,
-        "source_stopword_similarity": _stopword_sim,
-        "km_gap_survival": _km_survival,
-        "ab_conversion_ztest": _ab_ztest,
-        "bpe_roundtrip_audit": _bpe_roundtrip,
-        "value_hour_regression": _hour_regression,
-        "value_qq_drift": _qq_drift,
-        "kwic_snippets": _kwic,
-        "template_opening_report": _template_report,
-        "part_abc_classification": _abc,
-        "type_hourly_correlation": _type_corr,
-        "try_arithmetic_functions": _try_functions,
-        "posexplode_tokens": _posexplode_tokens,
-        "map_functions_pack": _map_functions,
-        "event_metric_transpose": _metric_transpose,
-        "hourly_acf": _hourly_acf,
-        "type_crosscorr_leadlag": _crosscorr_leadlag,
-        "user_active_day_streaks": _day_streaks,
-        "max_concurrent_sessions": _max_concurrency,
-        "source_bigram_cross_entropy": _bigram_xent,
-        "l_diversity_audit": _l_diversity,
-        "mann_whitney_u": _mwu,
-        "user_journey_signatures": _journeys,
-        # --- round-7 additions (below slot 50; ROUND-8 window) ---
-        "embedding_stats_arrow": _embedding_stats_arrow,
-        "label_centroids_arrow": _label_centroids_arrow,
-        "source_shingle_overlap": _source_shingle_overlap,
-        "trigram_novelty_curve": _trigram_novelty,
-        # --- wave 23 (below slot 50; ROUND-8 window) ---
-        "spearman_time_value": _spearman,
-        "kendall_tau_daily": _kendall,
-        "theil_sen_daily_trend": _theil_sen,
-        "kruskal_wallis_value": _kruskal,
-        "cusum_hourly_changepoint": _cusum,
-        "hourly_seasonality_profile": _seasonality_profile,
-        "seasonal_adjusted_anomalies": _seasonal_anomalies,
-        "seasonal_naive_backtest": _seasonal_backtest,
-        "duplicate_shingle_fraction": _dup_shingle_fraction,
-        "truncation_loss_report": _truncation_loss,
-        "token_fertility_by_source": _token_fertility,
-        # --- wave 24 (below slot 50; ROUND-8 window) ---
-        "lineitem_column_profile": _column_profile,
-        "orders_constraint_audit": _constraint_audit,
-        "embedding_isotropy_report": _isotropy,
-        "embedding_norm_deciles": _norm_deciles,
-        "heaps_law_fit": _heaps_fit,
-        # --- wave 25 (below slot 50; ROUND-8 window) ---
-        "prefix_filter_jaccard_pairs": _prefix_filter_pairs,
-        "interarrival_stats": _interarrival,
-        "hourly_fano_burstiness": _fano,
-        "decile_shingle_drift": _decile_drift,
-        # --- wave 26 (below slot 50; ROUND-8 window) ---
-        "cramers_v_order_attrs": _cramers_v,
-        "mutual_information_source_lang": _mi_source_lang,
-        "cohens_kappa_langid": _cohens_kappa,
-        "theil_u_event_transitions": _theil_u,
-        "embedding_sign_bucket_purity": _sign_bucket_purity,
-        # --- wave 27 (below slot 50; ROUND-8 window) ---
-        "value_distribution_distances": _dist_distances,
-        # --- wave 28 (below slot 50; ROUND-8 window) ---
-        "join_key_skew_advisory": _skew_advisory,
-        "shuffle_partition_balance": _partition_balance,
-        "broadcast_planning_report": _broadcast_report,
-        # --- wave 29 (below slot 50; ROUND-8 window) ---
-        "flesch_reading_ease_by_source": _flesch,
-        "brand_price_elasticity": _elasticity,
-        "discount_quantity_response": _discount_response,
-        # --- wave 30 (below slot 50; ROUND-8 window) ---
-        "nation_revenue_inequality": _nation_inequality,
-        "nelson_aalen_hazard": _nelson_aalen,
-        # --- wave 31 (below slot 50; ROUND-8 window) ---
-        "tfidf_cosine_pairs": _tfidf_cosine,
-        "median_order_stat_ci": _median_ci,
-        "partition_layout_advisory": _layout_advisory,
-        # --- wave 32 (below slot 50; ROUND-8 window) ---
-        "changepoint_segmented_trend": _segmented_trend,
-        # --- wave 33 (below slot 50; ROUND-8 window) ---
-        "basket_triple_itemsets": _basket_triples,
-        "weekly_psi_series": _weekly_psi,
-        "neyman_allocation": _neyman,
-        "order_reconciliation_audit": _reconciliation,
-        # --- wave 35 (round 8, below slot 50 → ROUND-9 ROTATION LIST) ---
-        "cdc_orders_state": _cdc_state,
-        "streaming_near_dup_docs": _streaming_near_dup,
-        "polymorphic_trigram_topk": _polymorphic_trigrams,
-        "semdedup_hier_survivors": _semdedup_hier,
-        # --- wave 36 (round 9, below slot 50 → ROUND-10 ROTATION LIST) ---
-        "salted_segment_value": _salted_segment_value,
-        "sessionize_table_udtf": _sessionize_table_udtf,
-        "asof_cogrouped_clicks": _asof_cogrouped,
-        "observed_ingest_metrics": _observed_metrics,
-        # --- wave 37 (round 10, below slot 50 → ROUND-11 ROTATION LIST) ---
-        "streaming_kill_recover_dedup": _streaming_kill_recover,
-        "streaming_cdc_apply_changes": _streaming_cdc_state,
-        "state_store_audit": _state_store_audit,
-        "ps_orders_status_profile": _ps_orders_profile,
-        "sql_scripting_coverage_threshold": _sql_scripting_threshold,
-        "sql_udf_price_bands": _sql_udf_bands,
-        "collated_type_counts": _collated_counts,
-        # --- wave 38 (round 11, below slot 50 → ROUND-12 ROTATION LIST) ---
-        "state_schema_evolution_counts": _state_schema_evolution,
-        "foreach_batch_fanout": _foreach_batch_fanout,
-        # --- wave 39 (round 13, below slot 50 → ROUND-14 ROTATION LIST) ---
-        # the corpus-scaled-numFeatures leg the round-12 100× probe's
-        # caveat recommends (SCALING_XL.md): rows-only like the pinned
-        # crosscheck (same seeded-JVM-hash reason — no SQL twin).
-        "minhash_ml_crosscheck_scaled": _minhash_ml_crosscheck_scaled,
-    }
 
 
 # --------------------------------------------------------------------------

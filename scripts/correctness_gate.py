@@ -29,20 +29,12 @@ sys.path.insert(0, REPO)
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
     import __spark_entry__ as entrymod
+    from mapreduce_golang_spark.session import get_spark
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .appName("correctness-gate-full")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", "24g")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="correctness-gate-full")
     spark.sparkContext.setLogLevel("ERROR")
 
     qs = entrymod.queries()
@@ -91,7 +83,7 @@ def _rows_only(row: dict) -> bool:
 
 
 def _run_all(spark, sf_dir, qs, oracles, results) -> None:
-    from tests.oracle import duckdb_connect, _rowset
+    from tests.oracle import compare_rowsets, run_oracle
 
     for i, (name, fn) in enumerate(qs.items()):
         row = {
@@ -110,17 +102,10 @@ def _run_all(spark, sf_dir, qs, oracles, results) -> None:
             if sql is None:
                 row["err"] = "no_oracle"
             else:
-                con = duckdb_connect(sf_dir)
-                try:
-                    oracle_pdf = con.execute(sql).fetchdf()
-                finally:
-                    con.close()
+                oracle_pdf = run_oracle(sql, sf_dir)
                 row["oracle_rows"] = len(oracle_pdf)
-                s_cols, s_rows = _rowset(spark_pdf)
-                o_cols, o_rows = _rowset(oracle_pdf)
-                row["rows_match"] = len(s_rows) == len(o_rows)
-                row["schema_match"] = s_cols == o_cols
-                row["hash_match"] = s_rows == o_rows
+                checks, _ = compare_rowsets(spark_pdf, oracle_pdf)
+                row.update(checks)
         except Exception as exc:  # noqa: BLE001 — gate must record, not die
             row["err"] = f"{type(exc).__name__}: {exc}"[:300]
         results[name] = row

@@ -47,3 +47,26 @@ def launched_jobs(spark):
             jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
 
     return counting
+
+
+@pytest.fixture(scope="session")
+def query_check(spark, sf_dir):
+    """``query_check(name)`` runs the registry sweep's check of one query
+    (tests/sweep.py) once per session and returns its row count; every
+    later call for the same query returns that count or raises the same
+    failure, so each query is built once however many tests check it."""
+    from tests.sweep import check_query
+
+    outcomes: dict[str, int | Exception] = {}
+
+    def run(name: str) -> int:
+        if name not in outcomes:
+            try:
+                outcomes[name] = check_query(spark, sf_dir, name)
+            except Exception as exc:  # noqa: BLE001 — replayed to every caller
+                outcomes[name] = exc
+        if isinstance(outcomes[name], Exception):
+            raise outcomes[name]
+        return outcomes[name]
+
+    return run

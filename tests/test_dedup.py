@@ -2,7 +2,6 @@ from __future__ import annotations
 
 import __spark_entry__ as entrymod
 import pytest
-from tests.oracle import assert_matches_oracle
 
 DEDUP_QUERIES = [
     "exact_dedup",
@@ -16,9 +15,8 @@ DEDUP_QUERIES = [
 
 
 @pytest.mark.parametrize("name", DEDUP_QUERIES)
-def test_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir)
-    assert n > 0
+def test_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_exact_dedup_collapses_duplicates(spark):
@@ -122,14 +120,8 @@ def test_incremental_dedup_statuses(spark):
     assert rows == {0: "dup_exact", 10: "dup_exact", 20: "dup_near", 30: "kept"}
 
 
-def test_incremental_dedup_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["incremental_dedup"],
-        entrymod.oracle_sql()["incremental_dedup"],
-        sf_dir,
-    )
-    assert n > 0
+def test_incremental_dedup_matches_oracle(query_check):
+    assert query_check("incremental_dedup") > 0
 
 
 def test_minhash_crosscheck_scaled_floors_to_pinned_at_fixture_scale(spark, sf_dir):

@@ -1,8 +1,6 @@
 from __future__ import annotations
 
-import __spark_entry__ as entrymod
 import pytest
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
@@ -10,9 +8,8 @@ from tests.oracle import assert_matches_oracle
     ["q6_forecast_revenue", "q10_returned_items", "q12_late_shipments", "q14_promo_revenue_share",
      "near_dup_survivors", "near_dup_components", "near_dup_pipeline"],
 )
-def test_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir)
-    assert n > 0
+def test_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_components_transitive_chain(spark):

@@ -1,17 +1,9 @@
 from __future__ import annotations
 
-import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 
-def test_pagerank_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["near_dup_pagerank"],
-        entrymod.oracle_sql()["near_dup_pagerank"],
-        sf_dir,
-    )
-    assert n > 0
+def test_pagerank_matches_oracle(query_check):
+    assert query_check("near_dup_pagerank") > 0
 
 
 def test_pagerank_conserves_mass_and_ranks_hubs(spark):
@@ -29,17 +21,8 @@ def test_pagerank_conserves_mass_and_ranks_hubs(spark):
     assert ranks[1] > ranks[2] == ranks[3] == ranks[4]
 
 
-def test_triangles_match_oracle(spark, sf_dir):
-    import __spark_entry__ as entrymod
-    from tests.oracle import assert_matches_oracle
-
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["near_dup_triangles"],
-        entrymod.oracle_sql()["near_dup_triangles"],
-        sf_dir,
-    )
-    assert n > 0
+def test_triangles_match_oracle(query_check):
+    assert query_check("near_dup_triangles") > 0
 
 
 def test_triangles_enumerated_exactly_once(spark):
@@ -56,17 +39,8 @@ def test_triangles_enumerated_exactly_once(spark):
     assert rows == [(1, 2, 3), (1, 2, 4), (1, 3, 4), (2, 3, 4)]
 
 
-def test_reachability_matches_oracle(spark, sf_dir):
-    import __spark_entry__ as entrymod
-    from tests.oracle import assert_matches_oracle
-
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["near_dup_reachability"],
-        entrymod.oracle_sql()["near_dup_reachability"],
-        sf_dir,
-    )
-    assert n > 0
+def test_reachability_matches_oracle(query_check):
+    assert query_check("near_dup_reachability") > 0
 
 
 def test_reachability_depth_bound(spark):
@@ -84,14 +58,8 @@ def test_reachability_depth_bound(spark):
     assert rows == {1: 0, 2: 1, 3: 2, 4: 3}
 
 
-def test_weighted_pagerank_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["near_dup_weighted_pagerank"],
-        entrymod.oracle_sql()["near_dup_weighted_pagerank"],
-        sf_dir,
-    )
-    assert n > 0
+def test_weighted_pagerank_matches_oracle(query_check):
+    assert query_check("near_dup_weighted_pagerank") > 0
 
 
 def test_weighted_pagerank_favors_strong_edges(spark):

@@ -40,9 +40,9 @@ WINDOW_QUERIES = [
 
 
 @pytest.mark.parametrize("name", JOIN_QUERIES + WINDOW_QUERIES)
-def test_matches_oracle(spark, sf_dir, name):
+def test_matches_oracle(query_check, name):
     # anti-join may legitimately return 0 rows; everything else must not.
-    n = assert_matches_oracle(spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir)
+    n = query_check(name)
     if name != "customers_anti_join":
         assert n > 0
 

@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import pytest
 
-import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
@@ -22,11 +20,8 @@ from tests.oracle import assert_matches_oracle
         "eval_decontamination",
     ],
 )
-def test_mixing_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_mixing_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def _docs(spark, rows):
@@ -157,11 +152,8 @@ def test_minhash_ml_crosscheck_agrees_on_clear_dups(spark):
         "common_sentence_filter",
     ],
 )
-def test_wave2_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave2_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_pca_finds_dominant_axis(spark):
@@ -263,11 +255,8 @@ def test_common_sentence_filter_flags_boilerplate(spark):
     "name",
     ["bpe_merge_candidates", "corpus_top_p_selection", "embedding_quantization_report"],
 )
-def test_wave3_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave3_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_bpe_candidates_weight_by_word_frequency(spark):
@@ -336,11 +325,8 @@ def test_quantization_report_exact_and_degenerate(spark):
     "name",
     ["leakage_safe_splits", "split_leakage_audit", "token_budget_allocation"],
 )
-def test_wave4_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave4_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_leakage_safe_splits_keep_components_together(spark):

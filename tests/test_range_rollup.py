@@ -2,13 +2,11 @@ from __future__ import annotations
 
 import __spark_entry__ as entrymod
 import pytest
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize("name", ["events_range_join", "multi_granularity_rollup"])
-def test_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir)
-    assert n > 0
+def test_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_range_join_buckets_are_lossless(spark):

@@ -6,8 +6,6 @@ crafted inputs (the reference's golden-twin discipline,
 
 from __future__ import annotations
 
-import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 ORACLE_BACKED = (
     "user_conversion_funnel",
@@ -19,12 +17,9 @@ ORACLE_BACKED = (
 )
 
 
-def test_round5_ops_match_oracle(spark, sf_dir):
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+def test_round5_ops_match_oracle(query_check):
     for name in ORACLE_BACKED:
-        n = assert_matches_oracle(spark, qs[name], oracles[name], sf_dir)
-        assert n > 0, name
+        assert query_check(name) > 0, name
 
 
 def test_funnel_steps_are_monotone(spark, sf_dir):

@@ -8,8 +8,6 @@ reference's golden-twin discipline,
 
 from __future__ import annotations
 
-import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 ORACLE_BACKED = (
     "block_dedup_fraction",
@@ -28,12 +26,9 @@ ORACLE_BACKED = (
 )
 
 
-def test_wave3_ops_match_oracle(spark, sf_dir):
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+def test_wave3_ops_match_oracle(query_check):
     for name in ORACLE_BACKED:
-        n = assert_matches_oracle(spark, qs[name], oracles[name], sf_dir)
-        assert n > 0, name
+        assert query_check(name) > 0, name
 
 
 def test_block_dedup_flags_shared_boilerplate(spark):
@@ -275,12 +270,9 @@ def test_centroid_outlier_is_the_planted_vector(spark):
     assert worst.vec_id == 50 and worst.cos_centroid == 0.0
 
 
-def test_qa_reports_match_oracle(spark, sf_dir):
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+def test_qa_reports_match_oracle(query_check):
     for name in ("ann_recall_report", "minhash_estimate_error"):
-        n = assert_matches_oracle(spark, qs[name], oracles[name], sf_dir)
-        assert n > 0, name
+        assert query_check(name) > 0, name
 
 
 def test_ann_recall_bounds_and_methods(spark, sf_dir):
@@ -310,12 +302,9 @@ def test_minhash_estimate_exact_for_identical_docs(spark):
     assert (1, 3) not in rows and (2, 3) not in rows
 
 
-def test_wave4_ops_match_oracle(spark, sf_dir):
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+def test_wave4_ops_match_oracle(query_check):
     for name in ("user_path_trigrams", "label_znorm_check"):
-        n = assert_matches_oracle(spark, qs[name], oracles[name], sf_dir)
-        assert n > 0, name
+        assert query_check(name) > 0, name
 
 
 def test_path_trigrams_counts_sliding_windows(spark):
@@ -358,12 +347,9 @@ def test_label_znorm_invariants(spark):
     assert out[10].mean_abs == 0.0 and out[10].l2 == 0.0
 
 
-def test_wave5_ops_match_oracle(spark, sf_dir):
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
+def test_wave5_ops_match_oracle(query_check):
     for name in ("char_trigram_logprob", "source_lang_entropy"):
-        n = assert_matches_oracle(spark, qs[name], oracles[name], sf_dir)
-        assert n > 0, name
+        assert query_check(name) > 0, name
 
 
 def test_trigram_logprob_flags_anomalous_doc(spark):

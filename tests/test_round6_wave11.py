@@ -7,19 +7,14 @@ from __future__ import annotations
 
 import pytest
 
-import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
     "name",
     ["bpe_learn_merges", "semdedup_survivors", "dataset_card_report"],
 )
-def test_wave11_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave11_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_bpe_learns_expected_merges(spark):

@@ -10,8 +10,6 @@ import datetime as dt
 
 import pytest
 
-import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
@@ -24,11 +22,8 @@ from tests.oracle import assert_matches_oracle
         "multi_touch_attribution",
     ],
 )
-def test_wave13_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave13_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_bpe_encode_survives_pair_exhaustion(spark):

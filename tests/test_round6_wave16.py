@@ -9,8 +9,6 @@ import datetime as dt
 
 import pytest
 
-import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
@@ -22,11 +20,8 @@ from tests.oracle import assert_matches_oracle
         "part_price_size_skyline",
     ],
 )
-def test_wave16_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave16_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def _order(okey, ckey, price, year):

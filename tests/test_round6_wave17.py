@@ -10,8 +10,6 @@ import datetime as dt
 
 import pytest
 
-import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
@@ -23,11 +21,8 @@ from tests.oracle import assert_matches_oracle
         "ab_conversion_ztest",
     ],
 )
-def test_wave17_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave17_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_curriculum_orders_by_quality(spark, sf_dir):

@@ -9,19 +9,14 @@ import datetime as dt
 
 import pytest
 
-import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
     "name",
     ["bpe_roundtrip_audit", "value_hour_regression", "value_qq_drift"],
 )
-def test_wave18_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave18_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_bpe_roundtrip_is_lossless(spark, sf_dir):

@@ -9,9 +9,7 @@ import datetime as dt
 
 import pytest
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import windows as W
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
@@ -23,11 +21,8 @@ from tests.oracle import assert_matches_oracle
         "max_concurrent_sessions",
     ],
 )
-def test_wave21_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave21_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def _ev(spark, rows):

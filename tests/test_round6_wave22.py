@@ -10,10 +10,8 @@ import math
 
 import pytest
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import analytics, windows as W
 from mapreduce_golang_spark.operators import text_analysis as T
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
@@ -25,11 +23,8 @@ from tests.oracle import assert_matches_oracle
         "user_journey_signatures",
     ],
 )
-def test_wave22_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave22_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_cross_entropy_diagonal_is_row_minimum(spark, sf_dir):

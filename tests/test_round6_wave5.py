@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import pytest
 
-import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
@@ -21,11 +19,8 @@ from tests.oracle import assert_matches_oracle
         "kmeans_silhouette",
     ],
 )
-def test_wave5_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave5_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_ccnet_sample_policy(spark, sf_dir):

@@ -7,19 +7,14 @@ from __future__ import annotations
 
 import pytest
 
-import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
     "name",
     ["hot_shingles_report", "value_equidepth_bins", "mmr_diverse_topk"],
 )
-def test_wave8_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave8_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_hot_shingles_flags_cap_crossers(spark):

@@ -9,19 +9,14 @@ import datetime as dt
 
 import pytest
 
-import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
     "name",
     ["rake_keywords", "char_script_profile", "markov_prediction_accuracy"],
 )
-def test_wave9_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave9_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_rake_scores_multiword_phrases_over_fragments(spark):

@@ -8,15 +8,11 @@ import pytest
 
 import __spark_entry__ as entrymod
 from mapreduce_golang_spark.sources.tables import load_table
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize("name", ["source_shingle_overlap", "trigram_novelty_curve"])
-def test_wave1_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave1_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_overlap_containment_algebra(spark, sf_dir):

@@ -15,7 +15,6 @@ import pytest
 import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import analytics as A
 from mapreduce_golang_spark.operators import windows as W
-from tests.oracle import assert_matches_oracle
 
 WAVE30 = ["nation_revenue_inequality", "nelson_aalen_hazard"]
 
@@ -36,11 +35,8 @@ _T0 = dt.datetime(2024, 1, 1)
 
 
 @pytest.mark.parametrize("name", WAVE30)
-def test_wave30_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave30_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def _fixture(spark, rev_by_cust_nation):

@@ -13,10 +13,8 @@ import math
 
 import pytest
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import analytics as A
 from mapreduce_golang_spark.operators import text_analysis as T
-from tests.oracle import assert_matches_oracle
 
 WAVE31 = [
     "tfidf_cosine_pairs",
@@ -39,11 +37,8 @@ def _docs(spark, rows):
 
 
 @pytest.mark.parametrize("name", WAVE31)
-def test_wave31_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave31_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_tfidf_cosine_identical_docs_hit_one(spark):

@@ -11,9 +11,7 @@ import datetime as dt
 
 import pytest
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import windows as W
-from tests.oracle import assert_matches_oracle
 
 _EV_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -33,14 +31,8 @@ def _hourly(spark, counts_by_hour, etype="a"):
     return spark.createDataFrame(rows, _EV_SCHEMA)
 
 
-def test_segmented_trend_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["changepoint_segmented_trend"],
-        entrymod.oracle_sql()["changepoint_segmented_trend"],
-        sf_dir,
-    )
-    assert n > 0
+def test_segmented_trend_matches_oracle(query_check):
+    assert query_check("changepoint_segmented_trend") > 0
 
 
 def test_segmented_trend_clean_step(spark):

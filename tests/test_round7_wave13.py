@@ -11,9 +11,7 @@ import math
 
 import pytest
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import analytics as A
-from tests.oracle import assert_matches_oracle
 
 WAVE33 = ["basket_triple_itemsets", "weekly_psi_series", "neyman_allocation"]
 
@@ -31,11 +29,8 @@ def _li(spark, baskets):
 
 
 @pytest.mark.parametrize("name", WAVE33)
-def test_wave33_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave33_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_triples_known_baskets(spark):

@@ -8,9 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import analytics as A
-from tests.oracle import assert_matches_oracle
 
 _ORD_SCHEMA = (
     "o_orderkey long, o_custkey long, o_orderstatus string, "
@@ -23,14 +21,8 @@ _LI_SCHEMA = (
 _T0 = dt.datetime(2024, 1, 1)
 
 
-def test_reconciliation_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["order_reconciliation_audit"],
-        entrymod.oracle_sql()["order_reconciliation_audit"],
-        sf_dir,
-    )
-    assert n > 0
+def test_reconciliation_matches_oracle(query_check):
+    assert query_check("order_reconciliation_audit") > 0
 
 
 def test_reconciliation_crafted_book(spark):

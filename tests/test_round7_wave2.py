@@ -12,11 +12,9 @@ import datetime as dt
 
 import pytest
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import analytics as A
 from mapreduce_golang_spark.operators import text_analysis as T
 from mapreduce_golang_spark.operators import windows as W
-from tests.oracle import assert_matches_oracle
 
 WAVE23 = [
     "spearman_time_value",
@@ -48,11 +46,8 @@ def _t(day, hour=0, minute=0):
 
 
 @pytest.mark.parametrize("name", WAVE23)
-def test_wave23_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave23_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_spearman_monotone_is_one(spark):

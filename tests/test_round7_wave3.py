@@ -11,11 +11,9 @@ import math
 
 import pytest
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import analytics as A
 from mapreduce_golang_spark.operators import similarity as S
 from mapreduce_golang_spark.operators import text_analysis as T
-from tests.oracle import assert_matches_oracle
 
 WAVE24 = [
     "lineitem_column_profile",
@@ -38,11 +36,8 @@ _DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars lon
 
 
 @pytest.mark.parametrize("name", WAVE24)
-def test_wave24_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave24_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_column_profile_counts_nulls_and_distincts(spark):

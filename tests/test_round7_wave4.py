@@ -12,11 +12,9 @@ import math
 
 import pytest
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import dedup as D
 from mapreduce_golang_spark.operators import text_analysis as T
 from mapreduce_golang_spark.operators import windows as W
-from tests.oracle import assert_matches_oracle
 
 WAVE25 = [
     "prefix_filter_jaccard_pairs",
@@ -41,11 +39,8 @@ def _docs(rows, spark):
 
 
 @pytest.mark.parametrize("name", WAVE25)
-def test_wave25_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave25_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_prefix_filter_equals_exact_all_pairs(spark, sf_dir):

@@ -13,12 +13,10 @@ import math
 
 import pytest
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import analytics as A
 from mapreduce_golang_spark.operators import similarity as S
 from mapreduce_golang_spark.operators import text_analysis as T
 from mapreduce_golang_spark.operators import windows as W
-from tests.oracle import assert_matches_oracle
 
 WAVE26 = [
     "cramers_v_order_attrs",
@@ -64,11 +62,8 @@ def _events(spark, seq_by_user):
 
 
 @pytest.mark.parametrize("name", WAVE26)
-def test_wave26_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave26_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_cramers_v_independent_is_zero(spark):

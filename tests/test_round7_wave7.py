@@ -11,9 +11,7 @@ import datetime as dt
 
 import pytest
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import analytics as A
-from tests.oracle import assert_matches_oracle
 
 _EV_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
@@ -28,13 +26,8 @@ def _ev(spark, rows):
     )
 
 
-def test_distribution_distances_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["value_distribution_distances"],
-        entrymod.oracle_sql()["value_distribution_distances"],
-        sf_dir,
-    )
+def test_distribution_distances_matches_oracle(query_check):
+    n = query_check("value_distribution_distances")
     # 5 event types in the synthetic tables → C(5,2) pairs
     assert n == 10
 

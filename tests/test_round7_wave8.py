@@ -10,9 +10,7 @@ import math
 
 import pytest
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import analytics as A
-from tests.oracle import assert_matches_oracle
 
 WAVE28 = [
     "join_key_skew_advisory",
@@ -28,11 +26,8 @@ def _li(spark, rows):
 
 
 @pytest.mark.parametrize("name", WAVE28)
-def test_wave28_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave28_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_skew_advisory_known_distribution(spark):

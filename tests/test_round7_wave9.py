@@ -11,10 +11,8 @@ import math
 
 import pytest
 
-import __spark_entry__ as entrymod
 from mapreduce_golang_spark.operators import analytics as A
 from mapreduce_golang_spark.operators import text_analysis as T
-from tests.oracle import assert_matches_oracle
 
 WAVE29 = [
     "flesch_reading_ease_by_source",
@@ -34,11 +32,8 @@ _LI_SCHEMA = (
 
 
 @pytest.mark.parametrize("name", WAVE29)
-def test_wave29_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_wave29_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_flesch_known_text(spark):

@@ -5,21 +5,16 @@ and the CDC MERGE surface (I/U/D + out-of-order sequence resolution).
 
 from __future__ import annotations
 
-import __spark_entry__ as entrymod
 import pytest
 from pyspark.sql import functions as F
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
     "name",
     ["cdc_orders_state", "streaming_near_dup_docs", "polymorphic_trigram_topk"],
 )
-def test_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 # --- cdc_apply_changes unit semantics --------------------------------------
@@ -213,14 +208,8 @@ def test_streaming_near_dup_collapses_near_identical(spark, tmp_path):
 # --- hierarchical SemDeDup (wave 35 scale path) ------------------------------
 
 
-def test_semdedup_hier_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["semdedup_hier_survivors"],
-        entrymod.oracle_sql()["semdedup_hier_survivors"],
-        sf_dir,
-    )
-    assert n > 0
+def test_semdedup_hier_matches_oracle(query_check):
+    assert query_check("semdedup_hier_survivors") > 0
 
 
 def test_semdedup_hier_drops_exact_duplicates(spark):

@@ -7,17 +7,10 @@ from __future__ import annotations
 
 import __spark_entry__ as entrymod
 from pyspark.sql import functions as F
-from tests.oracle import assert_matches_oracle
 
 
-def test_salted_segment_value_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["salted_segment_value"],
-        entrymod.oracle_sql()["salted_segment_value"],
-        sf_dir,
-    )
-    assert n > 0
+def test_salted_segment_value_matches_oracle(query_check):
+    assert query_check("salted_segment_value") > 0
 
 
 def _skewed_fixture(spark):
@@ -133,14 +126,8 @@ def test_near_dup_stream_foreachbatch_parquet_sink(spark, sf_dir, tmp_path):
 # --- table-argument UDTF (wave 36 second entry) -------------------------------
 
 
-def test_sessionize_table_udtf_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["sessionize_table_udtf"],
-        entrymod.oracle_sql()["sessionize_table_udtf"],
-        sf_dir,
-    )
-    assert n > 0
+def test_sessionize_table_udtf_matches_oracle(query_check):
+    assert query_check("sessionize_table_udtf") > 0
 
 
 def test_sessionize_table_udtf_equals_window_form(spark, sf_dir):
@@ -197,14 +184,8 @@ def test_sessionize_udtf_splits_on_gap(spark):
 # --- cogrouped-map as-of join (wave 36 third entry) ---------------------------
 
 
-def test_asof_cogrouped_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["asof_cogrouped_clicks"],
-        entrymod.oracle_sql()["asof_cogrouped_clicks"],
-        sf_dir,
-    )
-    assert n > 0
+def test_asof_cogrouped_matches_oracle(query_check):
+    assert query_check("asof_cogrouped_clicks") > 0
 
 
 def test_asof_cogrouped_equals_window_form(spark, sf_dir):
@@ -287,14 +268,8 @@ def test_cogroup_self_pruning_sharp_edge(spark, sf_dir):
 # --- Observation-API ride-along metrics (wave 36 fourth entry) ---------------
 
 
-def test_observed_ingest_metrics_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["observed_ingest_metrics"],
-        entrymod.oracle_sql()["observed_ingest_metrics"],
-        sf_dir,
-    )
-    assert n == 1
+def test_observed_ingest_metrics_matches_oracle(query_check):
+    assert query_check("observed_ingest_metrics") == 1
 
 
 def test_observed_metrics_equal_second_pass_scan(spark, sf_dir):

@@ -2,13 +2,11 @@ from __future__ import annotations
 
 import __spark_entry__ as entrymod
 import pytest
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize("name", ["ann_topk_bruteforce", "ann_ivf_topk", "ann_lsh_topk"])
-def test_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir)
-    assert n > 0
+def test_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_ann_variants_are_subsets_of_their_candidate_space(spark, sf_dir):
@@ -77,17 +75,8 @@ def test_bruteforce_topk_shape(spark, sf_dir):
         assert all(ordered[i].cosine >= ordered[i + 1].cosine for i in range(4))
 
 
-def test_semantic_dedup_survivors_matches_oracle(spark, sf_dir):
-    import __spark_entry__ as entrymod
-    from tests.oracle import assert_matches_oracle
-
-    n = assert_matches_oracle(
-        spark,
-        entrymod.queries()["semantic_dedup_survivors"],
-        entrymod.oracle_sql()["semantic_dedup_survivors"],
-        sf_dir,
-    )
-    assert n > 0
+def test_semantic_dedup_survivors_matches_oracle(query_check):
+    assert query_check("semantic_dedup_survivors") > 0
 
 
 def test_semantic_dedup_drops_only_bucket_pairs(spark, sf_dir):

@@ -20,8 +20,8 @@ from tests.oracle import assert_matches_oracle
         "media_features",
     ],
 )
-def test_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir)
+def test_matches_oracle(query_check, name):
+    n = query_check(name)
     # at sf0.001 no hour reaches the ≥5-errors incident threshold
     # (106 hours qualify at the driver's sf0.01)
     if name != "streaming_incident_hours":

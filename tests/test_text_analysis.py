@@ -1,8 +1,6 @@
 from __future__ import annotations
 
-import __spark_entry__ as entrymod
 import pytest
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
@@ -23,9 +21,8 @@ from tests.oracle import assert_matches_oracle
         "bigram_counts",
     ],
 )
-def test_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir)
-    assert n > 0
+def test_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_lang_id_unknown_for_empty(spark):

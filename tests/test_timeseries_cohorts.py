@@ -8,7 +8,6 @@ from __future__ import annotations
 import __spark_entry__ as entrymod
 import pytest
 from pyspark.sql import functions as F
-from tests.oracle import assert_matches_oracle
 
 NEW_QUERIES = [
     "hopping_window_counts",
@@ -25,11 +24,8 @@ NEW_QUERIES = [
 
 
 @pytest.mark.parametrize("name", NEW_QUERIES)
-def test_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
-    assert n > 0
+def test_matches_oracle(query_check, name):
+    assert query_check(name) > 0
 
 
 def test_hopping_assigns_two_windows_per_event(spark, sf_dir):

@@ -9,8 +9,6 @@ import datetime as dt
 
 import pytest
 
-import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 
 @pytest.mark.parametrize(
@@ -27,10 +25,8 @@ from tests.oracle import assert_matches_oracle
         "source_quality_drift",
     ],
 )
-def test_wave6_matches_oracle(spark, sf_dir, name):
-    n = assert_matches_oracle(
-        spark, entrymod.queries()[name], entrymod.oracle_sql()[name], sf_dir
-    )
+def test_wave6_matches_oracle(query_check, name):
+    n = query_check(name)
     # at the smallest fixture the 2-core and the ≥5-errors/hour
     # incident set can legitimately be empty (both are non-empty at
     # the driver's sf0.01); everything else must produce rows

@@ -1,12 +1,10 @@
 from __future__ import annotations
 
 import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
 
 
-def test_wc_matches_oracle(spark, sf_dir):
-    n = assert_matches_oracle(spark, entrymod.queries()["wc"], entrymod.oracle_sql()["wc"], sf_dir)
-    assert n > 0
+def test_wc_matches_oracle(query_check):
+    assert query_check("wc") > 0
 
 
 def test_tokenizer_go_semantics(spark):
