@@ -220,7 +220,8 @@ def _cached_table(spark, sf_dir: str, what: str, build) -> DataFrame:
 def reset_derived_caches() -> None:
     """Drop every session-lived materialize-once derivation (the pair
     graph + _DERIVED_CACHE tables) so the next consumer re-derives from
-    scratch. For BENCHMARK HONESTY only (scripts/scaling_xl_median.py:
+    scratch. For BENCHMARK HONESTY only (scripts/scaling_xl_median.py
+    at commit 82bf044:
     a min-of-N loop that doesn't clear these reports ~0 s cached minima
     for shared-derivation probes — round-8 advice); never needed for
     correctness, since every consumer is independently correct without
@@ -1337,7 +1338,7 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "foreach_batch_fanout": _foreach_batch_fanout,
     # num_features=None: corpus-scaled HashingTF sizing (next pow2 ≥ 4×
     # approx distinct shingles), measured on the same ladder as the
-    # pinned crosscheck (SCALING_XL.md)
+    # pinned crosscheck (PERF.md)
     "minhash_ml_crosscheck_scaled": _op(
         dedup.minhash_ml_crosscheck, "documents", num_features=None,
     ),
@@ -1991,7 +1992,7 @@ def _pagerank_oracle() -> str:
     chained = ",\n    ".join(steps)
     return f"""
     WITH {_NGRAM_PAIRS_SQL},
-    edges AS (
+    edges AS MATERIALIZED (
         SELECT doc_a AS u, doc_b AS v FROM pairs
         UNION
         SELECT doc_b AS u, doc_a AS v FROM pairs

@@ -2111,7 +2111,7 @@ def join_key_skew_advisory(lineitem: DataFrame, key: str = "l_partkey") -> DataF
     ratio, and a recommended salt factor — the pre-flight check this
     engine itself needs before shuffling 100 TB on a key (AQE's
     skew-join split reads COMPRESSED shuffle bytes and misses
-    low-entropy hot keys — see SKEW_AB.md — so a row-count advisory
+    low-entropy hot keys — see PERF.md — so a row-count advisory
     is the reliable planning input).
 
     Scale shape: one hash agg to the per-key count table, then ONE

@@ -1025,7 +1025,8 @@ def _simhash_narrow(df: DataFrame, n_bits: int, contrib_expr: str, text_col: str
     copy BELOW the widen exchange, serial on the fixture's one parquet
     split. With the cheap predicate the widen gate finally bites on
     this zero-shuffle kernel: simhash64 2.77 → 0.44 s min-of-5 at
-    sf0.1, outputs bit-identical (scripts/ab_filter_pushdup.py).
+    sf0.1, outputs bit-identical (scripts/ab_filter_pushdup.py at
+    commit 82bf044).
     """
     df = widen_for_cpu(df, key_col=text_col)
     # double the backslashes: the regex rides inside a SQL string
@@ -1307,7 +1308,7 @@ def overlap_containment_pairs(
     is ever shipped per candidate. The naive candidate-distinct +
     full-array verify this replaced moved every doc's complete shingle
     array through the join: 2× slower at sf0.1 and 5.1× super-linear
-    across a 10× corpus (SCALING.md, now 2.7× — the residual growth is
+    across a 10× corpus (PERF.md, now 2.7× — the residual growth is
     the pair-output term shared with minhash/jaccard), with unbounded
     per-row memory on boilerplate-heavy corpora. Returns
     (doc_a, doc_b, containment), doc_a < doc_b.

@@ -367,8 +367,8 @@ def split_leakage_audit(
         # job at construction time, and separate jobs cannot share
         # exchanges — un-checkpointed, the pair derivation ran once for
         # that setup and again for the two audit legs. Round-14 A/B
-        # (scripts/ab_split_audit_ckpt.py): 8.83 → 6.30 s min-of-6
-        # interleaved, outputs identical.
+        # (scripts/ab_split_audit_ckpt.py at commit 82bf044): 8.83 →
+        # 6.30 s min-of-6 interleaved, outputs identical.
         pairs = ngram_jaccard_pairs(df).localCheckpoint(eager=True)
 
     def _bucket_to_split(bucket):

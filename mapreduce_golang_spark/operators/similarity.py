@@ -751,7 +751,8 @@ def mmr_diverse_topk(embeddings: DataFrame, k: int = 10, lam: float = MMR_LAMBDA
     candidates exclude picks 1..i−1, the same set the former
     anti-join produced). Candidate lineage (narrow 1-row-broadcast
     joins) is truncated every second round — A/B'd faster than never
-    checkpointing (min 2.17 vs 2.74 s, scripts/ab_mmr_incremental.py)
+    checkpointing (min 2.17 vs 2.74 s, scripts/ab_mmr_incremental.py
+    at commit 82bf044)
     — the loop discipline of operators/graph.py.
 
     Scale shape per round: one 1-row broadcast, one narrow scoring
@@ -968,7 +969,7 @@ def semdedup_hier_survivors(
     scale path for the auto-k regime. The flat operator's bill is
     n × k distance evaluations per pass, and with the self-tuning
     k = n/ROWS_PER_CLUSTER that is n²/ROWS_PER_CLUSTER — measured as
-    1.29× per-row µs growth across a 30× corpus spread (SCALING_XL.md).
+    1.29× per-row µs growth across a 30× corpus spread (PERF.md).
     Splitting the fit into k1 = ⌈√k⌉ coarse cells (full-corpus Lloyd's)
     and k2 = ⌈k/k1⌉ subclusters fitted INSIDE each cell drops the bill
     to n × (k1 + k2) ≈ n × 2√k ∝ n^1.5 while keeping ~ROWS_PER_CLUSTER

@@ -67,7 +67,7 @@ def salted_join(
     salt_from: str | None = None,
 ) -> DataFrame:
     """APPLIED salted equi-join — the explicit defense for the skew case
-    AQE's skew split provably misses (SKEW_AB.md experiment D: skew
+    AQE's skew split provably misses (PERF.md, experiment D: skew
     detection reads COMPRESSED shuffle bytes, so a low-entropy hot key
     whose partition crushes ~100x under lz4 evades the split and
     serializes into one sort-merge task; join_key_skew_advisory's

@@ -525,7 +525,7 @@ def bigram_counts(df: DataFrame, k: int = 50) -> DataFrame:
     The bigram array is built with a narrow ``zip_with`` over two
     shifted slices of the token array and exploded INLINE in the same
     Generate (an intermediate projection between an array expr and its
-    explode measurably regresses — see PLANS.md), so the only exchange
+    explode measurably regresses — see PERF.md), so the only exchange
     is the count aggregation's, with map-side partials. Ties at the
     limit boundary are broken by the bigram text for a fully
     deterministic top-k.

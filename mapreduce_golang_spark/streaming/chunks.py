@@ -40,9 +40,9 @@ def build_plain_chunks(
     overlap inside the one Spark app (optimization-guide §2.6) instead
     of serializing N scan+filter+write round trips — round-14 A/B:
     0.98 → 0.38 s min-of-6 for the 4-chunk build, per-chunk row sets
-    identical (scripts/ab_chunk_build.py). mtimes are assigned from
-    the chunk INDEX, not completion order, so the streaming source's
-    oldest-first drain order is unchanged."""
+    identical (scripts/ab_chunk_build.py at commit 82bf044). mtimes
+    are assigned from the chunk INDEX, not completion order, so the
+    streaming source's oldest-first drain order is unchanged."""
     from ..sources.tables import load_table
 
     lo, hi = chunk_range if chunk_range is not None else (0, n_chunks)

@@ -702,11 +702,11 @@ def near_dup_survivors_stream(
     # shingle build TWICE per doc — once in the pushed-down Filter at
     # the scan (serially, on the fixture's one split) and again in the
     # Project. Measured at sf0.1 batch-side: 0.32 s → 3.3 s from the
-    # filter alone (scripts/ab_sig_decompose.py). Filtering on
-    # size(toks) duplicates only the split — the cheap ~5% — and is
-    # exactly equivalent: sh is non-empty iff the doc has ≥ k tokens,
-    # which also makes the old CASE WHEN descending-sequence guard
-    # unreachable (sequence(1, size-k+1) ascends whenever size ≥ k).
+    # filter alone (scripts/ab_sig_decompose.py at commit 82bf044).
+    # Filtering on size(toks) duplicates only the split — the cheap
+    # ~5% — and is exactly equivalent: sh is non-empty iff the doc has
+    # ≥ k tokens, which also makes the old CASE WHEN descending-sequence
+    # guard unreachable (sequence(1, size-k+1) ascends whenever size ≥ k).
     toks = docs.select(
         "doc_id",
         "source",

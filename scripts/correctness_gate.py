@@ -9,6 +9,9 @@ count + sorted-column schema + order-insensitive canonical value
 match — over EVERY registered query and writes ``CORRECTNESS_FULL.json``
 at the repo root, so the complete surface has a committed hard artifact
 every round regardless of the driver's window.
+A float cell that is -0.0 on either side fails its query
+(``negzero_cols``): a compare of rendered values sees "-0" and "0" as
+different.
 
 Mirrors the reference's sort-then-compare discipline
 (/root/reference/src/main/test-mr.sh:90-91).
@@ -54,9 +57,8 @@ def main() -> int:
                 "sf_dir": sf_dir,
                 "n_queries": len(qs),
                 "n_green": sum(1 for r in results.values() if _green(r)),
-                "n_rows_only": sum(
-                    1 for r in results.values() if r["err"] == "no_oracle" and r["spark_rows"] is not None
-                ),
+                "n_rows_only": sum(1 for r in results.values() if _rows_only(r)),
+                "n_negzero": sum(1 for r in results.values() if r["negzero_cols"]),
                 "wall_s": round(time.time() - t_start, 1),
                 "queries": results,
             },
@@ -75,15 +77,15 @@ def main() -> int:
 def _green(row: dict) -> bool:
     # The driver gate requires column-name equality as well as value hash —
     # mirror both (ADVICE round 3).
-    return bool(row["hash_match"] and row["schema_match"])
+    return bool(row["hash_match"] and row["schema_match"] and not row["negzero_cols"])
 
 
 def _rows_only(row: dict) -> bool:
-    return row["err"] == "no_oracle" and row["spark_rows"] is not None
+    return row["err"] == "no_oracle" and row["spark_rows"] is not None and not row["negzero_cols"]
 
 
 def _run_all(spark, sf_dir, qs, oracles, results) -> None:
-    from tests.oracle import compare_rowsets, run_oracle
+    from tests.oracle import compare_rowsets, negzero_columns, run_oracle
 
     for i, (name, fn) in enumerate(qs.items()):
         row = {
@@ -92,18 +94,21 @@ def _run_all(spark, sf_dir, qs, oracles, results) -> None:
             "hash_match": None,
             "spark_rows": None,
             "oracle_rows": None,
+            "negzero_cols": [],
             "err": None,
         }
         t0 = time.time()
         try:
             spark_pdf = fn(spark, sf_dir).toPandas()
             row["spark_rows"] = len(spark_pdf)
+            row["negzero_cols"] = [f"spark:{c}" for c in negzero_columns(spark_pdf)]
             sql = oracles.get(name)
             if sql is None:
                 row["err"] = "no_oracle"
             else:
                 oracle_pdf = run_oracle(sql, sf_dir)
                 row["oracle_rows"] = len(oracle_pdf)
+                row["negzero_cols"] += [f"oracle:{c}" for c in negzero_columns(oracle_pdf)]
                 checks, _ = compare_rowsets(spark_pdf, oracle_pdf)
                 row.update(checks)
         except Exception as exc:  # noqa: BLE001 — gate must record, not die

@@ -64,6 +64,22 @@ def _rowset(df) -> tuple[list[str], list[tuple[str, ...]]]:
     return cols, sorted(rows)
 
 
+def negzero_columns(pdf) -> list[str]:
+    """Columns of a pandas result holding a float cell that is -0.0.
+
+    ``_canon`` folds -0.0 into 0.0, but a compare of rendered values
+    sees "-0" and "0" as different: a signed round that lands on
+    zero must add ``+ 0.0`` on both sides (lineitem_price_stats,
+    type_hourly_correlation, zipf_slope, ...). This is the raw check,
+    before any canonicalisation.
+    """
+    return [
+        c
+        for c in pdf.columns
+        if any(isinstance(v, float) and v == 0.0 and math.copysign(1.0, v) < 0 for v in pdf[c])
+    ]
+
+
 def run_oracle(sql: str, sf_dir: str):
     """The DuckDB oracle's result over ``sf_dir``, as a pandas DataFrame."""
     con = duckdb_connect(sf_dir)

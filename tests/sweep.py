@@ -5,11 +5,14 @@ test ids for the same queries.
 
 The check builds the DataFrame, audits its executed plan before any
 action, collects it and compares the rowset with the query's DuckDB
-oracle. The plan audit: a CartesianProduct anywhere, or a
-BroadcastNestedLoopJoin that is not a bounded broadcast, is a plan that
-dies at 100 TB. It caught near_dup_reachability's OR-join (frontier ⋈
-edges on doc_a OR doc_b planned as a per-iteration nested loop), now a
-symmetric-edge equi-join. Streaming queries are not audited: their
+oracle. Neither result may hold a -0.0 float cell
+(``tests/oracle.py::negzero_columns``): the rowset compare folds it
+into 0.0, a compare of rendered values does not. The plan audit: a
+CartesianProduct anywhere, or a BroadcastNestedLoopJoin that is not a
+bounded broadcast, is a plan that dies at 100 TB. It caught
+near_dup_reachability's OR-join (frontier ⋈ edges on doc_a OR doc_b
+planned as a per-iteration nested loop), now a symmetric-edge
+equi-join. Streaming queries are not audited: their
 sinks return memory-table results whose batch plan is a LocalTableScan;
 their stateful plans are covered in tests/test_streaming_*.
 """
@@ -17,7 +20,7 @@ their stateful plans are covered in tests/test_streaming_*.
 from __future__ import annotations
 
 import __spark_entry__ as entrymod
-from tests.oracle import assert_same_rowset, run_oracle
+from tests.oracle import assert_same_rowset, negzero_columns, run_oracle
 
 #: The only queries without an oracle: the HLL sketch and the MLlib
 #: MinHashLSH cross-checks (seeded library hashes are not
@@ -30,7 +33,8 @@ ROWS_ONLY = frozenset(
 #: Queries whose result is legitimately empty at the test scale (sf0.001),
 #: with the reason. Every other query must return rows.
 EMPTY_OK: dict[str, str] = {
-    "customers_anti_join": "every fixture customer has an order (empty at sf0.01 too)",
+    "customers_anti_join": "every fixture customer has an order (empty at sf0.01 too); "
+    "tests/test_joins_windows.py::test_customers_anti_join_matches_oracle_with_orphans gives it rows",
     "q7_volume_shipping": "too few supplier/customer nation pairs at sf0.001; 14 rows at sf0.01",
     "q20_dominant_suppliers": "no dominant supplier at sf0.001",
     "q21_suppliers_kept_waiting": "no finalized order with exactly one late supplier at sf0.001",
@@ -123,9 +127,12 @@ def check_query(spark, sf_dir: str, name: str) -> int:
         nlj = plan.count("BroadcastNestedLoopJoin")
         assert nlj == _BOUNDED_NLJ_OK.get(name, 0), (name, nlj)
     pdf = df.toPandas()
+    assert not negzero_columns(pdf), (name, "spark -0.0", negzero_columns(pdf))
     if name in ROWS_ONLY:
         assert len(pdf) > 0, name
         return len(pdf)
-    n = assert_same_rowset(pdf, run_oracle(entrymod.oracle_sql()[name], sf_dir))
+    oracle_pdf = run_oracle(entrymod.oracle_sql()[name], sf_dir)
+    assert not negzero_columns(oracle_pdf), (name, "oracle -0.0", negzero_columns(oracle_pdf))
+    n = assert_same_rowset(pdf, oracle_pdf)
     assert n > 0 or name in EMPTY_OK, f"{name}: empty result"
     return n

@@ -130,7 +130,7 @@ def test_minhash_crosscheck_scaled_floors_to_pinned_at_fixture_scale(spark, sf_d
     floors to the library default and must reproduce the pinned
     variant EXACTLY (same HashingTF space, same seed, same joins) —
     the two legs only diverge once the corpus outgrows the pin, which
-    SCALING_XL's 100x pair measures."""
+    the 100x pair in PERF.md measures."""
     from mapreduce_golang_spark.operators.dedup import minhash_ml_crosscheck
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

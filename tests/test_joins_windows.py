@@ -1,8 +1,9 @@
 from __future__ import annotations
 
 import __spark_entry__ as entrymod
+import duckdb
 import pytest
-from tests.oracle import assert_matches_oracle
+from tests.oracle import TABLES, assert_matches_oracle
 
 JOIN_QUERIES = [
     "q1_pricing_summary",
@@ -45,6 +46,22 @@ def test_matches_oracle(query_check, name):
     n = query_check(name)
     if name != "customers_anti_join":
         assert n > 0
+
+
+def test_customers_anti_join_matches_oracle_with_orphans(spark, sf_dir, tmp_path):
+    # every fixture customer has an order, so the anti-join is empty at
+    # every committed scale; dropping every order of each customer with
+    # o_custkey % 7 = 0 gives it rows to get right
+    for t in TABLES:
+        if t != "orders":
+            (tmp_path / f"{t}.parquet").symlink_to(f"{sf_dir}/{t}.parquet")
+    duckdb.execute(
+        f"COPY (SELECT * FROM '{sf_dir}/orders.parquet' WHERE o_custkey % 7 <> 0) "
+        f"TO '{tmp_path}/orders.parquet' (FORMAT parquet)"
+    )
+    name = "customers_anti_join"
+    n = assert_matches_oracle(spark, entrymod.queries()[name], entrymod.oracle_sql()[name], str(tmp_path))
+    assert n > 0
 
 
 def test_q7_matches_oracle_sf001(spark):

@@ -131,7 +131,8 @@ def test_simhash_signature_is_narrow(spark, sf_dir):
     # fixture-narrow scan the ONLY exchange is the gate's text-hash
     # widen, and the cheap rlike token filter must sit AT the scan
     # (pushed below the exchange) rather than duplicating the sort+
-    # split tokenize there (round 14, scripts/ab_filter_pushdup.py).
+    # split tokenize there (round 14, scripts/ab_filter_pushdup.py at
+    # commit 82bf044).
     from mapreduce_golang_spark.operators.dedup import simhash, simhash64
     from mapreduce_golang_spark.sources.tables import load_table
 

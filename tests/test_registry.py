@@ -4,10 +4,11 @@ its plan audited and its rowset compared with its DuckDB oracle
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.oracle import assert_matches_oracle
+from tests.oracle import assert_matches_oracle, negzero_columns
 from tests.sweep import ROWS_ONLY
 
 
@@ -25,6 +26,15 @@ def test_every_query_has_oracle_or_documented_exemption():
     # oracle-checkable queries may sit there
     window = list(entrymod.queries())[:50]
     assert len(window) == 50 and set(window) <= oracles, set(window) - oracles
+
+
+def test_negzero_columns_finds_signed_zeros():
+    # the sweep's raw -0.0 check: float columns and floats inside object
+    # columns, never a +0.0 or an integer 0
+    pdf = pd.DataFrame(
+        {"f": [1.0, -0.0], "ok": [0.0, -1.0], "o": ["x", -0.0], "s": ["-0.0", 0], "i": [0, 0]}
+    )
+    assert negzero_columns(pdf) == ["f", "o"]
 
 
 def test_query_pins_utc_on_a_session_in_another_zone(spark, sf_dir):

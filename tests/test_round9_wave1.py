@@ -1,6 +1,6 @@
 """Round-9 wave 36: the APPLIED salted join (operators/skew.py::
 salted_join) — the explicit defense for the skew case AQE's byte-based
-skew detection misses (SKEW_AB.md experiment D), plus its driver-
+skew detection misses (PERF.md, experiment D), plus its driver-
 contract registration (salted_segment_value)."""
 
 from __future__ import annotations

@@ -14,8 +14,9 @@ runtime SQLConf — settable per read, no session restart — which is what
 lets one pipeline read its compacted 1 GB shards at 128 MB splits and a
 fragmented streaming-ingest landing zone with aggressive packing.
 
-The numbers asserted here are the contract the 100 TB sizing note in
-SCALING.md relies on; scripts/skew_ab.py records the measured side.
+The numbers asserted here are the contract the scan-split sizing
+finding in PERF.md relies on; scripts/skew_ab.py at commit 82bf044
+recorded the measured side.
 """
 
 from __future__ import annotations
