@@ -13,15 +13,20 @@ at small SF *and* sanity at cluster scale:
 - session timezone pinned UTC so timestamp semantics match the DuckDB
   oracle (duckdb timestamps are UTC-naive).
 - Arrow enabled: every pandas-UDF / toPandas crossing is vectorized.
+- the driver JVM maps a cached class-data archive when one exists
+  (cds.py): `get_spark` takes ~3.5 s instead of ~7 s.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
 
 from pyspark.sql import SparkSession
+
+from mapreduce_golang_spark import cds
 
 _SHIPPED_APPS: set[str] = set()
 _ARCHIVE_DIR: str | None = None
@@ -37,9 +42,9 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     repo root. addPyFile is the same mechanism ``--py-files`` uses on
     a real cluster, so this is the deployment story at scale too.
 
-    The archive lives in a per-process mkdtemp and is named per
-    applicationId, so concurrent sessions (bench + pytest, multiple
-    users) never rewrite a zip another context's executors are
+    The archive lives in a per-process mkdtemp, removed at exit, and is
+    named per applicationId, so concurrent sessions (bench + pytest,
+    multiple users) never rewrite a zip another context's executors are
     fetching; keying the shipped-set on applicationId (not id(sc))
     survives id() reuse after GC.
     """
@@ -77,19 +82,10 @@ def _default_shuffle_partitions() -> int:
     return 32
 
 
-def get_spark(app_name: str = "mapreduce-golang-spark", master: str | None = None) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's defaults.
-
-    If a session already exists, ``getOrCreate`` returns it and the
-    configs below are no-ops — callers on a real cluster submit with
-    their own master/conf and this function simply adopts it.
-    """
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        ensure_package_shipped(active)
-        return active
-
-    builder = (
+def session_builder(app_name: str, master: str | None, driver_java_options: str) -> SparkSession.Builder:
+    """The engine's session defaults; ``get_spark`` and the class-archive
+    builder (cds.py) launch their JVMs from the same conf."""
+    return (
         SparkSession.builder.appName(app_name)
         .master(master or _default_master())
         .config("spark.sql.adaptive.enabled", "true")
@@ -106,9 +102,34 @@ def get_spark(app_name: str = "mapreduce-golang-spark", master: str | None = Non
             ),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
+        .config("spark.ui.showConsoleProgress", "false")
+        .config("spark.driver.extraJavaOptions", driver_java_options)
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
     )
-    spark = builder.getOrCreate()
+
+
+def get_spark(app_name: str = "mapreduce-golang-spark", master: str | None = None) -> SparkSession:
+    """Build (or reuse) a SparkSession with the engine's defaults.
+
+    If a session already exists, ``getOrCreate`` returns it and the
+    configs below are no-ops — callers on a real cluster submit with
+    their own master/conf and this function simply adopts it.
+    """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        ensure_package_shipped(active)
+        return active
+
+    with cds.driver_launch() as archive_options:
+        spark = session_builder(app_name, master, f"-Duser.timezone=UTC {archive_options}".strip()).getOrCreate()
     ensure_package_shipped(spark)
     return spark
+
+
+@atexit.register
+def _on_exit() -> None:
+    """Remove the shipped package's zip dir, then build the class archive
+    if this process found none (cds.build_pending)."""
+    if _ARCHIVE_DIR is not None:
+        shutil.rmtree(_ARCHIVE_DIR, ignore_errors=True)
+    cds.build_pending()

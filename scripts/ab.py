@@ -17,8 +17,12 @@ Prints one JSON object. Per query and side: the wall of every run
 the jobs and stages the traced passes counted (the distinct values
 over the runs; one value when the count repeats). ``head_wins`` is the
 number of pairs in which this checkout's wall was lower; a tie counts
-for neither side. Exits 1 when a query's rowset hash differs between
-the sides or between runs. The worktree is removed on exit.
+for neither side. ``setup`` A/Bs the cold start the same way: per side
+the median and quartiles of query_profile.py's ``get_spark_s`` and
+``warmup_s``, the number of runs whose JVM mapped a class-data archive
+(``cds_mapped``), and ``head_wins`` for ``get_spark_s``. Exits 1 when a
+query's rowset hash differs between the sides or between runs. The
+worktree is removed on exit.
 """
 
 from __future__ import annotations
@@ -72,6 +76,21 @@ def side_summary(runs: list[dict], name: str) -> dict:
     }
 
 
+def spread(values: list[float]) -> dict:
+    q1, median, q3 = statistics.quantiles(values, n=4)
+    return {"median": median, "q1": q1, "q3": q3}
+
+
+def setup_summary(runs: dict[str, list[dict]]) -> dict:
+    """The cold start of both sides: set-up times and archive use."""
+    return {
+        "get_spark_s": {side: spread([r["get_spark_s"] for r in runs[side]]) for side in runs},
+        "warmup_s": {side: spread([r["warmup_s"] for r in runs[side]]) for side in runs},
+        "cds_mapped": {side: sum(r["cds_mapped"] for r in runs[side]) for side in runs},
+        "head_wins": sum(h["get_spark_s"] < b["get_spark_s"] for b, h in zip(runs["base"], runs["head"])),
+    }
+
+
 def main() -> int:
     if len(sys.argv) < 3 or any(a.startswith("-") for a in sys.argv[1:]):
         print(__doc__.split("\n\n")[1], file=sys.stderr)
@@ -110,6 +129,7 @@ def main() -> int:
         "head": head,
         "pairs": PAIRS,
         "sf_dir": runs["head"][0]["sf_dir"],
+        "setup": setup_summary(runs),
         "queries": report,
     }, indent=1))
     if mismatched:

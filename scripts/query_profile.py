@@ -23,7 +23,12 @@ Queries run in the order given, so a query that derives a shared table
 workloads run it. Derived caches are cleared at the start of every pass.
 
 A layer table goes to stderr. stdout gets one JSON line,
-``{"sf_dir", "engine", "queries": {<name>: {...}}}``, where each query's
+``{"sf_dir", "engine", "get_spark_s", "warmup_s", "cds_mapped",
+"queries": {<name>: {...}}}``. ``get_spark_s`` and ``warmup_s`` time
+the set-up's two steps, the cold start perfbench's ``setup_s`` adds up;
+``cds_mapped`` says whether the driver JVM maps the class-data archive
+its command line names (``mapreduce_golang_spark/cds.py``; a JVM that
+refuses one runs on without a word). Each query's
 record is perfbench's per-query row of the traced pass (jobs, stages,
 tasks, executor run/CPU/GC time, driver gap, shuffle read/write, spill
 and Python bytes, derived-cache hits and misses, ``load_table`` calls,
@@ -46,6 +51,7 @@ import json
 import os
 import sys
 import tempfile
+import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PERFBENCH = os.path.join(ROOT, "perfbench")
@@ -128,6 +134,36 @@ def profile(spark, entrymod, sf_dir: str, names: list[str]) -> dict[str, dict]:
     }
 
 
+def cds_mapped(pid: int) -> bool:
+    """Whether JVM ``pid`` maps the archive its ``-XX:SharedArchiveFile``
+    names."""
+    with open(f"/proc/{pid}/cmdline") as f:
+        named = [a.split("=", 1)[1] for a in f.read().split("\0") if a.startswith("-XX:SharedArchiveFile=")]
+    if not named:
+        return False
+    with open(f"/proc/{pid}/maps") as f:
+        return any(line.split()[-1] == os.path.realpath(named[-1]) for line in f if line.rstrip().endswith(".jsa"))
+
+
+def set_up(sf_dir: str):
+    """The session and perfbench's warm-up scan, each timed: the
+    session and ``{"get_spark_s", "warmup_s", "cds_mapped"}``."""
+    from pyspark import SparkContext
+
+    from mapreduce_golang_spark.session import get_spark
+
+    t0 = time.perf_counter()
+    spark = get_spark(app_name="profile")
+    t1 = time.perf_counter()
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1000).write.format("noop").mode("overwrite").save()
+    t2 = time.perf_counter()
+    return spark, {
+        "get_spark_s": t1 - t0,
+        "warmup_s": t2 - t1,
+        "cds_mapped": cds_mapped(SparkContext._gateway.proc.pid),
+    }
+
+
 def layer_table(rows: dict[str, dict]) -> str:
     width = max(len("query"), *(len(n) for n in rows))
     lines = ["query".ljust(width) + "".join(f"{h:>10}" for h, _, _ in COLUMNS)]
@@ -159,20 +195,15 @@ def main() -> int:
         return 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    from mapreduce_golang_spark.session import get_spark
-
-    spark = get_spark(app_name="profile")
+    spark, setup = set_up(sf_dir)
     spark.sparkContext.setLogLevel("ERROR")
     try:
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1000).write.format("noop").mode(
-            "overwrite"
-        ).save()
         rows = profile(spark, entrymod, sf_dir, names)
     finally:
         spark.stop()
     print(layer_table(rows), file=sys.stderr)
     engine = os.path.dirname(os.path.abspath(entrymod.__file__))
-    print(json.dumps({"sf_dir": sf_dir, "engine": engine, "queries": rows}))
+    print(json.dumps({"sf_dir": sf_dir, "engine": engine, **setup, "queries": rows}))
     return 0
 
 

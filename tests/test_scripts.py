@@ -67,3 +67,35 @@ def test_profile_runs_wc_on_perfbench_machinery(spark, sf_dir):
     assert len(spark._jsparkSession.streams().listListeners()) == stream_listeners
     assert (tables.load_table, entrymod._pair_graph, entrymod._cached_table) == hooked
     assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_profile_set_up_reports_the_cold_start(spark, sf_dir):
+    profile = load_script("query_profile")
+    same, setup = profile.set_up(sf_dir)
+    assert same is spark
+    assert set(setup) == {"get_spark_s", "warmup_s", "cds_mapped"}
+    assert setup["get_spark_s"] >= 0 and setup["warmup_s"] > 0
+    # an archive get_spark passes is an archive the JVM maps
+    passed = "-XX:SharedArchiveFile=" in spark.sparkContext.getConf().get("spark.driver.extraJavaOptions")
+    assert setup["cds_mapped"] == passed
+
+
+def test_ab_summarises_the_cold_start_per_side():
+    ab = load_script("ab")
+
+    def run(get_spark_s, warmup_s, mapped):
+        return {"get_spark_s": get_spark_s, "warmup_s": warmup_s, "cds_mapped": mapped}
+
+    runs = {
+        "base": [run(6.0, 4.0, False), run(6.4, 4.2, False), run(5.8, 3.9, False), run(3.0, 4.1, False)],
+        "head": [run(3.5, 2.0, True), run(3.3, 2.1, True), run(3.9, 1.9, True), run(3.1, 2.2, True)],
+    }
+    summary = ab.setup_summary(runs)
+    assert summary["head_wins"] == 3
+    assert summary["cds_mapped"] == {"base": 0, "head": 4}
+    assert summary["get_spark_s"]["head"]["median"] == pytest.approx(3.4)
+    assert summary["warmup_s"]["base"]["median"] == pytest.approx(4.05)
+    for metric in ("get_spark_s", "warmup_s"):
+        for side in ("base", "head"):
+            s = summary[metric][side]
+            assert s["q1"] <= s["median"] <= s["q3"]
