@@ -625,10 +625,18 @@ def right_size_graph(
     job as an observed metric."""
     d, m = checkpoint_counted(df, F.count(F.lit(1)).alias("n"))
     n = int(m["n"])
+    return _right_width(d, n, key, min_parts, max_parts), n
+
+
+def _right_width(
+    d: DataFrame, n: int, key: str, min_parts: int = 4, max_parts: int = 2048
+) -> DataFrame:
+    """``right_size_graph``'s second half: re-partition the checkpointed
+    ``d`` of measured ``n`` rows on ``key`` when its width is off."""
     k = int(max(min_parts, min(max_parts, n // GRAPH_ROWS_PER_PARTITION + 1)))
     if k != d.rdd.getNumPartitions():
         d = d.repartition(k, key).localCheckpoint(eager=True)
-    return d, n
+    return d
 
 
 def _sym_edges(
@@ -648,67 +656,60 @@ def _graph_bc(t: DataFrame, n: int) -> DataFrame:
     return F.broadcast(t) if n <= GRAPH_BROADCAST_MAX_ROWS else t
 
 
-def near_dup_components(
-    df: DataFrame, pairs: DataFrame | None = None, id_col: str = "doc_id", max_iter: int = 15
-) -> DataFrame:
-    """Connected components over the near-dup pair graph via iterative
-    min-label propagation — the transitive dedup grouping (a cluster =
-    one original + all its fuzzed copies). Returns (doc_id,
-    component_id) for every doc; singletons map to themselves.
+def _min_root_labels(u: list, v: list) -> tuple[list, list]:
+    """Union-find over the edges (u[i], v[i]) in which every set's root
+    is its smallest id. Returns (nodes, roots) for each node that is not
+    its own root; a root, like a singleton, labels itself."""
+    parent: dict = {}
 
-    Iterative DataFrame algorithm (not SQL-expressible in one query):
-    each hop joins labels to edges, takes the min over the
-    neighborhood, then POINTER-JUMPS (label <- label of label) so long
-    chains collapse in O(log diameter) hops, bounded by ``max_iter``.
-    Loop discipline (round-11 verdict #4 — the iterative family's cost
-    is scheduler round-trips, not data): below the measured broadcast
-    gate each hop's joins are broadcast-hash, so a hop costs one
-    shuffle; one hop per checkpointed job (a fused 2-hop job measured
-    SLOWER — see the loop comment); and the convergence check is a
-    flag-count on the just-checkpointed result (the previous label
-    rides along the round as ``old``, so no extra join against the
-    prior labels table — labels are monotone non-increasing, making
-    ``label != old`` exactly "changed").
-    Edges/labels are hash-partitioned at a width derived from their
-    measured size (``right_size_graph``) before iterating. If the loop
-    exits without converging (needs > max_iter hops) a RuntimeError is
-    raised rather than silently returning non-fixpoint labels — the
-    DuckDB oracle computes the full transitive closure, and the
-    documented semantics are the fixpoint.
+    def find(x):
+        root = x
+        while (p := parent.get(root, root)) != root:
+            root = p
+        while x != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
 
-    Contract (round-13 advice): an externally supplied ``pairs`` must
-    draw BOTH endpoints from ``df``'s doc ids. Since round 13 the
-    label frontier is initialized from the edge endpoints (so the loop
-    shuffles only the pair graph, not the corpus); an out-of-corpus
-    endpoint would therefore participate in min-label propagation —
-    it can bridge components and even become the winning min label, so
-    a returned component_id could name a doc absent from ``df``
-    (pre-round-13 such edges were inert because non-``df`` nodes had
-    no label row). Every in-repo caller derives ``pairs`` from the
-    same ``df``; a caller with a stale/broader pairs table must
-    semi-join both endpoint columns against ``df``'s ids first.
-    """
-    if pairs is None:
-        pairs = ngram_jaccard_pairs(df)
-    edges, _ = right_size_graph(_sym_edges(pairs), "v")  # reused every round
-    # the loop iterates over PAIR-GRAPH NODES only (round 13): a doc
-    # with no near-dup edge can never change labels — it is a
-    # singleton by construction — so singletons rejoin ONCE after
-    # convergence instead of riding every hop's joins, checkpoint and
-    # convergence count. At 100 TB this is the difference between
-    # shuffling/broadcasting the CORPUS per hop and only the dup-graph
-    # nodes (dups are the minority by design of a deduped pipeline);
-    # at sf0.1 it A/B'd a wash (scripts/ab_loop_nodes.py at commit
-    # a48fc12: min-of-6 1.13 vs 1.02 s components-alone, identical on
-    # the hist composition — the fixture loop is scheduler-bound, not
-    # data-bound), landed for the scale shape with outputs proven
-    # identical either way.
+    for a, b in zip(u, v):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    nodes = list(parent)
+    return nodes, [find(x) for x in nodes]
+
+
+def _driver_components(edges: DataFrame) -> DataFrame:
+    """(u, label) of the pair graph ``edges`` (u, v), solved on the
+    driver: the endpoints come over in one Arrow ``toPandas``, union-find
+    labels every non-root node with its component's smallest id, and the
+    labels go back as one frame of ``edges``' key type."""
+    import pandas as pd
+
+    ends = edges.where(F.col("u") < F.col("v")).select("u", "v").toPandas()
+    nodes, roots = _min_root_labels(ends["u"].tolist(), ends["v"].tolist())
+    schema = edges.select("u", F.col("u").alias("label")).schema
+    dtype = ends["u"].dtype
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"u": pd.Series(nodes, dtype=dtype), "label": pd.Series(roots, dtype=dtype)}),
+        schema,
+    )
+
+
+def _loop_components(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
+    """(u, label) of the pair graph ``edges`` (u, v) by iterated min-label
+    propagation with pointer jumping, one checkpointed job per hop; also
+    returns the node count. Raises RuntimeError past ``max_iter`` hops."""
+    # the loop iterates over pair-graph nodes only: a doc with no
+    # near-dup edge can never change labels, so singletons rejoin once
+    # after convergence instead of riding every hop's joins, checkpoint
+    # and convergence count (dups are the minority of a corpus)
     labels, n_labels = right_size_graph(
         edges.select("u").distinct().withColumn("label", F.col("u")), "u"
     )
 
-    # every per-hop side table is ≤ n_labels rows, so below the gate each
-    # hop's joins go broadcast-hash and a hop costs one shuffle
+    # every per-hop side table is ≤ n_labels rows, so with the nodes
+    # under the gate each hop's joins go broadcast-hash and a hop costs
+    # one shuffle
     def hop(lab: DataFrame) -> DataFrame:
         """One propagation + pointer-jump step over (u, label, old);
         ``old`` (the label before this ROUND) rides along untouched."""
@@ -725,21 +726,19 @@ def near_dup_components(
         # pointer jump: label(u) <- label(label(u)). label(u) is always
         # a node id inside u's component (starts as u; neighborhood
         # mins preserve it), so the shortcut stays in-component and is
-        # monotone non-increasing — combined with the propagation step,
-        # convergence is O(log diameter) hops instead of O(diameter)
-        # (a 10^6-long near-dup chain converges in ~20 hops, not 10^6).
-        # KNOWN + MEASURED-ACCEPTABLE (round-12 advice #2): on the
-        # small/broadcast path, ``lookup``'s broadcast build re-derives
+        # monotone non-increasing. On a chain whose ids grow along it
+        # that makes convergence O(log diameter) hops instead of
+        # O(diameter); with shuffled ids the hops still grow with the
+        # chain. Simulated, this hop takes a 64-node chain with growing
+        # ids to its fixpoint in 7 hops, and 80-node chains with five
+        # shuffled orders in 14 to 37.
+        # With broadcast hints, ``lookup``'s broadcast build re-derives
         # the un-materialized prop subtree, so propagation + neighbor-
-        # min run twice per hop. Materializing prop per hop instead
-        # (localCheckpoint before the jump) A/B'd SLIGHTLY SLOWER at
-        # sf0.1 — min-of-6 interleaved 1.00 vs 0.96 s per loop
-        # (scripts/ab_pointer_jump.py at commit a48fc12; identical
-        # outputs) — the extra
-        # per-hop materialization job costs more than the recompute of
-        # a ≤ GRAPH_BROADCAST_MAX_ROWS subtree. Above the gate the
-        # joins are shuffle joins and ReusedExchange shares the
-        # subtree's exchange, so the double-compute is small-path-only.
+        # min run twice per hop; a checkpoint of prop before the jump
+        # measured slower, since its extra job costs more than the
+        # recompute of a ≤ GRAPH_BROADCAST_MAX_ROWS subtree. Unhinted,
+        # the joins are shuffle joins and ReusedExchange shares the
+        # subtree's exchange, so nothing runs twice.
         lookup = prop.select(F.col("u").alias("label"), F.col("label").alias("ll"))
         return prop.join(_graph_bc(lookup, n_labels), "label", "left").select(
             "u", "old", F.least("label", F.coalesce("ll", "label")).alias("label")
@@ -747,12 +746,11 @@ def near_dup_components(
 
     changed = -1
     for _ in range(max_iter):
-        # ONE hop per checkpointed job — an A/B against a fused 2-hop
-        # job measured the fusion SLOWER (3.7 s vs 1.9 s warm at
-        # sf0.1): hop 2 references hop 1's un-materialized output from
-        # three broadcast-build subtrees, and those rebuild the whole
-        # hop-1 chain each (broadcast stages don't share un-shuffled
-        # subtrees the way ReusedExchange shares shuffles).
+        # ONE hop per checkpointed job: a fused 2-hop job measured
+        # slower, because hop 2 references hop 1's un-materialized
+        # output from three broadcast-build subtrees, and those rebuild
+        # the whole hop-1 chain each (broadcast stages don't share
+        # un-shuffled subtrees the way ReusedExchange shares shuffles).
         # The convergence count rides the checkpoint job as an observed
         # metric: sum over an empty frame is NULL → 0.
         stepped = hop(labels.select("u", F.col("label").alias("old"), "label"))
@@ -770,10 +768,72 @@ def near_dup_components(
             f"({changed} labels still changing); raise max_iter — with "
             "pointer jumping convergence needs O(log component diameter) hops"
         )
-    # singletons (docs with no qualifying pair) rejoin once, mapped to
-    # themselves — the same labels they'd have earned riding the loop.
-    # The converged labels table is ≤ dup-graph-node rows, so below the
-    # gate this is one broadcast join over the corpus scan.
+    return labels, n_labels
+
+
+def near_dup_components(
+    df: DataFrame, pairs: DataFrame | None = None, id_col: str = "doc_id", max_iter: int = 15
+) -> DataFrame:
+    """Connected components over the near-dup pair graph — the
+    transitive dedup grouping (a cluster = one original + all its
+    fuzzed copies). Returns (doc_id, component_id) for every doc;
+    component_id is the smallest doc id of the component, and
+    singletons map to themselves.
+
+    The directed edge list (both directions of every pair) is
+    checkpointed once with its row count observed on that job. The
+    count picks one of two paths:
+
+    - At or under GRAPH_BROADCAST_MAX_ROWS edges the components are
+      solved on the driver (``_driver_components``): one Arrow
+      ``toPandas`` of the endpoints, a union-find whose roots are the
+      smallest ids, and the labels broadcast back. The gate already
+      bounds what the loop's broadcasts send through the driver, and
+      under it the loop's cost is its rounds, not its data.
+    - Above it the labels come from an iterated DataFrame loop
+      (``_loop_components``), the only path that runs at that size:
+      each hop joins labels to edges, takes the min over the
+      neighborhood, then POINTER-JUMPS (label <- label of label) so a
+      chain whose ids grow along it collapses in O(log diameter) hops
+      (a chain with shuffled ids needs more; see ``hop``). Edges and labels
+      are hash-partitioned at a width derived from their measured size
+      (``right_size_graph``); the joins stay broadcast-hash while the
+      node count is under the gate, so a hop costs one shuffle; one hop
+      runs per checkpointed job; and the convergence check is a
+      flag-count on the just-checkpointed result (the previous label
+      rides along the round as ``old``, so no extra join against the
+      prior labels table — labels are monotone non-increasing, making
+      ``label != old`` exactly "changed"). ``max_iter`` bounds the hops,
+      and a loop that exits without converging raises RuntimeError
+      rather than silently returning non-fixpoint labels — the DuckDB
+      oracle computes the full transitive closure, and the documented
+      semantics are the fixpoint. Neither concerns the driver path.
+
+    Contract (round-13 advice): an externally supplied ``pairs`` must
+    draw BOTH endpoints from ``df``'s doc ids. Labels are computed over
+    the edge endpoints (so neither path touches the corpus until the
+    final join); an out-of-corpus endpoint would therefore participate
+    in the components — it can bridge them and even become the winning
+    min label, so a returned component_id could name a doc absent from
+    ``df``. Every in-repo caller derives ``pairs`` from the same
+    ``df``; a caller with a stale/broader pairs table must semi-join
+    both endpoint columns against ``df``'s ids first.
+    """
+    if pairs is None:
+        pairs = ngram_jaccard_pairs(df)
+    edges, m = checkpoint_counted(_sym_edges(pairs), F.count(F.lit(1)).alias("n"))
+    n_edges = int(m["n"])
+    if n_edges <= GRAPH_BROADCAST_MAX_ROWS:
+        labels, n_labels = _driver_components(edges), n_edges
+    else:
+        # the same table right_size_graph would return, from the count
+        # the path choice already took
+        edges = _right_width(edges, n_edges, "v")
+        labels, n_labels = _loop_components(edges, max_iter)
+    # singletons (docs with no qualifying pair) and component roots
+    # rejoin once, mapped to themselves. The labels table is ≤ dup-
+    # graph-node rows, so with the nodes under the gate this is one
+    # broadcast join over the corpus scan.
     return (
         df.select(F.col(id_col).alias("u"))
         .join(_graph_bc(labels, n_labels), "u", "left")

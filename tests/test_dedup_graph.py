@@ -53,16 +53,22 @@ def test_pipeline_consistent_with_parts(spark, sf_dir):
     assert all(r.component_size == sizes[r.component_id] for r in pipe)
 
 
-def test_components_pointer_jumping_collapses_long_chain(spark):
+@pytest.mark.parametrize("path", ["small", "big"])
+def test_components_pointer_jumping_collapses_long_chain(spark, monkeypatch, path):
     # a 64-node path graph has diameter 63 — naive min-label needs 63
-    # rounds; pointer jumping must finish within max_iter=10 (O(log d))
-    from mapreduce_golang_spark.operators.dedup import near_dup_components
+    # rounds; pointer jumping must finish within max_iter=10 (O(log d)).
+    # Below the edge gate the driver solves it and max_iter is unused,
+    # so the big path (gate forced to 0) keeps the loop's hop bound
+    # covered.
+    from mapreduce_golang_spark.operators import dedup as dedup_mod
 
+    if path == "big":
+        monkeypatch.setattr(dedup_mod, "GRAPH_BROADCAST_MAX_ROWS", 0)
     n = 64
     docs = spark.createDataFrame([(i, f"doc {i}") for i in range(n)], ["doc_id", "text"])
     pairs = spark.createDataFrame(
         [(i, i + 1, 1.0) for i in range(n - 1)], ["doc_a", "doc_b", "jaccard"]
     )
-    comp = near_dup_components(docs, pairs=pairs, max_iter=10).collect()
+    comp = dedup_mod.near_dup_components(docs, pairs=pairs, max_iter=10).collect()
     assert {r.component_id for r in comp} == {0}
     assert len(comp) == n

@@ -15,22 +15,17 @@ import subprocess
 import sys
 
 _SCRIPT = r"""
-import json, os, sys, tempfile
+import json, os, sys
 sys.path.insert(0, {repo!r})
-from pyspark.sql import SparkSession
 from mapreduce_golang_spark.plans.mapreduce import run_job
-from mapreduce_golang_spark.session import ensure_package_shipped
-
-marker_dir = tempfile.mkdtemp()
+from mapreduce_golang_spark.session import get_spark
 
 # maxFailures=8: each map task holds ~4 docs and every doc's first
 # processing dies, so a task can legitimately fail 4 times before it
 # runs clean — mirroring repeated re-execution in the reference test.
-spark = (SparkSession.builder.master("local[2, 8]")
-         .appName("crash-test").config("spark.ui.enabled", "false")
-         .getOrCreate())
+# get_spark starts the JVM from the engine's class-data archive.
+spark = get_spark(app_name="crash-test", master="local[2, 8]")
 spark.sparkContext.setLogLevel("ERROR")
-ensure_package_shipped(spark)
 
 docs = [(f"f{i}", f"alpha beta f{i} gamma") for i in range(8)]
 
