@@ -21,13 +21,16 @@ from pyspark.sql import functions as F_
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from mapreduce_golang_spark.functions import sql_surface
 from mapreduce_golang_spark.operators import (
     analytics,
     corpus,
     dedup,
     graph,
     joins,
+    mixing,
     multimodal,
+    pandas_api,
     parity,
     similarity,
     skew,
@@ -36,8 +39,15 @@ from mapreduce_golang_spark.operators import (
     wordcount,
 )
 from mapreduce_golang_spark.session import ensure_package_shipped
+from mapreduce_golang_spark.sources import formats
 from mapreduce_golang_spark.sources.tables import load_table
-from mapreduce_golang_spark.streaming import events_stream
+from mapreduce_golang_spark.streaming import (
+    events_stream,
+    fanout,
+    introspection,
+    recovery,
+    schema_evolution,
+)
 
 
 def _shipped(fn):
@@ -70,19 +80,40 @@ def entry(spark: SparkSession) -> DataFrame:
 # queries() — one registry row per implemented operator (SURVEY.md §2)
 # --------------------------------------------------------------------------
 
-#: Registry-row inputs that are not table names: the session and the
-#: shared near-dup pair graph (``_pair_graph``).
-_SPARK, _PAIRS = object(), object()
+#: Registry-row input that stands for the session.
+_SPARK = object()
+
+
+class _Derived(NamedTuple):
+    """Registry-row input that stands for a shared derived table: what
+    the module function named ``fn`` returns for the session and data
+    directory. The name is looked up in the module globals on each call,
+    so rebinding the function reaches every row. A marker is itself a
+    ``(spark, sf_dir)`` query function."""
+
+    fn: str
+
+    def __call__(self, spark: SparkSession, sf_dir: str) -> DataFrame:
+        return globals()[self.fn](spark, sf_dir)
+
+
+_PAIRS = _Derived("_pair_graph")
+_NLL = _Derived("_nll_table")
+_OVERLAP = _Derived("_decontam_overlap")
+_CENTROIDS = _Derived("_kmeans_cents")
+_SIGS = _Derived("_simhash_sigs")
 
 
 class _Op(NamedTuple):
     """One registry row: ``fn`` called on ``args`` and ``kwargs``.
 
     A positional string names a fixture table, read with ``load_table``;
-    ``_SPARK`` and ``_PAIRS`` stand for the session and the pair graph;
-    every other value is passed as it is. ``load_table`` and
-    ``_pair_graph`` are looked up in the module globals on each call, so
-    rebinding them (perfbench's layer hooks do) reaches every row."""
+    ``_SPARK`` stands for the session and a ``_Derived`` marker for its
+    derived table; every other value is passed as it is. ``load_table``
+    is looked up in the module globals on each call, as a marker's
+    function is, so rebinding either (perfbench's layer hooks rebind
+    ``load_table``, ``_pair_graph`` and ``_cached_table``) reaches every
+    row."""
 
     fn: Callable[..., DataFrame]
     args: tuple
@@ -92,8 +123,8 @@ class _Op(NamedTuple):
         def resolve(x, positional):
             if x is _SPARK:
                 return spark
-            if x is _PAIRS:
-                return _pair_graph(spark, sf_dir)
+            if isinstance(x, _Derived):
+                return x(spark, sf_dir)
             if positional and isinstance(x, str):
                 return load_table(spark, sf_dir, x)
             return x
@@ -110,7 +141,7 @@ def _op(fn: Callable[..., DataFrame], *args, **kwargs) -> _Op:
 def _snapshot_diff(spark, sf_dir):
     """CDC diff between two deterministic customer snapshots: 'old'
     drops custkeys ≡ 0 (mod 7), 'new' drops ≡ 0 (mod 5) and reprices
-    ≡ 0 (mod 3) ×2 (exact binary doubling — see _scd2_customers) — one
+    ≡ 0 (mod 3) ×2 (exact binary doubling — see _scd2_dim) — one
     fixture table exercises all three change classes."""
     from mapreduce_golang_spark.operators.merge import snapshot_diff
 
@@ -149,22 +180,6 @@ def _incr_agg(spark, sf_dir):
     )
 
 
-def _stream_segments(spark, sf_dir):
-    import uuid
-
-    return events_stream.streaming_segment_counts(
-        spark, sf_dir, f"sseg_{uuid.uuid4().hex[:8]}"
-    )
-
-
-def _stream_hopping(spark, sf_dir):
-    import uuid
-
-    return events_stream.streaming_hopping_counts(
-        spark, sf_dir, f"shop_{uuid.uuid4().hex[:8]}"
-    )
-
-
 #: materialize-once near-dup pair graph, keyed by (Spark application,
 #: data directory). Seven registered queries consume the same
 #: ngram-Jaccard pair graph (survivors / components / pagerank /
@@ -192,10 +207,6 @@ def _pair_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
         _PAIR_GRAPH_CACHE[key] = cached
     return cached
-
-
-def _ngram_jaccard(spark, sf_dir):
-    return _pair_graph(spark, sf_dir)
 
 
 #: same materialize-once discipline for the other expensive shared
@@ -247,11 +258,9 @@ def _decontam_overlap(spark, sf_dir):
 
 
 def _kmeans_cents(spark, sf_dir):
-    from mapreduce_golang_spark.operators.similarity import kmeans_fit_centroids
-
     return _cached_table(
         spark, sf_dir, "kmeans_centroids",
-        lambda: kmeans_fit_centroids(load_table(spark, sf_dir, "embeddings")),
+        lambda: similarity.kmeans_fit_centroids(load_table(spark, sf_dir, "embeddings")),
     )
 
 
@@ -262,15 +271,9 @@ def _simhash_sigs(spark, sf_dir):
     )
 
 
-def _simhash_pairs(spark, sf_dir):
-    return dedup.simhash_pairs(
-        load_table(spark, sf_dir, "documents"), sigs=_simhash_sigs(spark, sf_dir)
-    )
-
-
-def _scd2_customers(spark, sf_dir):
-    """SCD2 over the customer dim: every BUILDING-segment customer gets
-    a re-priced new version at a fixed ts; the result is the full
+def _scd2_dim(spark, sf_dir, switch_ts: str) -> DataFrame:
+    """The SCD2 customer dim: every BUILDING-segment customer gets a
+    re-priced new version at ``switch_ts``; the result is the full
     versioned dim (closed + open rows). Inputs derive deterministically
     from the fixture so the DuckDB oracle can rebuild them."""
     from mapreduce_golang_spark.operators.merge import scd2_apply
@@ -286,19 +289,18 @@ def _scd2_customers(spark, sf_dir):
         # a 1.1 reprice lands 2-decimal balances on .005 round-ties
         # where Spark and DuckDB break differently
         .withColumn("c_acctbal", F_.col("c_acctbal") * 2)
-        .withColumn("_ts", F_.lit("2000-06-01 00:00:00").cast("timestamp"))
+        .withColumn("_ts", F_.lit(switch_ts).cast("timestamp"))
     )
-    return scd2_apply(current, updates, key="c_custkey", ts_col="_ts").select(
+    return scd2_apply(current, updates, key="c_custkey", ts_col="_ts")
+
+
+def _scd2_customers(spark, sf_dir):
+    """The SCD2 customer dim with its BUILDING reprice in mid-2000."""
+    return _scd2_dim(spark, sf_dir, "2000-06-01 00:00:00").select(
         "c_custkey", "c_name", "c_nationkey",
         F_.round("c_acctbal", 2).alias("c_acctbal"),
         "c_mktsegment", "valid_from", "valid_to",
     )
-
-
-def _bucketed_join(spark, sf_dir):
-    from mapreduce_golang_spark.sources.formats import bucketed_join_revenue
-
-    return bucketed_join_revenue(spark, sf_dir)
 
 
 def _mr_wc(spark, sf_dir):
@@ -447,51 +449,9 @@ def _date_dimensions(spark, sf_dir):
     )
 
 
-def _stream_hourly(spark, sf_dir):
-    import uuid
-
-    return events_stream.streaming_hourly_counts(spark, sf_dir, f"sh_{uuid.uuid4().hex[:8]}")
-
-
-def _stream_sessionize(spark, sf_dir):
-    import uuid
-
-    return events_stream.streaming_sessionize(spark, sf_dir, query_name=f"ss_{uuid.uuid4().hex[:8]}")
-
-
-def _stream_incidents(spark, sf_dir):
-    import uuid
-
-    return events_stream.streaming_incident_hours(
-        spark, sf_dir, query_name=f"si_{uuid.uuid4().hex[:8]}"
-    )
-
-
-def _stream_ssj(spark, sf_dir):
-    import uuid
-
-    return events_stream.streaming_purchase_click_join(
-        spark, sf_dir, query_name=f"sj_{uuid.uuid4().hex[:8]}"
-    )
-
-
-def _stream_user_counts(spark, sf_dir):
-    import uuid
-
-    return events_stream.streaming_user_counts_stateful(spark, sf_dir, f"su_{uuid.uuid4().hex[:8]}")
-
-
 def _media_features(spark, sf_dir):
     return multimodal.media_features(
         multimodal.attach_payload(load_table(spark, sf_dir, "documents"))
-    )
-
-
-def _kmeans(spark, sf_dir):
-    from mapreduce_golang_spark.operators.similarity import kmeans_assign
-
-    return kmeans_assign(
-        load_table(spark, sf_dir, "embeddings"), centroids=_kmeans_cents(spark, sf_dir)
     )
 
 
@@ -507,18 +467,9 @@ def _scd2_pit(spark, sf_dir):
     customers get a ×2 repriced version mid-January), aggregated per
     (segment, era). Events before the switch see the original balance,
     events after see the doubled one — leakage-free feature joins."""
-    from mapreduce_golang_spark.operators.merge import point_in_time_join, scd2_apply
+    from mapreduce_golang_spark.operators.merge import point_in_time_join
 
-    customer = load_table(spark, sf_dir, "customer")
-    current = customer.withColumn("valid_from", F_.lit("1995-01-01 00:00:00")).withColumn(
-        "valid_to", F_.lit("9999-12-31 00:00:00")
-    )
-    updates = (
-        customer.where(F_.col("c_mktsegment") == "BUILDING")
-        .withColumn("c_acctbal", F_.col("c_acctbal") * 2)
-        .withColumn("_ts", F_.lit(_PIT_SWITCH_TS).cast("timestamp"))
-    )
-    dim = scd2_apply(current, updates, key="c_custkey", ts_col="_ts").select(
+    dim = _scd2_dim(spark, sf_dir, _PIT_SWITCH_TS).select(
         "c_custkey", "c_acctbal", "c_mktsegment", "valid_from", "valid_to"
     )
     events = load_table(spark, sf_dir, "events").withColumnRenamed("user_id", "c_custkey")
@@ -534,118 +485,6 @@ def _scd2_pit(spark, sf_dir):
             F_.count("*").cast("long").alias("n_events"),
             F_.round(F_.sum("c_acctbal"), 2).alias("sum_acctbal"),
         )
-    )
-
-
-def _dsir_weights(spark, sf_dir):
-    from mapreduce_golang_spark.operators import mixing
-
-    return mixing.dsir_importance_weights(load_table(spark, sf_dir, "documents"))
-
-
-def _quality_scores(spark, sf_dir):
-    from mapreduce_golang_spark.operators import mixing
-
-    return mixing.quality_classifier_scores(load_table(spark, sf_dir, "documents"))
-
-
-def _mixing_weights(spark, sf_dir):
-    from mapreduce_golang_spark.operators import mixing
-
-    return mixing.source_mixing_weights(load_table(spark, sf_dir, "documents"))
-
-
-def _ccnet_buckets(spark, sf_dir):
-    from mapreduce_golang_spark.operators import mixing
-
-    return mixing.ccnet_perplexity_buckets(
-        load_table(spark, sf_dir, "documents"), nll=_nll_table(spark, sf_dir)
-    )
-
-
-def _eval_decontam(spark, sf_dir):
-    return text_analysis.eval_decontamination(
-        load_table(spark, sf_dir, "documents"), overlap=_decontam_overlap(spark, sf_dir)
-    )
-
-
-def _quality_sample(spark, sf_dir):
-    from mapreduce_golang_spark.operators import mixing
-
-    return mixing.quality_weighted_sample(load_table(spark, sf_dir, "documents"))
-
-
-def _top_p_selection(spark, sf_dir):
-    from mapreduce_golang_spark.operators import mixing
-
-    return mixing.corpus_top_p_selection(load_table(spark, sf_dir, "documents"))
-
-
-def _leakage_splits(spark, sf_dir):
-    from mapreduce_golang_spark.operators import mixing
-
-    return mixing.leakage_safe_splits(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
-def _split_leakage(spark, sf_dir):
-    from mapreduce_golang_spark.operators import mixing
-
-    return mixing.split_leakage_audit(
-        load_table(spark, sf_dir, "documents"), pairs=_pair_graph(spark, sf_dir)
-    )
-
-
-def _token_budget(spark, sf_dir):
-    from mapreduce_golang_spark.operators import mixing
-
-    return mixing.token_budget_allocation(load_table(spark, sf_dir, "documents"))
-
-
-def _ccnet_sample(spark, sf_dir):
-    from mapreduce_golang_spark.operators import mixing
-
-    return mixing.ccnet_bucket_sample(
-        load_table(spark, sf_dir, "documents"), nll=_nll_table(spark, sf_dir)
-    )
-
-
-def _silhouette(spark, sf_dir):
-    return similarity.kmeans_silhouette(
-        load_table(spark, sf_dir, "embeddings"), centroids=_kmeans_cents(spark, sf_dir)
-    )
-
-
-def _decontaminated(spark, sf_dir):
-    return text_analysis.decontaminated_corpus(
-        load_table(spark, sf_dir, "documents"), overlap=_decontam_overlap(spark, sf_dir)
-    )
-
-
-def _token_js(spark, sf_dir):
-    from mapreduce_golang_spark.operators import mixing
-
-    return mixing.source_token_js_divergence(load_table(spark, sf_dir, "documents"))
-
-
-def _cluster_sample(spark, sf_dir):
-    return similarity.cluster_balanced_sample(
-        load_table(spark, sf_dir, "embeddings"), centroids=_kmeans_cents(spark, sf_dir)
-    )
-
-
-def _semdedup(spark, sf_dir):
-    return similarity.semdedup_survivors(
-        load_table(spark, sf_dir, "embeddings"), centroids=_kmeans_cents(spark, sf_dir)
-    )
-
-
-def _stream_ohlc(spark, sf_dir):
-    import uuid
-
-    return events_stream.streaming_hourly_ohlc(
-        spark, sf_dir, f"sohlc_{uuid.uuid4().hex[:8]}"
     )
 
 
@@ -757,15 +596,12 @@ def _polymorphic_trigrams(spark, sf_dir):
     )
 
 
-def _cdc_state(spark, sf_dir):
-    """Full MERGE over a CDC change log derived deterministically from
-    orders: target = keys not divisible by 4; changes = U (÷3, +5 %
-    reprice), D (÷7, higher seq — delete wins over the reprice), I
-    (÷4, the keys absent from the target). Out-of-order seqs and a
-    same-seq I/U tie (keys ÷60) are both exercised; returns the
-    post-merge snapshot."""
-    from mapreduce_golang_spark.operators.merge import cdc_apply_changes
-
+def _orders_change_log(spark, sf_dir) -> tuple[DataFrame, DataFrame]:
+    """The orders MERGE target and its CDC change log, derived
+    deterministically from orders: target = keys not divisible by 4;
+    changes = U (÷3, +5 % reprice), D (÷7, higher seq — delete wins over
+    the reprice), I (÷4, the keys absent from the target). Out-of-order
+    seqs and a same-seq I/U tie (keys ÷60) are both exercised."""
     orders = load_table(spark, sf_dir, "orders")
     # prices are 2-decimal values stored as double; the ×1.05 reprice is
     # done in DECIMAL so the .xx5 midpoints round identically in every
@@ -799,6 +635,15 @@ def _cdc_state(spark, sf_dir):
         F_.lit("I").alias("op"),
     )
     changes = upd.unionByName(dels).unionByName(ins)
+    return target, changes
+
+
+def _cdc_state(spark, sf_dir):
+    """Full MERGE of the orders change log (``_orders_change_log``) into
+    its target; returns the post-merge snapshot."""
+    from mapreduce_golang_spark.operators.merge import cdc_apply_changes
+
+    target, changes = _orders_change_log(spark, sf_dir)
     return cdc_apply_changes(target, changes, "o_orderkey", "seq")
 
 
@@ -853,74 +698,6 @@ def _sessionize_table_udtf(spark, sf_dir):
     )
 
 
-def _streaming_kill_recover(spark, sf_dir):
-    from mapreduce_golang_spark.streaming.recovery import (
-        streaming_dedup_kill_recover,
-    )
-
-    return streaming_dedup_kill_recover(spark, sf_dir)
-
-
-def _sql_scripting_threshold(spark, sf_dir):
-    from mapreduce_golang_spark.functions.sql_surface import (
-        sql_scripting_coverage_threshold,
-    )
-
-    return sql_scripting_coverage_threshold(spark, sf_dir)
-
-
-def _sql_udf_bands(spark, sf_dir):
-    from mapreduce_golang_spark.functions.sql_surface import sql_udf_price_bands
-
-    return sql_udf_price_bands(spark, sf_dir)
-
-
-def _collated_counts(spark, sf_dir):
-    from mapreduce_golang_spark.functions.sql_surface import collated_type_counts
-
-    return collated_type_counts(spark, sf_dir)
-
-
-def _ps_orders_profile(spark, sf_dir):
-    from mapreduce_golang_spark.operators.pandas_api import (
-        ps_orders_status_profile,
-    )
-
-    return ps_orders_status_profile(spark, sf_dir)
-
-
-def _state_store_audit(spark, sf_dir):
-    from mapreduce_golang_spark.streaming.introspection import state_store_audit
-
-    return state_store_audit(spark, sf_dir)
-
-
-def _state_schema_evolution(spark, sf_dir):
-    """streaming/schema_evolution.py::state_schema_evolution_counts —
-    state schema EVOLUTION across a restart: count-only era-1 drain,
-    state carried out of the old checkpoint via the statestore source,
-    evolved (count + sum) topology on a fresh checkpoint for era 2,
-    merged. Oracle: one-shot batch count(*) over all events + sum
-    over exactly the era-2 rows (the guard-refusal half of the proof
-    is pinned by tests/test_round11_wave2.py)."""
-    from mapreduce_golang_spark.streaming.schema_evolution import (
-        state_schema_evolution_counts,
-    )
-
-    return state_schema_evolution_counts(spark, sf_dir)
-
-
-def _foreach_batch_fanout(spark, sf_dir):
-    """streaming/fanout.py::foreach_batch_fanout — one micro-batch
-    delivered to TWO sinks via foreachBatch with batch-id-versioned
-    idempotent writes, with an actual replay injected (newest commit
-    marker deleted between phases). Oracle: batch count(*) per type,
-    read back independently from each sink."""
-    from mapreduce_golang_spark.streaming.fanout import foreach_batch_fanout
-
-    return foreach_batch_fanout(spark, sf_dir)
-
-
 def _streaming_cdc_state(spark, sf_dir):
     """streaming/cdc_stream.py::streaming_cdc_apply over the SAME
     deterministic orders change log as cdc_orders_state, but delivered
@@ -929,39 +706,9 @@ def _streaming_cdc_state(spark, sf_dir):
     delete tombstones. Shares cdc_orders_state's oracle verbatim: the
     piecewise streaming apply must equal the one-shot batch MERGE."""
     from mapreduce_golang_spark.streaming.cdc_stream import streaming_cdc_apply
-
-    orders = load_table(spark, sf_dir, "orders")
-    price = F_.col("o_totalprice").cast("double")
-    price_dec = F_.col("o_totalprice").cast("decimal(18,2)")
-    target = orders.where(F_.col("o_orderkey") % 4 != 0).select(
-        "o_orderkey", "o_orderstatus", F_.round(price, 2).alias("price")
-    )
-    upd = orders.where(F_.col("o_orderkey") % 3 == 0).select(
-        "o_orderkey",
-        "o_orderstatus",
-        F_.round(price_dec * F_.lit("1.05").cast("decimal(3,2)"), 2)
-        .cast("double")
-        .alias("price"),
-        (F_.col("o_orderkey") % 5 + 1).alias("seq"),
-        F_.lit("U").alias("op"),
-    )
-    dels = orders.where(F_.col("o_orderkey") % 7 == 0).select(
-        "o_orderkey",
-        "o_orderstatus",
-        F_.lit(None).cast("double").alias("price"),
-        (F_.col("o_orderkey") % 5 + 2).alias("seq"),
-        F_.lit("D").alias("op"),
-    )
-    ins = orders.where(F_.col("o_orderkey") % 4 == 0).select(
-        "o_orderkey",
-        "o_orderstatus",
-        F_.round(price, 2).alias("price"),
-        F_.lit(1).cast("long").alias("seq"),
-        F_.lit("I").alias("op"),
-    )
-    changes = upd.unionByName(dels).unionByName(ins)
     from mapreduce_golang_spark.tempdirs import scratch_dir
 
+    target, changes = _orders_change_log(spark, sf_dir)
     work_dir = scratch_dir("mr_spark_cdc_stream_")
     return streaming_cdc_apply(spark, target, changes, "o_orderkey", work_dir)
 
@@ -993,11 +740,17 @@ _DRIVER_WINDOW: list[str] = [
 ]
 
 
-#: The query registry, in registration order: a bespoke ``(spark,
-#: sf_dir)`` function, or an ``_op`` row for a query that is one operator
-#: call on its inputs. ``queries()`` puts ``_DRIVER_WINDOW`` first.
+#: The query registry, in registration order, and the one place an
+#: operator is wired. A row is one of:
+#: - an ``_op`` row, for a query that is one operator call on fixture
+#:   tables, the session and shared derived tables (``_Derived``);
+#: - an operator that takes ``(spark, sf_dir)`` itself, or a
+#:   ``_Derived`` marker, whose table is the query's result;
+#: - a bespoke ``(spark, sf_dir)`` function, for a query that shapes its
+#:   inputs or its output around the operator call.
+#: ``queries()`` puts ``_DRIVER_WINDOW`` first.
 _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "ngram_jaccard_pairs": _ngram_jaccard,
+    "ngram_jaccard_pairs": _PAIRS,
     "rfm_user_segments": _op(analytics.rfm_user_segments, "events"),
     "scd2_point_in_time": _scd2_pit,
     "centroid_outliers": _op(similarity.centroid_outliers, "embeddings"),
@@ -1009,36 +762,42 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "source_lang_entropy": _op(text_analysis.source_lang_entropy, "documents"),
     "multi_granularity_rollup": _op(windows.multi_granularity_rollup, "events"),
     "sql_revenue_by_nation_year": _sql_interface,
-    "dsir_importance_weights": _dsir_weights,
-    "quality_classifier_scores": _quality_scores,
-    "source_mixing_weights": _mixing_weights,
-    "ccnet_perplexity_buckets": _ccnet_buckets,
-    "eval_decontamination": _eval_decontam,
+    "dsir_importance_weights": _op(mixing.dsir_importance_weights, "documents"),
+    "quality_classifier_scores": _op(mixing.quality_classifier_scores, "documents"),
+    "source_mixing_weights": _op(mixing.source_mixing_weights, "documents"),
+    "ccnet_perplexity_buckets": _op(mixing.ccnet_perplexity_buckets, "documents", nll=_NLL),
+    "eval_decontamination": _op(
+        text_analysis.eval_decontamination, "documents", overlap=_OVERLAP,
+    ),
     "minhash_ml_crosscheck": _op(dedup.minhash_ml_crosscheck, "documents"),
     "embedding_pca_topvar": _op(similarity.embedding_pca_topvar, "embeddings"),
-    "quality_weighted_sample": _quality_sample,
+    "quality_weighted_sample": _op(mixing.quality_weighted_sample, "documents"),
     "packing_efficiency_report": _op(corpus.packing_efficiency_report, "documents"),
     "common_sentence_filter": _op(text_analysis.common_sentence_filter, "documents"),
     "streaming_word_counts": events_stream.streaming_word_counts,
     "bpe_merge_candidates": _op(text_analysis.bpe_merge_candidates, "documents"),
-    "corpus_top_p_selection": _top_p_selection,
+    "corpus_top_p_selection": _op(mixing.corpus_top_p_selection, "documents"),
     "embedding_quantization_report": _op(similarity.embedding_quantization_report, "embeddings"),
-    "leakage_safe_splits": _leakage_splits,
-    "split_leakage_audit": _split_leakage,
-    "token_budget_allocation": _token_budget,
-    "ccnet_bucket_sample": _ccnet_sample,
+    "leakage_safe_splits": _op(mixing.leakage_safe_splits, "documents", pairs=_PAIRS),
+    "split_leakage_audit": _op(mixing.split_leakage_audit, "documents", pairs=_PAIRS),
+    "token_budget_allocation": _op(mixing.token_budget_allocation, "documents"),
+    "ccnet_bucket_sample": _op(mixing.ccnet_bucket_sample, "documents", nll=_NLL),
     "event_type_cooccurrence": _op(analytics.event_type_cooccurrence, "events"),
     "join_key_skew_report": _op(skew.join_key_skew_report, "events"),
-    "kmeans_silhouette": _silhouette,
+    "kmeans_silhouette": _op(similarity.kmeans_silhouette, "embeddings", centroids=_CENTROIDS),
     "conversion_latency_stats": _op(analytics.conversion_latency_stats, "events"),
-    "decontaminated_corpus": _decontaminated,
+    "decontaminated_corpus": _op(
+        text_analysis.decontaminated_corpus, "documents", overlap=_OVERLAP,
+    ),
     "doc_length_cume_dist": _op(text_analysis.doc_length_cume_dist, "documents"),
     "user_first_last_events": _op(windows.user_first_last_events, "events"),
     "component_best_representative": _op(
         dedup.component_best_representative, "documents", pairs=_PAIRS,
     ),
-    "source_token_js_divergence": _token_js,
-    "cluster_balanced_sample": _cluster_sample,
+    "source_token_js_divergence": _op(mixing.source_token_js_divergence, "documents"),
+    "cluster_balanced_sample": _op(
+        similarity.cluster_balanced_sample, "embeddings", centroids=_CENTROIDS,
+    ),
     "streaming_distinct_users": events_stream.streaming_distinct_users,
     "hot_shingles_report": _op(dedup.hot_shingles_report, "documents"),
     "value_equidepth_bins": _op(analytics.value_equidepth_bins, "events"),
@@ -1052,7 +811,7 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "session_incident_overlap": _op(windows.session_incident_overlap, "events"),
     "customer_snapshot_diff": _snapshot_diff,
     "incremental_agg_refresh": _incr_agg,
-    "streaming_incident_hours": _stream_incidents,
+    "streaming_incident_hours": events_stream.streaming_incident_hours,
     "winsorized_value_stats": _op(analytics.winsorized_value_stats, "events"),
     "event_weekday_chi2": _op(analytics.event_weekday_chi2, "events"),
     "near_dup_weighted_pagerank": _op(graph.near_dup_weighted_pagerank, "documents", pairs=_PAIRS),
@@ -1066,14 +825,14 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "deterministic_doc_sample": _op(corpus.deterministic_doc_sample, "documents"),
     "cumulative_active_users": _op(analytics.cumulative_active_users, "events"),
     "event_gap_stats": _op(windows.event_gap_stats, "events"),
-    "streaming_segment_counts": _stream_segments,
+    "streaming_segment_counts": events_stream.streaming_segment_counts,
     "props_variant_stats": _op(windows.props_variant_stats, "events"),
     "hopping_window_counts": _op(windows.hopping_window_counts, "events"),
     "gap_fill_locf": _op(windows.gap_fill_locf, "events"),
     "value_moment_stats": _op(analytics.value_moment_stats, "events"),
     "user_retention_cohorts": _op(analytics.user_retention_cohorts, "events"),
     "sentence_stats": _op(text_analysis.sentence_stats, "documents"),
-    "streaming_hopping_counts": _stream_hopping,
+    "streaming_hopping_counts": events_stream.streaming_hopping_counts,
     "value_ntile_deciles": _op(analytics.value_ntile_deciles, "events"),
     "orphan_events": _op(analytics.orphan_events, "events", "customer"),
     "lang_confusion_matrix": _op(text_analysis.lang_confusion_matrix, "documents"),
@@ -1084,7 +843,7 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "weighted_doc_sample": _op(corpus.weighted_doc_sample, "documents"),
     "edit_distance_pairs": _op(dedup.edit_distance_pairs, "documents"),
     "near_dup_clustering_coeff": _op(graph.near_dup_clustering_coeff, "documents", pairs=_PAIRS),
-    "kmeans_clusters": _kmeans,
+    "kmeans_clusters": _op(similarity.kmeans_assign, "embeddings", centroids=_CENTROIDS),
     "block_dedup_fraction": _op(text_analysis.duplicate_block_fraction, "documents"),
     "gopher_quality_flags": _op(text_analysis.gopher_quality_flags, "documents"),
     "token_pmi_pairs": _op(text_analysis.token_pmi_pairs, "documents"),
@@ -1130,7 +889,7 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "q17_small_quantity_revenue": _op(joins.q17_small_quantity_revenue, "part", "lineitem"),
     "q19_discounted_revenue": _op(joins.q19_discounted_revenue, "part", "lineitem"),
     "q22_sales_opportunity": _op(joins.q22_sales_opportunity, "customer", "orders"),
-    "bucketed_join_revenue": _bucketed_join,
+    "bucketed_join_revenue": formats.bucketed_join_revenue,
     "q2_min_cost_supplier": _op(
         joins.q2_min_cost_supplier, "region", "nation", "supplier", "part", "lineitem",
     ),
@@ -1193,15 +952,15 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "exact_dedup": _op(dedup.exact_dedup, "documents"),
     "simhash": _simhash_sigs,
     "simhash64": _op(dedup.simhash64, "documents"),
-    "simhash_pairs": _simhash_pairs,
+    "simhash_pairs": _op(dedup.simhash_pairs, "documents", sigs=_SIGS),
     "embedding_cosine_pairs": _op(dedup.embedding_cosine_pairs, "embeddings"),
     "ann_topk_bruteforce": _op(similarity.cosine_topk_bruteforce, "embeddings"),
     "ann_ivf_topk": _op(similarity.ann_ivf_topk, "embeddings"),
     "ann_lsh_topk": _op(similarity.ann_lsh_topk, "embeddings"),
-    "streaming_hourly_counts": _stream_hourly,
-    "streaming_sessionize": _stream_sessionize,
-    "streaming_stream_join": _stream_ssj,
-    "streaming_user_counts": _stream_user_counts,
+    "streaming_hourly_counts": events_stream.streaming_hourly_counts,
+    "streaming_sessionize": events_stream.streaming_sessionize,
+    "streaming_stream_join": events_stream.streaming_purchase_click_join,
+    "streaming_user_counts": events_stream.streaming_user_counts_stateful,
     "media_features": _media_features,
     "value_percentiles": _op(analytics.value_percentiles, "events"),
     "event_type_user_stats": _op(analytics.event_type_user_stats, "events"),
@@ -1220,7 +979,7 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "part_brand_hhi": _op(analytics.part_brand_hhi, "part"),
     "session_duration_histogram": _op(windows.session_duration_histogram, "events"),
     "bpe_learn_merges": _op(text_analysis.bpe_learn_merges, "documents"),
-    "semdedup_survivors": _semdedup,
+    "semdedup_survivors": _op(similarity.semdedup_survivors, "embeddings", centroids=_CENTROIDS),
     "dataset_card_report": _op(corpus.dataset_card_report, "documents"),
     "hourly_value_ohlc": _op(windows.hourly_value_ohlc, "events"),
     "monthly_metric_unpivot": _op(analytics.monthly_metric_unpivot, "orders"),
@@ -1235,7 +994,7 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "order_basket_rules": _op(analytics.order_basket_rules, "lineitem"),
     "k_anonymity_audit": _op(analytics.k_anonymity_audit, "customer"),
     "benford_price_audit": _op(analytics.benford_price_audit, "orders"),
-    "streaming_hourly_ohlc": _stream_ohlc,
+    "streaming_hourly_ohlc": events_stream.streaming_hourly_ohlc,
     "rrf_hybrid_ranking": _op(text_analysis.rrf_hybrid_ranking, "documents"),
     "value_psi_drift": _op(analytics.value_psi_drift, "events"),
     "debounced_event_stats": _op(windows.debounced_event_stats, "events"),
@@ -1327,15 +1086,15 @@ _REGISTRY: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "sessionize_table_udtf": _sessionize_table_udtf,
     "asof_cogrouped_clicks": _op(analytics.last_click_before_purchase_cogrouped, "events"),
     "observed_ingest_metrics": _op(corpus.observed_ingest_metrics, "documents"),
-    "streaming_kill_recover_dedup": _streaming_kill_recover,
+    "streaming_kill_recover_dedup": recovery.streaming_dedup_kill_recover,
     "streaming_cdc_apply_changes": _streaming_cdc_state,
-    "state_store_audit": _state_store_audit,
-    "ps_orders_status_profile": _ps_orders_profile,
-    "sql_scripting_coverage_threshold": _sql_scripting_threshold,
-    "sql_udf_price_bands": _sql_udf_bands,
-    "collated_type_counts": _collated_counts,
-    "state_schema_evolution_counts": _state_schema_evolution,
-    "foreach_batch_fanout": _foreach_batch_fanout,
+    "state_store_audit": introspection.state_store_audit,
+    "ps_orders_status_profile": pandas_api.ps_orders_status_profile,
+    "sql_scripting_coverage_threshold": sql_surface.sql_scripting_coverage_threshold,
+    "sql_udf_price_bands": sql_surface.sql_udf_price_bands,
+    "collated_type_counts": sql_surface.collated_type_counts,
+    "state_schema_evolution_counts": schema_evolution.state_schema_evolution_counts,
+    "foreach_batch_fanout": fanout.foreach_batch_fanout,
     # num_features=None: corpus-scaled HashingTF sizing (next pow2 ≥ 4×
     # approx distinct shingles), measured on the same ladder as the
     # pinned crosscheck (PERF.md)

@@ -765,8 +765,8 @@ def _loop_components(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     if changed != 0:
         raise RuntimeError(
             f"near_dup_components did not converge within max_iter={max_iter} "
-            f"({changed} labels still changing); raise max_iter — with "
-            "pointer jumping convergence needs O(log component diameter) hops"
+            f"({changed} labels still changing); raise max_iter — the hops "
+            "grow with the length of a chain whose ids are shuffled along it"
         )
     return labels, n_labels
 

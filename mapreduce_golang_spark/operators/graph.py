@@ -1,11 +1,13 @@
 """Iterative graph algorithms over document-similarity graphs.
 
-Connected components lives in operators/dedup.py (min-label
-propagation); this module adds PageRank — the canonical fixed-point
-iteration — over the near-dup pair graph. Both are DataFrame loops
-(not SQL-expressible as one query); the oracles unroll the iteration
-into chained CTEs so DuckDB computes the identical fixed number of
-steps.
+Connected components lives in operators/dedup.py: a union-find on the
+driver when the pair graph has at most GRAPH_BROADCAST_MAX_ROWS directed
+edges; above that a min-label propagation loop, whose hop count grows
+with chain length when ids are shuffled along a chain. This module adds
+PageRank — the canonical fixed-point iteration — over the near-dup pair
+graph, a DataFrame loop (not SQL-expressible as one query); the oracle
+unrolls the iteration into chained CTEs so DuckDB computes the identical
+fixed number of steps.
 
 Scale notes: per iteration one join (ranks ⋈ edges, both hash-
 partitioned on the node key) + one aggregation; checkpointing the
@@ -259,9 +261,11 @@ def dup_cluster_size_hist(df: DataFrame, pairs: DataFrame | None = None) -> Data
     noise (sizes ≤ 2) or template farms (large clusters), which
     decides keep-one vs keep-none policy.
 
-    Reuses the min-label-propagation components (O(log diameter)
-    rounds over the right-sized graph); the two histogram folds after
-    it are hash aggs bounded by n_components and max cluster size.
+    Reuses near_dup_components: a union-find on the driver at or under
+    GRAPH_BROADCAST_MAX_ROWS directed edges, above it a propagation
+    loop whose hops grow with chain length when ids are shuffled. The
+    two histogram folds after it are hash aggs bounded by n_components
+    and max cluster size.
     """
     from mapreduce_golang_spark.operators.dedup import near_dup_components
 

@@ -321,9 +321,11 @@ def leakage_safe_splits(
     same engine-portable md5 idiom as deterministic_doc_sample, so
     the assignment is reproducible run-to-run and engine-to-engine.
 
-    Scale shape: the component labels come from the pointer-jumping
-    loop (O(log diameter) rounds over the banded pair graph — never
-    all-pairs); the assignment itself is one narrow projection on the
+    Scale shape: the component labels come from near_dup_components
+    over the banded pair graph — never all-pairs: a union-find on the
+    driver at or under GRAPH_BROADCAST_MAX_ROWS directed edges, above
+    it a propagation loop whose hops grow with chain length when ids
+    are shuffled. The assignment itself is one narrow projection on the
     labels, no extra exchange. Returns (doc_id, component_id, split).
     """
     from mapreduce_golang_spark.operators.dedup import near_dup_components

@@ -73,9 +73,6 @@ def _default_master() -> str:
 
 
 def _default_shuffle_partitions() -> int:
-    explicit = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-    if explicit:
-        return int(explicit)
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus and cpus.isdigit():
         return max(int(cpus), 1)

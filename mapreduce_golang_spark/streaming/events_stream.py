@@ -1,13 +1,17 @@
-"""Structured Streaming over the `events` table (extension surface —
-the reference is strictly batch two-phase, SURVEY.md §2.3).
+"""Structured Streaming over the `events` and `documents` tables
+(extension surface — the reference is strictly batch two-phase,
+SURVEY.md §2.3).
 
-Two operators:
-- tumbling-window counts (windowed agg + watermark) — the canonical
-  streaming aggregate; run with availableNow over the parquet fixture
-  it converges to exactly the batch answer, which is what the DuckDB
-  oracle checks.
-- a custom stateful per-user counter via applyInPandasWithState —
-  the "custom stateful operator" surface (arbitrary per-key state).
+Each drain builds a streaming plan over a file-source scan of a fixture
+(``read_events_stream`` / ``read_documents_stream``), runs it to the end
+of its input with ``availableNow`` into a memory sink
+(``_run_to_memory``) and returns the drained rows. On finite input a
+drain converges to the batch answer, so the batch DuckDB oracle checks
+it. The drains cover tumbling, hopping and session windows, a
+stream-stream and a stream-static join, watermark deduplication (exact
+and MinHash-keyed), streaming COUNT(DISTINCT), OHLC bars, word count,
+and custom per-key state via applyInPandasWithState (and
+transformWithStateInPandas, which needs protobuf).
 
 Scale notes: state lives in the state store keyed by group — the
 exchange is on the group key, watermarks bound state retention for
@@ -16,6 +20,8 @@ readStream.format("kafka") — the plan shape is identical.
 """
 
 from __future__ import annotations
+
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,7 +66,29 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def _run_to_memory(result: DataFrame, name: str, output_mode: str) -> None:
+def drain_to_memory(result: DataFrame, output_mode: str) -> DataFrame:
+    """Run ``result`` with availableNow into a memory sink and return the
+    sink's rows. The sink is named uniquely for this call, so two drains
+    of the same plan never share a name or a memory table, and its temp
+    view is dropped before returning: the returned frame reads the sink
+    itself, so it still collects once the view is gone."""
+    spark = result.sparkSession
+    name = f"drain_{uuid.uuid4().hex}"
+    try:
+        (
+            result.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def _run_to_memory(result: DataFrame, output_mode: str) -> DataFrame:
     # Stateful streaming operators create one state store per shuffle
     # partition PER OPERATOR; the batch session's partition count
     # (sized for fact-table shuffles) buys nothing on the bounded
@@ -72,19 +100,12 @@ def _run_to_memory(result: DataFrame, name: str, output_mode: str) -> None:
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        return drain_to_memory(result, output_mode)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
-def streaming_hourly_counts(spark: SparkSession, sf_dir: str, query_name: str = "stream_hourly") -> DataFrame:
+def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windowed counts computed BY THE STREAMING ENGINE
     (watermark + window agg), drained with availableNow into a memory
     sink; returns the final batch DataFrame. Equals the batch answer
@@ -96,17 +117,14 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str, query_name: str = 
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"))
     )
-    _run_to_memory(agg, query_name, "complete")
-    return spark.table(query_name).select(
+    return _run_to_memory(agg, "complete").select(
         F.date_format(F.col("w.start"), _TS_FMT).alias("hour"),
         "event_type",
         "n_events",
     )
 
 
-def streaming_sessionize(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30, query_name: str = "stream_sessions"
-) -> DataFrame:
+def streaming_sessionize(spark: SparkSession, sf_dir: str, gap_minutes: int = 30) -> DataFrame:
     """Gap-based sessions computed by the STREAMING engine's native
     session_window (merging windows with a 30-min gap + watermark),
     drained with availableNow. On finite input this equals the batch
@@ -119,8 +137,7 @@ def streaming_sessionize(
         .groupBy(F.session_window("ts", f"{gap_minutes} minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    _run_to_memory(agg, query_name, "complete")
-    return spark.table(query_name).select(
+    return _run_to_memory(agg, "complete").select(
         "user_id",
         F.date_format(F.col("w.start"), _TS_FMT).alias("session_start"),
         "n_events",
@@ -128,7 +145,7 @@ def streaming_sessionize(
 
 
 def streaming_purchase_click_join(
-    spark: SparkSession, sf_dir: str, window_minutes: int = 10, query_name: str = "stream_ssj"
+    spark: SparkSession, sf_dir: str, window_minutes: int = 10
 ) -> DataFrame:
     """Stream-stream interval join: each purchase joins the same
     user's clicks from the preceding ``window_minutes``. Watermarks on
@@ -173,13 +190,10 @@ def streaming_purchase_click_join(
         "click_event_id",
         F.col("p_user").alias("user_id"),
     )
-    _run_to_memory(joined, query_name, "append")
-    return spark.table(query_name)
+    return _run_to_memory(joined, "append")
 
 
-def stream_to_parquet_exactly_once(
-    spark: SparkSession, sf_dir: str, out_path: str, query_name: str = "stream_sink"
-) -> None:
+def stream_to_parquet_exactly_once(spark: SparkSession, sf_dir: str, out_path: str) -> None:
     """foreachBatch parquet sink with idempotent batch directories:
     each micro-batch writes to batch_id-keyed partitions with
     overwrite, so a replayed batch (failure/restart) lands in the same
@@ -198,15 +212,12 @@ def stream_to_parquet_exactly_once(
         .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", f"{out_path}/_checkpoint")
         .trigger(availableNow=True)
-        .queryName(query_name)
         .start()
     )
     q.awaitTermination()
 
 
-def streaming_user_counts_stateful(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_user_counts"
-) -> DataFrame:
+def streaming_user_counts_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator: per-user running event count via
     applyInPandasWithState (arbitrary per-key state, the Spark
     equivalent of a hand-rolled stateful reducer). Drained with
@@ -237,15 +248,14 @@ def streaming_user_counts_stateful(
             update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
         )
     )
-    _run_to_memory(result, query_name, "update")
     # With availableNow the fixture drains in one batch per group →
     # the memory sink holds each user's final count exactly once.
-    return spark.table(query_name).groupBy("user_id").agg(F.max("n_events").alias("n_events"))
+    return _run_to_memory(result, "update").groupBy("user_id").agg(
+        F.max("n_events").alias("n_events")
+    )
 
 
-def streaming_dedup_events(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_dedup"
-) -> DataFrame:
+def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming deduplication: dropDuplicatesWithinWatermark on a
     content key (user_id, event_type, ts) — the ingestion-time guard
     against at-least-once upstream delivery (the same event replayed
@@ -260,13 +270,10 @@ def streaming_dedup_events(
     events = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     deduped = events.dropDuplicatesWithinWatermark(["user_id", "event_type", "ts"])
     agg = deduped.groupBy("event_type").agg(F.count("*").alias("n_unique"))
-    _run_to_memory(agg, query_name, "complete")
-    return spark.table(query_name)
+    return _run_to_memory(agg, "complete")
 
 
-def streaming_segment_counts(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_segments"
-) -> DataFrame:
+def streaming_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join — the dimension-enrichment topology the
     streaming pack was missing: the event stream joins the STATIC
     customer dimension (user_id == c_custkey) and aggregates per
@@ -292,13 +299,10 @@ def streaming_segment_counts(
         F.count("*").cast("long").alias("n_events"),
         F.round(F.sum("value"), 6).alias("sum_value"),
     )
-    _run_to_memory(agg, query_name, "complete")
-    return spark.table(query_name)
+    return _run_to_memory(agg, "complete")
 
 
-def streaming_hopping_counts(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_hopping"
-) -> DataFrame:
+def streaming_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping (sliding) windows computed BY THE STREAMING ENGINE —
     `window(ts, 10 min, 5 min)` assigns each event to its two
     overlapping windows before the keyed aggregate; the watermark
@@ -317,8 +321,7 @@ def streaming_hopping_counts(
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    _run_to_memory(agg, query_name, "complete")
-    return spark.table(query_name).select(
+    return _run_to_memory(agg, "complete").select(
         F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
         "event_type",
         "n_events",
@@ -326,9 +329,7 @@ def streaming_hopping_counts(
     )
 
 
-def streaming_user_stats_tws(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_user_tws"
-) -> DataFrame:
+def streaming_user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running stats via transformWithStateInPandas — the
     Spark 4 arbitrary-stateful API that supersedes
     applyInPandasWithState (typed state variables on a handle, timer
@@ -415,9 +416,8 @@ def streaming_user_stats_tws(
         outputMode="Update",
         timeMode="None",
     )
-    _run_to_memory(result, query_name, "update")
     return (
-        spark.table(query_name)
+        _run_to_memory(result, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -427,9 +427,7 @@ def streaming_user_stats_tws(
     )
 
 
-def streaming_incident_hours(
-    spark: SparkSession, sf_dir: str, min_errors: int = 5, query_name: str = "stream_incidents"
-) -> DataFrame:
+def streaming_incident_hours(spark: SparkSession, sf_dir: str, min_errors: int = 5) -> DataFrame:
     """The incident detector (hours with ≥ min_errors error events —
     the dimension side of session_incident_overlap) computed BY THE
     STREAMING ENGINE: pre-filter to errors, tumbling 1-hour window agg
@@ -448,9 +446,8 @@ def streaming_incident_hours(
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n_errors"))
     )
-    _run_to_memory(agg, query_name, "complete")
     return (
-        spark.table(query_name)
+        _run_to_memory(agg, "complete")
         .where(F.col("n_errors") >= min_errors)
         .select(
             F.date_format(F.col("w.start"), _TS_FMT).alias("hour"),
@@ -514,9 +511,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def streaming_word_counts(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_wc"
-) -> DataFrame:
+def streaming_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's flagship workload — wc (W1,
     /root/reference/src/mrapps/wc.go:28-43) — computed BY THE
     STREAMING ENGINE: the documents corpus as a file stream, token
@@ -538,13 +533,10 @@ def streaming_word_counts(
         F.explode(F.array_remove(F.split(F.col("text"), LETTERS_ONLY_RE), "")).alias("word")
     )
     agg = words.groupBy("word").agg(F.count("*").alias("cnt"))
-    _run_to_memory(agg, query_name, "complete")
-    return spark.table(query_name).select("word", F.col("cnt").cast("long").alias("cnt"))
+    return _run_to_memory(agg, "complete").select("word", F.col("cnt").cast("long").alias("cnt"))
 
 
-def streaming_distinct_users(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_distinct_users"
-) -> DataFrame:
+def streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running distinct-user count per event type BY THE STREAMING
     ENGINE: stateful dropDuplicates on (event_type, user_id) feeding a
     complete-mode count — the standard two-stateful-operator chain for
@@ -564,15 +556,12 @@ def streaming_distinct_users(
         .groupBy("event_type")
         .agg(F.count("*").alias("n_users"))
     )
-    _run_to_memory(agg, query_name, "complete")
-    return spark.table(query_name).select(
+    return _run_to_memory(agg, "complete").select(
         "event_type", F.col("n_users").cast("long").alias("n_users")
     )
 
 
-def streaming_hourly_ohlc(
-    spark: SparkSession, sf_dir: str, query_name: str = "stream_ohlc"
-) -> DataFrame:
+def streaming_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OHLC candlestick bars computed BY THE STREAMING ENGINE: tumbling
     1-hour event-time windows per event_type, open/close picked by
     min/max over the (ts, event_id, value) struct — the same ALGEBRAIC
@@ -597,8 +586,7 @@ def streaming_hourly_ohlc(
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
         )
     )
-    _run_to_memory(agg, query_name, "complete")
-    return spark.table(query_name).select(
+    return _run_to_memory(agg, "complete").select(
         F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
         "event_type",
         F.round(F.col("o.value"), 6).alias("open"),
@@ -621,11 +609,7 @@ MINHASH_MIX_P = 4_294_967_291
 
 
 def streaming_near_dup_docs(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "stream_near_dup",
-    k: int = 3,
-    n_hashes: int = 12,
+    spark: SparkSession, sf_dir: str, k: int = 3, n_hashes: int = 12
 ) -> DataFrame:
     """Streaming NEAR-duplicate suppression: dropDuplicatesWithinWatermark
     keyed on a full MinHash signature instead of an exact column — the
@@ -673,9 +657,8 @@ def streaming_near_dup_docs(
     oracle computes directly.
     """
     survivors = near_dup_survivors_stream(spark, sf_dir, k=k, n_hashes=n_hashes)
-    _run_to_memory(survivors, query_name, "append")
     return (
-        spark.table(query_name)
+        _run_to_memory(survivors, "append")
         .groupBy("source")
         .agg(F.count("*").cast("long").alias("n_unique_docs"))
     )

@@ -52,15 +52,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .chunks import CHUNK_SCHEMA, build_plain_chunks
+from .events_stream import drain_to_memory
 
 #: events rows with pmod(event_id, 4) in {0,1} are "era 1" (counted
 #: under the old count-only schema); {2,3} are "era 2" (after the
 #: evolution adds sum(value)). The DuckDB oracle uses the same split.
 N_CHUNKS = 4
 ERA_SPLIT = 2
-
-# memory-sink name sequence (see state_schema_evolution_counts)
-_SINK_SEQ = 0
 
 
 def _count_plan(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -182,25 +180,9 @@ def state_schema_evolution_counts(spark: SparkSession, sf_dir: str) -> DataFrame
         spark, sf_dir, os.path.join(work_dir, "era2"),
         n_chunks=N_CHUNKS, chunk_range=(ERA_SPLIT, N_CHUNKS),
     )
-    # Monotonic counter, not hash(work_dir): hash collisions would
-    # silently REPLACE a memory table a still-lazy DataFrame from an
-    # earlier invocation reads (round-11 advice #5). Each invocation
-    # leaks one small memory-sink table for session lifetime (bench
-    # runs this ~3x/round) — bounded and accepted; a counter makes the
-    # name collision-free by construction.
-    global _SINK_SEQ
-    _SINK_SEQ += 1
-    sink = f"evolved_era2_{_SINK_SEQ}"
-    q = (
-        _evolved_plan(spark, era2_dir)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    era2 = spark.table(sink).select(
+    # drained at the session's shuffle width: the width pin of the
+    # events drains (events_stream._run_to_memory) would reshape this plan
+    era2 = drain_to_memory(_evolved_plan(spark, era2_dir), "complete").select(
         "event_type",
         F.col("n").alias("new_n"),
         F.col("val_sum").alias("era2_sum"),

@@ -200,7 +200,7 @@ def test_streaming_near_dup_collapses_near_identical(spark, tmp_path):
     pq.write_table(pa.Table.from_pandas(df), d + "/documents.parquet")
     from mapreduce_golang_spark.streaming.events_stream import streaming_near_dup_docs
 
-    out = streaming_near_dup_docs(spark, d, query_name="stream_near_dup_unit")
+    out = streaming_near_dup_docs(spark, d)
     got = {r.source: r.n_unique_docs for r in out.collect()}
     assert got == {"s1": 2}
 

@@ -116,9 +116,7 @@ def test_near_dup_stream_foreachbatch_parquet_sink(spark, sf_dir, tmp_path):
     }
     want = {
         r.source: r.n_unique_docs
-        for r in streaming_near_dup_docs(
-            spark, sf_dir, query_name="stream_near_dup_feb_ref"
-        ).collect()
+        for r in streaming_near_dup_docs(spark, sf_dir).collect()
     }
     assert got == want and sum(got.values()) > 0
 

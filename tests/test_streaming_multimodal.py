@@ -36,7 +36,7 @@ def test_streaming_incident_hours_nonempty_at_low_threshold(spark, sf_dir):
     from mapreduce_golang_spark.streaming.events_stream import streaming_incident_hours
 
     def fn(sp, d):
-        return streaming_incident_hours(sp, d, min_errors=2, query_name="stream_incidents_lo")
+        return streaming_incident_hours(sp, d, min_errors=2)
 
     sql = """
         SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
@@ -76,13 +76,13 @@ def test_foreachbatch_sink_exactly_once(spark, sf_dir, tmp_path):
     from mapreduce_golang_spark.streaming.events_stream import stream_to_parquet_exactly_once
 
     out = str(tmp_path / "sink")
-    stream_to_parquet_exactly_once(spark, sf_dir, out, query_name="sink_t1")
+    stream_to_parquet_exactly_once(spark, sf_dir, out)
     written = spark.read.parquet(out)
     n_src = load_table(spark, sf_dir, "events").count()
     assert written.count() == n_src
     # replay: restarting against the same checkpoint must be a no-op
     # (no new batches, no duplicated rows)
-    stream_to_parquet_exactly_once(spark, sf_dir, out, query_name="sink_t2")
+    stream_to_parquet_exactly_once(spark, sf_dir, out)
     assert spark.read.parquet(out).count() == n_src
 
 
@@ -101,6 +101,26 @@ def test_streaming_equals_batch_hourly(spark, sf_dir):
         for r in entrymod.queries()["streaming_hourly_counts"](spark, sf_dir).collect()
     }
     assert stream == {k: v for k, v in batch.items()}
+
+
+def test_drains_drop_their_sinks_and_keep_their_rows(spark, sf_dir):
+    # Each drain names its own memory sink and drops the sink's view
+    # before it returns; the frame it returns reads the sink itself, so
+    # a later drain of the same query neither collides with it nor
+    # replaces its rows. Sequential on purpose: concurrent drains race
+    # on the shuffle-partition pin of _run_to_memory.
+    from tests.oracle import assert_same_rowset
+
+    def views():
+        return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+    qs = entrymod.queries()
+    before = views()
+    first = qs["streaming_word_counts"](spark, sf_dir)
+    qs["streaming_word_counts"](spark, sf_dir)
+    qs["streaming_hourly_counts"](spark, sf_dir)
+    assert views() == before
+    assert assert_same_rowset(first.toPandas(), qs["wc"](spark, sf_dir).toPandas()) > 0
 
 
 def test_transform_with_state_gate(spark, sf_dir):
