@@ -1239,7 +1239,9 @@ def embedding_cosine_pairs(embeddings: DataFrame, threshold: float = 0.4, n_bloc
     )
     thr = threshold
 
-    def block_pairs(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # no type hints: applyInPandas infers its eval type from them and
+    # warns unless every parameter has one; unhinted is the grouped map
+    def block_pairs(key, pdf):
         import numpy as np
 
         ki, kj = key

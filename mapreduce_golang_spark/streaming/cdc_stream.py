@@ -36,12 +36,12 @@ piecewise ≡ one-shot.
 from __future__ import annotations
 
 import os
-import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .chunks import start_stream, wait_for_commits, write_chunks
 
 #: chunks are seq-DESCENDING: chunk 0 carries the HIGHEST sequence
 #: numbers, later chunks ever-lower ones — maximal cross-batch
@@ -79,35 +79,8 @@ def write_seq_banded_chunks(changes: DataFrame, work_dir: str) -> str:
     source (oldest-first) delivers the newest sequence numbers FIRST
     and every later micro-batch is out-of-order history."""
     input_dir = os.path.join(work_dir, "changes")
-    os.makedirs(input_dir, exist_ok=True)
-    base = int(time.time()) - 3600
-
-    # the per-band write jobs are independent (disjoint seq ranges,
-    # disjoint stage dirs) — submitted from a thread pool so they
-    # overlap inside the one Spark app (optimization-guide §2.6; same
-    # A/B evidence as chunks.build_plain_chunks: 0.98 → 0.38 s for a
-    # 4-chunk build, row sets identical). mtimes come from the band
-    # INDEX, so the oldest-first drain order is unchanged.
-    def _one(item) -> None:
-        i, (lo, hi) = item
-        stage_dir = os.path.join(work_dir, f"stage{i}")
-        chunk = changes.where(
-            (F.col("seq") >= lo) & (F.col("seq") <= hi)
-        ).coalesce(1)
-        chunk.write.mode("overwrite").parquet(stage_dir)
-        part = next(
-            f for f in os.listdir(stage_dir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        dst = os.path.join(input_dir, f"chunk_{i:02d}.parquet")
-        shutil.copyfile(os.path.join(stage_dir, part), dst)
-        os.utime(dst, (base + i, base + i))
-        shutil.rmtree(stage_dir, ignore_errors=True)
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, len(_SEQ_BANDS))) as pool:
-        list(pool.map(_one, enumerate(_SEQ_BANDS)))
+    bands = [changes.where((F.col("seq") >= lo) & (F.col("seq") <= hi)) for lo, hi in _SEQ_BANDS]
+    write_chunks(bands, input_dir, 0)
     return input_dir
 
 
@@ -169,41 +142,16 @@ def streaming_cdc_apply(
             os.path.join(state_root, f"v_{batch_id:09d}")
         )
 
-    cp = os.path.join(work_dir, "checkpoint")
-
     def start(available_now: bool):
-        writer = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(input_dir)
-            .writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", cp)
+        # one file per micro-batch in both phases: each seq band is its own batch
+        reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        return start_stream(
+            reader, input_dir, lambda df: df.writeStream.foreachBatch(apply_batch), work_dir, available_now
         )
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        else:
-            writer = writer.trigger(processingTime="50 milliseconds")
-        return writer.start()
 
     if stop_after_commits is not None:
-        commits = os.path.join(cp, "commits")
-        q = start(available_now=False)
-        deadline = time.time() + 180.0
-        try:
-            while (
-                not os.path.isdir(commits)
-                or sum(1 for f in os.listdir(commits) if f.isdigit())
-                < stop_after_commits
-            ):
-                if time.time() > deadline:
-                    raise TimeoutError("CDC stream never reached stop point")
-                time.sleep(0.05)
-        finally:
-            q.stop()
-            q.awaitTermination()
-
-    q = start(available_now=True)
-    q.awaitTermination()
+        wait_for_commits(start(available_now=False), work_dir, stop_after_commits, 180.0)
+    start(available_now=True).awaitTermination()
 
     final = spark.read.parquet(os.path.join(state_root, versions()[-1]))
     return final.where(F.col("op") != "D").select(*target.columns)

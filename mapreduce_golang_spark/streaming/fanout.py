@@ -47,8 +47,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .chunks import CHUNK_SCHEMA, build_plain_chunks
-from .recovery import wait_for_commits
+from .chunks import CHUNK_SCHEMA, build_plain_chunks, start_stream, wait_for_commits
 
 
 def make_fanout_writer(sink_raw: str, sink_agg: str):
@@ -75,31 +74,15 @@ def make_fanout_writer(sink_raw: str, sink_agg: str):
     return write_batch
 
 
-def _start(
-    spark: SparkSession,
-    input_dir: str,
-    work_dir: str,
-    available_now: bool,
-    per_file_batches: bool,
-):
-    reader = spark.readStream.schema(CHUNK_SCHEMA)
-    if per_file_batches:
-        reader = reader.option("maxFilesPerTrigger", "1")
-    plan = reader.parquet(input_dir)
-    writer = (
-        plan.writeStream.foreachBatch(
-            make_fanout_writer(
-                os.path.join(work_dir, "sink_raw"),
-                os.path.join(work_dir, "sink_agg"),
-            )
-        )
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
+def _start(spark: SparkSession, input_dir: str, work_dir: str, available_now: bool):
+    write_batch = make_fanout_writer(os.path.join(work_dir, "sink_raw"), os.path.join(work_dir, "sink_agg"))
+    return start_stream(
+        spark.readStream.schema(CHUNK_SCHEMA),
+        input_dir,
+        lambda df: df.writeStream.foreachBatch(write_batch),
+        work_dir,
+        available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="50 milliseconds")
-    return writer.start()
 
 
 def inject_replay(work_dir: str) -> int | None:
@@ -166,26 +149,18 @@ def run_fanout_with_replay(
     input_dir = build_plain_chunks(
         spark, sf_dir, os.path.join(work_dir, "input")
     )
-    q = _start(spark, input_dir, work_dir, available_now=False, per_file_batches=True)
-    wait_for_commits(q, work_dir, 2, timeout_s)
-    replayed = inject_replay(work_dir)
     # 4 chunk files → at most 4 one-file batches; once all are
     # committed a stop can only land on a boundary, where injection
     # always succeeds, so the retry loop is bounded.
-    want_commits = 3
-    while replayed is None:
-        if want_commits > 4:
-            raise AssertionError(
-                "no genuine replay position after draining all chunks"
-            )
-        q = _start(
-            spark, input_dir, work_dir, available_now=False, per_file_batches=True
-        )
+    for want_commits in range(2, 5):
+        q = _start(spark, input_dir, work_dir, available_now=False)
         wait_for_commits(q, work_dir, want_commits, timeout_s)
-        want_commits += 1
         replayed = inject_replay(work_dir)
-    q = _start(spark, input_dir, work_dir, available_now=True, per_file_batches=False)
-    q.awaitTermination()
+        if replayed is not None:
+            break
+    else:
+        raise AssertionError("no genuine replay position after draining all chunks")
+    _start(spark, input_dir, work_dir, available_now=True).awaitTermination()
     commit_marker = os.path.join(work_dir, "checkpoint", "commits", str(replayed))
     if not os.path.exists(commit_marker):
         raise AssertionError(

@@ -34,6 +34,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .chunks import drain_noop
+
 
 def drain_dedup_checkpoint(
     spark: SparkSession, sf_dir: str, work_dir: str
@@ -43,15 +45,7 @@ def drain_dedup_checkpoint(
     from .events_stream import read_events_stream
 
     cp = os.path.join(work_dir, "checkpoint")
-    q = (
-        read_events_stream(spark, sf_dir)
-        .dropDuplicates(["event_id"])
-        .writeStream.format("noop")
-        .option("checkpointLocation", cp)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_noop(read_events_stream(spark, sf_dir).dropDuplicates(["event_id"]), cp, "append")
     return cp
 
 

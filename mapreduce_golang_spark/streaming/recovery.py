@@ -34,10 +34,13 @@ from __future__ import annotations
 
 import os
 import shutil
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+# committed_batches: the SIGKILL test polls the worker's commits here
+from .chunks import committed_batches, start_stream, wait_for_commits, write_chunks  # noqa: F401
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 
@@ -52,108 +55,41 @@ _CHUNK_SCHEMA = "event_id bigint, user_id bigint, event_type string, ts timestam
 
 def build_chunked_input(spark: SparkSession, sf_dir: str, work_dir: str) -> str:
     """Write the events fixture as 2×N ordered single-file chunks under
-    ``work_dir/input`` — the second N repeat the first N row-for-row.
+    ``work_dir/input`` — the second N repeat the first N byte-for-byte.
     File mtimes increase with chunk index so the streaming file source
-    (oldest-first) drains them in order. Returns the input dir.
-
-    The N chunk-write jobs are independent (disjoint row sets, disjoint
-    stage dirs), so they are submitted from a thread pool and overlap
-    inside the one Spark app (optimization-guide §2.6) — same move,
-    same A/B evidence as chunks.build_plain_chunks (0.98 → 0.38 s
-    min-of-6 for a 4-chunk build, row sets identical). mtimes come
-    from the chunk INDEX, so drain order is unchanged."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    (oldest-first) drains them in order. Returns the input dir."""
     from ..sources.tables import load_table
 
     input_dir = os.path.join(work_dir, "input")
-    os.makedirs(input_dir, exist_ok=True)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "ts"
     )
-    base = int(time.time()) - 3600
-
-    def _one(i: int) -> None:
-        stage_dir = os.path.join(work_dir, f"stage{i}")
-        chunk = events.where(
-            F.pmod(F.col("event_id"), F.lit(N_UNIQUE_CHUNKS)) == i
-        ).coalesce(1)
-        chunk.write.mode("overwrite").parquet(stage_dir)
-        part = next(
-            f for f in os.listdir(stage_dir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        for j, name in ((i, f"chunk_{i:02d}.parquet"),
-                        (i + N_UNIQUE_CHUNKS, f"chunk_{i + N_UNIQUE_CHUNKS:02d}.parquet")):
-            dst = os.path.join(input_dir, name)
-            shutil.copyfile(os.path.join(stage_dir, part), dst)
-            os.utime(dst, (base + j, base + j))
-        shutil.rmtree(stage_dir, ignore_errors=True)
-
-    with ThreadPoolExecutor(max_workers=N_UNIQUE_CHUNKS) as pool:
-        list(pool.map(_one, range(N_UNIQUE_CHUNKS)))
+    pmod = F.pmod(F.col("event_id"), F.lit(N_UNIQUE_CHUNKS))
+    firsts = write_chunks([events.where(pmod == i) for i in range(N_UNIQUE_CHUNKS)], input_dir, 0)
+    for i, src in enumerate(firsts):
+        dst = os.path.join(input_dir, f"chunk_{i + N_UNIQUE_CHUNKS:02d}.parquet")
+        shutil.copyfile(src, dst)
+        mtime = os.path.getmtime(src) + N_UNIQUE_CHUNKS
+        os.utime(dst, (mtime, mtime))
     return input_dir
 
 
-def _dedup_plan(
-    spark: SparkSession, input_dir: str, per_file_batches: bool = True
-) -> DataFrame:
-    reader = spark.readStream.schema(_CHUNK_SCHEMA)
-    if per_file_batches:
-        # phase 1 needs MANY small commits so the stop lands mid-drain
-        reader = reader.option("maxFilesPerTrigger", "1")
-    # the resume drops the rate limit: the WAL-pinned in-flight batch
-    # replays with its exact original file set either way, and the
-    # remainder drains in ONE batch instead of six (~3 s saved at
-    # sf0.1 — batch planning + state commit per micro-batch is the
-    # floor, not data volume). Source rate options are plan-side, not
-    # checkpoint-pinned, so changing them across a restart is the
-    # standard supported practice.
-    return reader.parquet(input_dir).dropDuplicates(["event_id"])
+def start_dedup(spark: SparkSession, input_dir: str, work_dir: str, available_now: bool) -> StreamingQuery:
+    """The checkpointed dedup stream into the parquet sink ``work_dir/out``.
+    The resume (availableNow) drops phase 1's one-file rate limit, so
+    the remainder drains in ONE batch instead of six (~3 s saved at
+    sf0.1 — batch planning + state commit per micro-batch is the floor,
+    not data volume)."""
 
+    def sink(events: DataFrame):
+        return (
+            events.dropDuplicates(["event_id"])
+            .writeStream.format("parquet")
+            .option("path", os.path.join(work_dir, "out"))
+            .outputMode("append")
+        )
 
-def _start_sink(plan: DataFrame, work_dir: str, available_now: bool):
-    writer = (
-        plan.writeStream.format("parquet")
-        .option("path", os.path.join(work_dir, "out"))
-        .option("checkpointLocation", os.path.join(work_dir, "checkpoint"))
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="50 milliseconds")
-    return writer.start()
-
-
-def committed_batches(work_dir: str) -> int:
-    commits = os.path.join(work_dir, "checkpoint", "commits")
-    if not os.path.isdir(commits):
-        return 0
-    return sum(1 for f in os.listdir(commits) if f.isdigit())
-
-
-def wait_for_commits(q, work_dir: str, n_commits: int, timeout_s: float) -> int:
-    """Wait until ``n_commits`` micro-batches have committed, then STOP
-    the query. Fails fast if the stream dies (q.exception) instead of
-    spinning out the timeout masking the real error. Returns the
-    commit count at stop time. Shared by the kill-recover and fanout
-    proofs' phase 1."""
-    deadline = time.time() + timeout_s
-    try:
-        while committed_batches(work_dir) < n_commits:
-            exc = q.exception()
-            if exc is not None:
-                raise exc
-            if time.time() > deadline:
-                raise TimeoutError(
-                    f"only {committed_batches(work_dir)} commits after {timeout_s}s"
-                )
-            time.sleep(0.05)
-    finally:
-        q.stop()
-        q.awaitTermination()
-    return committed_batches(work_dir)
+    return start_stream(spark.readStream.schema(_CHUNK_SCHEMA), input_dir, sink, work_dir, available_now)
 
 
 def run_until_n_commits(
@@ -164,7 +100,7 @@ def run_until_n_commits(
     mid-drain, as soon as ``n_commits`` micro-batches have committed
     (well before the 2×N chunk files are drained). Returns the commit
     count at stop time."""
-    q = _start_sink(_dedup_plan(spark, input_dir), work_dir, available_now=False)
+    q = start_dedup(spark, input_dir, work_dir, available_now=False)
     return wait_for_commits(q, work_dir, n_commits, timeout_s)
 
 
@@ -174,12 +110,7 @@ def resume_and_drain(spark: SparkSession, input_dir: str, work_dir: str) -> None
     batch from the WAL, restores the dedup state store, and the file
     sink's commit log makes any orphaned files from the killed batch
     invisible to readers."""
-    q = _start_sink(
-        _dedup_plan(spark, input_dir, per_file_batches=False),
-        work_dir,
-        available_now=True,
-    )
-    q.awaitTermination()
+    start_dedup(spark, input_dir, work_dir, available_now=True).awaitTermination()
 
 
 def read_sink(spark: SparkSession, work_dir: str) -> DataFrame:

@@ -51,7 +51,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .chunks import CHUNK_SCHEMA, build_plain_chunks
+from .chunks import CHUNK_SCHEMA, build_plain_chunks, drain_noop
 from .events_stream import drain_to_memory
 
 #: events rows with pmod(event_id, 4) in {0,1} are "era 1" (counted
@@ -102,15 +102,7 @@ def drain_era1(spark: SparkSession, sf_dir: str, work_dir: str) -> str:
         n_chunks=N_CHUNKS, chunk_range=(0, ERA_SPLIT),
     )
     cp = os.path.join(work_dir, "cp_era1")
-    q = (
-        _count_plan(spark, input_dir)
-        .writeStream.format("noop")
-        .option("checkpointLocation", cp)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_noop(_count_plan(spark, input_dir), cp, "update")
     return cp
 
 
@@ -133,15 +125,7 @@ def attempt_incompatible_restart(
         n_chunks=N_CHUNKS, chunk_range=(ERA_SPLIT, N_CHUNKS),
     )
     try:
-        q = (
-            _evolved_plan(spark, input_dir)
-            .writeStream.format("noop")
-            .option("checkpointLocation", cp)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain_noop(_evolved_plan(spark, input_dir), cp, "update")
         return None
     except Exception as exc:  # noqa: BLE001 — the guard IS the result
         return exc

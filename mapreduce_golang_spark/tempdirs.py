@@ -1,6 +1,9 @@
 """Process-lifetime scratch directories for queries that need a
-checkpoint / state / sink on disk (streaming kill-recover, state-store
-introspection, streaming CDC apply).
+checkpoint / state / sink / table on disk: the streaming proofs
+(kill-recover in streaming/recovery.py, state-store introspection,
+foreachBatch fanout, state schema evolution, and the CDC apply that
+`__spark_entry__._streaming_cdc_state` runs) and the bucketed tables of
+sources/formats.py.
 
 Those queries return a DataFrame that LAZILY reads from the scratch
 dir (statestore scan, file-sink read), so the dir cannot be removed

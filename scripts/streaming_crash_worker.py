@@ -24,11 +24,11 @@ def main() -> None:
     input_dir, work_dir = sys.argv[1], sys.argv[2]
     os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
     from mapreduce_golang_spark.session import get_spark
-    from mapreduce_golang_spark.streaming.recovery import _dedup_plan, _start_sink
+    from mapreduce_golang_spark.streaming.recovery import start_dedup
 
     spark = get_spark(app_name="crash-worker")
     spark.sparkContext.setLogLevel("ERROR")
-    q = _start_sink(_dedup_plan(spark, input_dir), work_dir, available_now=False)
+    q = start_dedup(spark, input_dir, work_dir, available_now=False)
     print("WORKER_STARTED", flush=True)
     q.awaitTermination()  # blocks until SIGKILL
 

@@ -10,6 +10,7 @@ What threading could have broken, pinned here explicitly:
   finished last;
 - the row PARTITION: each selected row lands in exactly one chunk.
 
+All three layouts come from one writer, streaming/chunks.py::write_chunks.
 The end-to-end streaming proofs (fanout, schema evolution, kill/
 recover, CDC) cover the same properties implicitly; these stay cheap
 and point at the builder when they fail.
@@ -20,6 +21,7 @@ from __future__ import annotations
 import os
 
 from mapreduce_golang_spark.sources.tables import load_table
+from mapreduce_golang_spark.streaming.cdc_stream import _SEQ_BANDS, write_seq_banded_chunks
 from mapreduce_golang_spark.streaming.chunks import build_plain_chunks
 from mapreduce_golang_spark.streaming.recovery import (
     N_UNIQUE_CHUNKS,
@@ -68,3 +70,21 @@ def test_recovery_chunks_second_half_duplicates_first(spark, sf_dir, tmp_path):
         b = os.path.join(input_dir, names[i + N_UNIQUE_CHUNKS])
         with open(a, "rb") as fa, open(b, "rb") as fb:
             assert fa.read() == fb.read(), f"chunk {i + N_UNIQUE_CHUNKS} must byte-duplicate chunk {i}"
+
+
+def test_cdc_chunks_band_change_rows_by_seq(spark, tmp_path):
+    # seqs 1..7 put rows in every band of the seq-descending layout
+    changes = spark.createDataFrame(
+        [(k, k % 7 + 1, "U") for k in range(40)], "k bigint, seq bigint, op string"
+    )
+    input_dir = write_seq_banded_chunks(changes, str(tmp_path))
+    names = _chunks_sorted_by_name(input_dir)
+    assert names == [f"chunk_{i:02d}.parquet" for i in range(len(_SEQ_BANDS))]
+    mtimes = [os.path.getmtime(os.path.join(input_dir, n)) for n in names]
+    assert mtimes == sorted(mtimes) and len(set(mtimes)) == len(mtimes)
+    got = []
+    for name, (lo, hi) in zip(names, _SEQ_BANDS):
+        rows = spark.read.parquet(os.path.join(input_dir, name)).collect()
+        assert rows and all(lo <= r.seq <= hi for r in rows), (name, lo, hi)
+        got += map(tuple, rows)
+    assert sorted(got) == sorted(map(tuple, changes.collect()))

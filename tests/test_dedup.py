@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import warnings
+
 import __spark_entry__ as entrymod
 import pytest
 
@@ -17,6 +19,15 @@ DEDUP_QUERIES = [
 @pytest.mark.parametrize("name", DEDUP_QUERIES)
 def test_matches_oracle(query_check, name):
     assert query_check(name) > 0
+
+
+def test_embedding_cosine_pairs_builds_without_a_warning(spark, sf_dir):
+    # applyInPandas warns when it cannot infer an eval type from the
+    # function's type hints, as when only some parameters carry one
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        entrymod.queries()["embedding_cosine_pairs"](spark, sf_dir)
+    assert [str(w.message) for w in caught if issubclass(w.category, UserWarning)] == []
 
 
 def test_exact_dedup_collapses_duplicates(spark):

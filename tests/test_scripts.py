@@ -14,7 +14,7 @@ import pytest
 from tests import oracle
 
 SCRIPTS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts")
-LOADED = ("run_query", "query_profile", "ab", "correctness_gate", "registry_check")
+LOADED = ("run_query", "query_profile", "ab", "correctness_gate", "registry_check", "code_lines")
 
 
 def load_script(name: str):

@@ -157,3 +157,22 @@ def test_sigkill_resume_equals_uninterrupted(spark, sf_dir, tmp_path):
         )
     )
     assert got == _ground_truth(spark, sf_dir)
+
+
+def test_cdc_stream_death_surfaces_its_own_error(spark, tmp_path):
+    """A CDC stream whose micro-batches fail inside foreachBatch must
+    raise its own StreamingQueryException as soon as it dies, not spin
+    out the 180 s commit wait first."""
+    from mapreduce_golang_spark.streaming.cdc_stream import streaming_cdc_apply
+    from pyspark.errors import StreamingQueryException
+
+    target = spark.createDataFrame([(1, "old")], "k bigint, status string")
+    # the extra column breaks cdc_merge_step's unionByName with the state
+    changes = spark.createDataFrame(
+        [(1, "new", 1, "U", "x"), (2, "new", 5, "U", "x")],
+        "k bigint, status string, seq bigint, op string, extra string",
+    )
+    started = time.time()
+    with pytest.raises(StreamingQueryException):
+        streaming_cdc_apply(spark, target, changes, "k", str(tmp_path), stop_after_commits=2)
+    assert time.time() - started < 60
