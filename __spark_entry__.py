@@ -50,19 +50,32 @@ from mapreduce_golang_spark.streaming import (
 )
 
 
+#: The two session settings every query relies on: the session timezone
+#: is UTC (timestamp→string formatting must match the UTC-naive DuckDB
+#: oracle regardless of the host JVM timezone), and a TIMESTAMP(NANOS)
+#: parquet column reads as int64 nanos, which ``load_table`` and
+#: ``read_events_stream`` truncate to micros (Spark's reader refuses the
+#: type otherwise).
+_SESSION_INVARIANTS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
 def _shipped(fn):
     """Per-call session fixup — the grading driver owns the
     SparkSession, so anything it didn't configure must be set lazily:
-    ship the package to executors (addPyFile) and pin the session
-    timezone to UTC (timestamp→string formatting must match the
-    UTC-naive DuckDB oracle regardless of the host JVM timezone). The
-    zone is written only when it differs, so building a query leaves a
-    session that is already on UTC untouched."""
+    ship the package to executors (addPyFile) and pin the two
+    ``_SESSION_INVARIANTS``, the UTC session timezone and
+    ``nanosAsLong``. Each is written only when it differs, so building a
+    query leaves a session that already holds them untouched; no query
+    path writes the session conf otherwise."""
 
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
         ensure_package_shipped(spark)
-        if spark.conf.get("spark.sql.session.timeZone") != "UTC":
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
+        for key, value in _SESSION_INVARIANTS.items():
+            if spark.conf.get(key) != value:
+                spark.conf.set(key, value)
         return fn(spark, sf_dir)
 
     return wrapper
@@ -584,15 +597,15 @@ def _polymorphic_trigrams(spark, sf_dir):
     from mapreduce_golang_spark.functions.udtf import register_udtfs
 
     register_udtfs(spark)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("docs_ngx")
     return spark.sql(
         """
         SELECT tok_1, tok_2, tok_3, count(*) AS cnt
-        FROM docs_ngx, LATERAL ngram_explode(text, 3)
+        FROM {docs}, LATERAL ngram_explode(text, 3)
         GROUP BY tok_1, tok_2, tok_3
         ORDER BY cnt DESC, tok_1, tok_2, tok_3
         LIMIT 25
-        """
+        """,
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -680,12 +693,11 @@ def _sessionize_table_udtf(spark, sf_dir):
     from mapreduce_golang_spark.functions.udtf import register_udtfs
 
     register_udtfs(spark)
-    load_table(spark, sf_dir, "events").select(
-        "user_id", F_.unix_micros("ts").alias("us"), "event_id"
-    ).createOrReplaceTempView("_sess_tf_in")
     out = spark.sql(
-        "SELECT * FROM sessionize_tf(TABLE(_sess_tf_in) "
-        "PARTITION BY user_id ORDER BY (us, event_id))"
+        "SELECT * FROM sessionize_tf(TABLE({t}) PARTITION BY user_id ORDER BY (us, event_id))",
+        t=load_table(spark, sf_dir, "events").select(
+            "user_id", F_.unix_micros("ts").alias("us"), "event_id"
+        ),
     )
     return out.select(
         "user_id",

@@ -36,31 +36,24 @@ def sql_scripting_coverage_threshold(spark: SparkSession, sf_dir: str) -> DataFr
     ≥90 % of orders fall at or under it; returns (threshold,
     covered_frac). The oracle re-derives the same fixpoint
     declaratively: the smallest power of two whose coverage ≥ 0.9."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "sql_script_orders_v"
+    return spark.sql(
+        """
+        BEGIN
+          DECLARE thr DOUBLE DEFAULT 1.0;
+          DECLARE frac DOUBLE DEFAULT 0.0;
+          WHILE frac < 0.9 DO
+            SET thr = thr * 2;
+            SET frac = (
+              SELECT avg(CASE WHEN CAST(o_totalprice AS DOUBLE) <= thr
+                         THEN 1.0 ELSE 0.0 END)
+              FROM {orders});
+          END WHILE;
+          SELECT CAST(thr AS DOUBLE) AS threshold,
+                 round(frac, 6) AS covered_frac;
+        END
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
-    prev = spark.conf.get("spark.sql.scripting.enabled", "false")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
-        return spark.sql(
-            """
-            BEGIN
-              DECLARE thr DOUBLE DEFAULT 1.0;
-              DECLARE frac DOUBLE DEFAULT 0.0;
-              WHILE frac < 0.9 DO
-                SET thr = thr * 2;
-                SET frac = (
-                  SELECT avg(CASE WHEN CAST(o_totalprice AS DOUBLE) <= thr
-                             THEN 1.0 ELSE 0.0 END)
-                  FROM sql_script_orders_v);
-              END WHILE;
-              SELECT CAST(thr AS DOUBLE) AS threshold,
-                     round(frac, 6) AS covered_frac;
-            END
-            """
-        )
-    finally:
-        spark.conf.set("spark.sql.scripting.enabled", prev)
 
 
 def sql_udf_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -70,9 +63,6 @@ def sql_udf_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     writing the CASE by hand (zero per-row call overhead, full codegen,
     unlike external Python/JVM UDFs), which is exactly what the oracle
     checks by inlining the body."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "sql_udf_orders_v"
-    )
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION price_band(p DOUBLE)
@@ -87,9 +77,10 @@ def sql_udf_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT price_band(CAST(o_totalprice AS DOUBLE)) AS band,
                CAST(count(*) AS BIGINT) AS n_orders,
                round(sum(CAST(o_totalprice AS DOUBLE)), 2) AS total_revenue
-        FROM sql_udf_orders_v
+        FROM {orders}
         GROUP BY 1
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -103,9 +94,6 @@ def collated_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: grouping by lower() — provably equal on ASCII data, which
     the pytest complements by showing the UN-collated grouping differs
     (the scramble really split the groups)."""
-    load_table(spark, sf_dir, "part").createOrReplaceTempView(
-        "collation_part_v"
-    )
     return spark.sql(
         """
         SELECT CAST(lower(ci) AS STRING) AS p_type_ci,
@@ -113,8 +101,9 @@ def collated_type_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (
           SELECT collate(CASE WHEN p_partkey % 2 = 0 THEN upper(p_type)
                               ELSE lower(p_type) END, 'UTF8_LCASE') AS ci
-          FROM collation_part_v
+          FROM {part}
         )
         GROUP BY ci
-        """
+        """,
+        part=load_table(spark, sf_dir, "part"),
     )

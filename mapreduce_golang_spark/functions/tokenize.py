@@ -24,6 +24,12 @@ def words(text_col: Column | str) -> Column:
     return F.split(col, LETTERS_ONLY_RE)
 
 
+def letter_tokens(col: Column) -> Column:
+    """Array of the non-empty letters-only tokens of ``col``, case kept;
+    callers that want lower case pass ``F.lower(...)``."""
+    return F.array_remove(F.split(col, LETTERS_ONLY_RE), "")
+
+
 def tokenize(df: DataFrame, text_col: str = "text", out: str = "word", keep: tuple[str, ...] = ()) -> DataFrame:
     """One row per token: explode(split) + drop the empty token that a
     leading/trailing separator produces. 1→N row explosion is the Spark

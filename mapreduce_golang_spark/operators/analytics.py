@@ -182,7 +182,9 @@ def weighted_median_value(events: DataFrame) -> DataFrame:
         ]
     )
 
-    def wmedian(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # unhinted, as dedup.embedding_cosine_pairs's block_pairs: hints on
+    # only some parameters make applyInPandas warn on every build
+    def wmedian(key, pdf):
         import numpy as np
 
         d = pdf.dropna(subset=["k"]).sort_values(["value", "event_id"])

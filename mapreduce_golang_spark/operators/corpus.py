@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mapreduce_golang_spark.functions.tokenize import LETTERS_ONLY_RE
+from mapreduce_golang_spark.functions.tokenize import letter_tokens
 
 
 def chunk_documents(df: DataFrame, chunk_tokens: int = 50, overlap: int = 10) -> DataFrame:
@@ -23,7 +23,7 @@ def chunk_documents(df: DataFrame, chunk_tokens: int = 50, overlap: int = 10) ->
     n_tokens); the ragged final chunk is kept. Narrow map + explode —
     no shuffle, scales with the scan."""
     stride = chunk_tokens - overlap
-    toks = F.array_remove(F.split(F.col("text"), LETTERS_ONLY_RE), "")
+    toks = letter_tokens(F.col("text"))
     with_toks = df.select("doc_id", toks.alias("toks"), F.size(toks).alias("n")).where(F.col("n") > 0)
     n_chunks = F.ceil(F.col("n") / F.lit(float(stride))).cast("int")
     chunks = with_toks.select(
@@ -49,7 +49,7 @@ def pack_sequences(df: DataFrame, budget_tokens: int = 2000) -> DataFrame:
     the scalable packing topology (global greedy packing would
     serialize through one partition).
     Returns (source, bin, n_docs, total_tokens)."""
-    toks = F.array_remove(F.split(F.col("text"), LETTERS_ONLY_RE), "")
+    toks = letter_tokens(F.col("text"))
     w = Window.partitionBy("source").orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
     sized = df.select("source", "doc_id", F.size(toks).cast("long").alias("n_tokens"))
     binned = sized.withColumn(
@@ -327,7 +327,7 @@ def dataset_card_report(df: DataFrame) -> DataFrame:
     n_sources, n_langs, n_tokens, n_chars, n_unique_texts, dup_frac,
     avg_doc_tokens), floats rounded to 6.
     """
-    toks = F.array_remove(F.split(F.lower(F.col("text")), LETTERS_ONLY_RE), "")
+    toks = letter_tokens(F.lower(F.col("text")))
     per_doc = df.select(
         "doc_id",
         "source",

@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mapreduce_golang_spark.functions.tokenize import LETTERS_ONLY_RE, widen_for_cpu
+from mapreduce_golang_spark.functions.tokenize import LETTERS_ONLY_RE, letter_tokens, widen_for_cpu
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -64,7 +64,7 @@ def word_shingles(df: DataFrame, k: int = 3, text_col: str = "text", id_col: str
     df = widen_for_cpu(df, key_col=text_col)
     toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.array_remove(F.split(F.col(text_col), LETTERS_ONLY_RE), "").alias("toks"),
+        letter_tokens(F.col(text_col)).alias("toks"),
     )
     # guard: sequence(1, n) with n < 1 would generate a DESCENDING
     # sequence, not an empty one — short docs must yield array()

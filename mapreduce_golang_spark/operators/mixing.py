@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from mapreduce_golang_spark.functions.tokenize import LETTERS_ONLY_RE
+from mapreduce_golang_spark.functions.tokenize import letter_tokens
 from mapreduce_golang_spark.operators.corpus import KNUTH_HASH_CONST
 
 #: default hashed-feature space sizes — small enough that the bucket
@@ -31,11 +31,6 @@ from mapreduce_golang_spark.operators.corpus import KNUTH_HASH_CONST
 #: is 10k buckets; the table stays O(buckets) regardless of corpus SF)
 DSIR_BUCKETS = 512
 QUALITY_FEATURES = 256
-
-
-def _tokens(text_col):
-    """Lower-cased letters-only token array (shared tokenizer regex)."""
-    return F.array_remove(F.split(F.lower(text_col), LETTERS_ONLY_RE), "")
 
 
 def _md5_bucket(col, n_buckets: int):
@@ -77,7 +72,10 @@ def dsir_importance_weights(
     """
     is_target = F.col("source").isin(list(target_sources))
     toks = df.select(
-        "doc_id", "source", is_target.alias("is_t"), F.explode(_tokens(F.col("text"))).alias("tok")
+        "doc_id",
+        "source",
+        is_target.alias("is_t"),
+        F.explode(letter_tokens(F.lower(F.col("text")))).alias("tok"),
     ).select("doc_id", "source", "is_t", _md5_bucket(F.col("tok"), n_buckets).alias("b"))
 
     stats = toks.groupBy("b").agg(
@@ -135,7 +133,7 @@ def quality_classifier_scores(df: DataFrame, n_features: int = QUALITY_FEATURES)
     score = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
     return (
         df.select(
-            "doc_id", "source", _tokens(F.col("text")).alias("_toks")
+            "doc_id", "source", letter_tokens(F.lower(F.col("text"))).alias("_toks")
         )
         .select("doc_id", "source", "_toks", F.size("_toks").cast("long").alias("n_tokens"))
         .where(F.col("n_tokens") > 0)
@@ -438,7 +436,7 @@ def token_budget_allocation(
     epochs, oversampled), floats rounded to 6; alloc_tokens is kept
     fractional (rounding policy belongs to the consumer).
     """
-    toks = _tokens(F.col("text"))
+    toks = letter_tokens(F.lower(F.col("text")))
     per_src = (
         df.select("source", F.size(toks).cast("long").alias("n"))
         .groupBy("source")
@@ -527,7 +525,7 @@ def source_token_js_divergence(df: DataFrame, n_buckets: int = DSIR_BUCKETS) -> 
     two tiny dims. Returns (source, n_tokens, js_divergence) rounded
     to 6.
     """
-    tok = df.select("source", F.explode(_tokens(F.col("text"))).alias("tok"))
+    tok = df.select("source", F.explode(letter_tokens(F.lower(F.col("text")))).alias("tok"))
     sb = tok.select("source", _md5_bucket(F.col("tok"), n_buckets).alias("b")).groupBy(
         "source", "b"
     ).agg(F.count("*").cast("double").alias("c_sb"))

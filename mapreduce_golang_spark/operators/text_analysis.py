@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mapreduce_golang_spark.functions.tokenize import LETTERS_ONLY_RE, widen_for_cpu
+from mapreduce_golang_spark.functions.tokenize import letter_tokens, widen_for_cpu
 
 #: Tiny per-language marker lexicons for the n-gram/stopword heuristic.
 #: Shared with the DuckDB oracle (oracle built from this constant).
@@ -41,16 +41,12 @@ QUALITY_STOPWORDS: tuple[str, ...] = ("the", "a", "and", "of", "to", "in", "is",
 BPE_ISH_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def _clean_tokens(text_col):
-    return F.array_remove(F.split(text_col, LETTERS_ONLY_RE), "")
-
-
 def _lang_best_struct():
     """The argmax-over-lexicons struct shared by lang_id and the
     confusion matrix: each language's score is a JVM array filter over
     the doc's tokens, the argmax a 5-element array sort — one narrow
     codegen'd expression, no join, no shuffle."""
-    toks = _clean_tokens(F.lower(F.col("text")))
+    toks = letter_tokens(F.lower(F.col("text")))
 
     def _member_of(ws):  # single-arg lambda: F.filter treats 2-arg fns as (elem, idx)
         return lambda t: t.isin(*ws)
@@ -99,7 +95,7 @@ def text_quality(df: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """
     df = widen_for_cpu(df)
     text = F.col("text")
-    toks = _clean_tokens(F.lower(text))
+    toks = letter_tokens(F.lower(text))
     n_chars = F.length(text)
     n_tokens = F.size(toks)
     # per-occurrence stopword count (array_intersect would dedupe)
@@ -135,7 +131,7 @@ def token_stats(df: DataFrame) -> DataFrame:
     distinct letters-only tokens, BPE-ish pre-tokens."""
     text = F.col("text")
     ws = F.array_remove(F.split(text, r"\s+"), "")
-    word = _clean_tokens(text)
+    word = letter_tokens(text)
     return df.select(
         "doc_id",
         F.size(ws).cast("long").alias("n_ws_tokens"),
@@ -154,7 +150,7 @@ def doc_fingerprints(df: DataFrame, k: int = 3, window: int = 4) -> DataFrame:
     Window state is per-doc (partitionBy doc_id) — scales to any
     corpus size; doc length bounds the per-partition sort.
     """
-    toks = df.select("doc_id", F.posexplode(_clean_tokens(F.col("text"))).alias("pos", "tok"))
+    toks = df.select("doc_id", F.posexplode(letter_tokens(F.col("text"))).alias("pos", "tok"))
     by_doc = Window.partitionBy("doc_id").orderBy("pos")
     # k-shingle = this token + the next k-1 (concat_ws skips the null
     # leads past the doc end; the size==k filter below drops those
@@ -194,7 +190,7 @@ def repetition_ratio(df: DataFrame) -> DataFrame:
     array sliced/deduped inside one codegen stage) — ZERO shuffles,
     scales with the scan like text_quality.
     """
-    toks = _clean_tokens(F.lower(F.col("text")))
+    toks = letter_tokens(F.lower(F.col("text")))
     base = df.select("doc_id", toks.alias("toks"))
     bigrams = F.expr(
         "CASE WHEN size(toks) >= 2 THEN transform(sequence(1, size(toks) - 1), "
@@ -287,7 +283,7 @@ def vocab_growth(df: DataFrame) -> DataFrame:
     (source) with partial counts map-side; count(distinct) rewrites to
     a two-phase expand-aggregate — shuffle ∝ per-source vocabularies.
     """
-    words = df.select("source", F.explode(_clean_tokens(F.lower(F.col("text")))).alias("word"))
+    words = df.select("source", F.explode(letter_tokens(F.lower(F.col("text")))).alias("word"))
     return words.groupBy("source").agg(
         F.count("*").cast("long").alias("n_tokens"),
         F.countDistinct("word").cast("long").alias("n_types"),
@@ -305,7 +301,7 @@ def source_doc_stats(df: DataFrame) -> DataFrame:
     sized = df.select(
         "source",
         F.col("n_chars"),
-        F.size(_clean_tokens(F.col("text"))).alias("n_toks"),
+        F.size(letter_tokens(F.col("text"))).alias("n_toks"),
     )
     return sized.groupBy("source").agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -334,7 +330,7 @@ def tfidf_top_terms(df: DataFrame, k: int = 5) -> DataFrame:
     dimension; the sort key set per group is the source vocabulary).
     """
     words = df.select(
-        "source", F.explode(_clean_tokens(F.col("text"))).alias("word")
+        "source", F.explode(letter_tokens(F.col("text"))).alias("word")
     )
     tf = words.groupBy("source", "word").agg(F.count("*").alias("tf"))
     # one-row scalar as a broadcast cross join — not a driver action
@@ -530,7 +526,7 @@ def bigram_counts(df: DataFrame, k: int = 50) -> DataFrame:
     limit boundary are broken by the bigram text for a fully
     deterministic top-k.
     """
-    toks = _clean_tokens(F.col("text"))
+    toks = letter_tokens(F.col("text"))
     n = F.size(toks)
     bigrams = F.zip_with(
         F.slice(toks, 1, n - 1),
@@ -616,7 +612,7 @@ def zipf_slope(df: DataFrame) -> DataFrame:
     """
     words = df.select(
         "source",
-        F.explode(F.array_remove(F.split(F.lower("text"), LETTERS_ONLY_RE), "")).alias("word"),
+        F.explode(letter_tokens(F.lower("text"))).alias("word"),
     )
     counts = words.groupBy("source", "word").agg(F.count("*").alias("cnt"))
     w = Window.partitionBy("source").orderBy(F.desc("cnt"), F.asc("word"))
@@ -702,7 +698,7 @@ def duplicate_block_fraction(df: DataFrame, block: int = 10) -> DataFrame:
     Returns (doc_id, n_blocks, n_dup_blocks, dup_ratio); docs shorter
     than one block are excluded (no denominator).
     """
-    toks = _clean_tokens(F.lower(F.col("text")))
+    toks = letter_tokens(F.lower(F.col("text")))
     nb = F.floor(F.size("toks") / block).cast("int")
     blocks = F.expr(
         f"transform(sequence(1, nb), i -> array_join(slice(toks, (i - 1) * {block} + 1, {block}), ' '))"
@@ -821,7 +817,7 @@ def token_pmi_pairs(df: DataFrame, min_count: int = 5) -> DataFrame:
 
     Returns (w1, w2, n_pair, pmi) for pairs with n_pair ≥ min_count.
     """
-    toks = _clean_tokens(F.lower(F.col("text")))
+    toks = letter_tokens(F.lower(F.col("text")))
     base = df.select(toks.alias("toks"))
     n = F.size("toks")
     uni = (
@@ -893,7 +889,7 @@ def bm25_top_docs(df: DataFrame, k: int = 20) -> DataFrame:
 
     Returns (rank, doc_id, bm25) — rank by score desc, doc_id asc.
     """
-    toks = _clean_tokens(F.lower(F.col("text")))
+    toks = letter_tokens(F.lower(F.col("text")))
 
     def _eq(term):  # single-arg lambda: a 2-param fn would get (elem, idx)
         return lambda t: t == F.lit(term)
@@ -1165,7 +1161,7 @@ def bpe_merge_candidates(df: DataFrame, k: int = 20) -> DataFrame:
     tie-break. Returns (pair, n) — 'a b'-style space-joined pairs.
     """
     toks = F.explode(
-        F.array_remove(F.split(F.lower(F.col("text")), LETTERS_ONLY_RE), "")
+        letter_tokens(F.lower(F.col("text")))
     ).alias("tok")
     word_freq = df.select(toks).groupBy("tok").agg(F.count("*").alias("wc"))
     pairs = F.expr(
@@ -1313,7 +1309,7 @@ def rake_keywords(df: DataFrame, k: int = 25) -> DataFrame:
         "doc_id",
         "sent_idx",
         F.posexplode(
-            F.array_remove(F.split(F.lower(F.col("sentence")), LETTERS_ONLY_RE), "")
+            letter_tokens(F.lower(F.col("sentence")))
         ).alias("pos", "tok"),
     ).withColumn(
         "is_stop", F.col("tok").isin(*QUALITY_STOPWORDS).cast("long")
@@ -1381,7 +1377,7 @@ def bpe_learn_merges(df: DataFrame, n_merges: int = BPE_MERGE_ROUNDS) -> DataFra
     n) — the learned merge table in order.
     """
     toks = F.explode(
-        F.array_remove(F.split(F.lower(F.col("text")), LETTERS_ONLY_RE), "")
+        letter_tokens(F.lower(F.col("text")))
     ).alias("tok")
     words = (
         df.select(toks)
@@ -1478,7 +1474,7 @@ def bpe_encode_stats(df: DataFrame, n_merges: int = BPE_MERGE_ROUNDS) -> DataFra
     compression_ratio) with ratios rounded 6.
     """
     toks = F.explode(
-        F.array_remove(F.split(F.lower(F.col("text")), LETTERS_ONLY_RE), "")
+        letter_tokens(F.lower(F.col("text")))
     ).alias("tok")
     occ = df.select("source", toks).groupBy("source", "tok").agg(
         F.count("*").cast("long").alias("cnt")
@@ -1576,7 +1572,7 @@ def ngram_diversity_by_source(df: DataFrame) -> DataFrame:
     """
     toks = df.select(
         "source",
-        F.array_remove(F.split(F.lower(F.col("text")), LETTERS_ONLY_RE), "").alias("toks"),
+        letter_tokens(F.lower(F.col("text"))).alias("toks"),
     )
     tri_arr = F.expr(
         "CASE WHEN size(toks) >= 3 "
@@ -1680,7 +1676,7 @@ def source_stopword_similarity(df: DataFrame) -> DataFrame:
         df.select(
             "source",
             F.explode(
-                F.array_remove(F.split(F.lower(F.col("text")), LETTERS_ONLY_RE), "")
+                letter_tokens(F.lower(F.col("text")))
             ).alias("tok"),
         )
         .where(F.col("tok").isin(*QUALITY_STOPWORDS))
@@ -1729,7 +1725,7 @@ def bpe_roundtrip_audit(df: DataFrame, n_merges: int = BPE_MERGE_ROUNDS) -> Data
     n_single_symbol, n_vocab_symbols).
     """
     toks = F.explode(
-        F.array_remove(F.split(F.lower(F.col("text")), LETTERS_ONLY_RE), "")
+        letter_tokens(F.lower(F.col("text")))
     ).alias("tok")
     words = (
         df.select(toks)
@@ -1813,7 +1809,7 @@ def template_opening_report(
     one hash agg; the report keeps openers covering ≥ ``min_docs``.
     Returns (opening, n_docs, n_sources, min_doc_id).
     """
-    toks = F.array_remove(F.split(F.lower(F.col("text")), LETTERS_ONLY_RE), "")
+    toks = letter_tokens(F.lower(F.col("text")))
     opening = F.when(
         F.size(toks) >= n_tokens,
         F.array_join(F.slice(toks, 1, n_tokens), " "),
@@ -1853,7 +1849,7 @@ def source_bigram_cross_entropy(df: DataFrame) -> DataFrame:
     documents². Returns (lm_source, eval_source, n_bigrams,
     cross_entropy).
     """
-    toks = _clean_tokens(F.lower(F.col("text")))
+    toks = letter_tokens(F.lower(F.col("text")))
     n = F.size(toks)
     pairs = F.zip_with(
         F.slice(toks, 1, n - 1),
@@ -2026,7 +2022,7 @@ def truncation_loss_report(
     """
     lens = F.array(*[F.lit(int(x)) for x in context_lens])
     per_doc = df.select(
-        F.size(_clean_tokens(F.col("text"))).cast("long").alias("n_tok")
+        F.size(letter_tokens(F.col("text"))).cast("long").alias("n_tok")
     ).select("n_tok", F.explode(lens).alias("context_len"))
     kept = F.least(F.col("n_tok"), F.col("context_len").cast("long"))
     return (
@@ -2071,7 +2067,7 @@ def token_fertility_by_source(df: DataFrame) -> DataFrame:
     """
     per_doc = df.select(
         "source",
-        F.size(_clean_tokens(F.col("text"))).cast("long").alias("n_tok"),
+        F.size(letter_tokens(F.col("text"))).cast("long").alias("n_tok"),
         F.length("text").cast("long").alias("n_chars"),
         F.octet_length("text").cast("long").alias("n_bytes"),
     )
@@ -2121,7 +2117,7 @@ def heaps_law_fit(df: DataFrame) -> DataFrame:
     Returns (source, n_points, beta, ln_k, r2).
     """
     words = df.select(
-        "source", "doc_id", F.explode(_clean_tokens(F.lower(F.col("text")))).alias("word")
+        "source", "doc_id", F.explode(letter_tokens(F.lower(F.col("text")))).alias("word")
     )
     per_doc = words.groupBy("source", "doc_id").agg(
         F.count("*").cast("long").alias("toks")
@@ -2442,7 +2438,7 @@ def tfidf_cosine_pairs(
     Returns (doc_a, doc_b, n_common_terms, cosine) at cosine ≥
     threshold, ordered.
     """
-    words = df.select("doc_id", F.explode(_clean_tokens(F.col("text"))).alias("word"))
+    words = df.select("doc_id", F.explode(letter_tokens(F.col("text"))).alias("word"))
     tf = words.groupBy("doc_id", "word").agg(F.count("*").cast("double").alias("tf"))
     docfreq = tf.groupBy("word").agg(F.count("*").cast("double").alias("df_w"))
     n_docs = df.agg(F.count("*").cast("double").alias("n_docs"))

@@ -62,9 +62,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The driver regenerates the fixtures between rounds and the physical
     timestamp layout has varied: events.ts has been parquet
     TIMESTAMP(NANOS) (which Spark's vectorized reader refuses,
-    [PARQUET_TYPE_ILLEGAL] — read as int64 nanos and truncate to micros,
-    matching DuckDB's ns→us truncation) and is now naive timestamp[us],
-    which Spark reads as TIMESTAMP_NTZ. Normalize every layout to the
+    [PARQUET_TYPE_ILLEGAL] — read as int64 nanos under the
+    ``nanosAsLong`` that the registry's ``_shipped`` pins, and truncate
+    to micros, matching DuckDB's ns→us truncation) and is now naive
+    timestamp[us], which Spark reads as TIMESTAMP_NTZ. Normalize every layout to the
     session-TZ TIMESTAMP type (session TZ is pinned UTC, so the rendered
     instants are identical) so operators can rely on one ts type —
     `unix_micros` & friends reject NTZ inputs.
@@ -78,8 +79,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     calls of one table need to self-join without ambiguity.
     """
     path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.schema(_file_schema(spark, path)).parquet(path)
     for col, dtype in df.dtypes:
         if name == "events" and col == "ts" and dtype == "bigint":

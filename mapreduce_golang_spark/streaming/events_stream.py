@@ -5,9 +5,9 @@ SURVEY.md §2.3).
 Each drain builds a streaming plan over a file-source scan of a fixture
 (``read_events_stream`` / ``read_documents_stream``), runs it to the end
 of its input with ``availableNow`` into a memory sink
-(``_run_to_memory``) and returns the drained rows. On finite input a
-drain converges to the batch answer, so the batch DuckDB oracle checks
-it. The drains cover tumbling, hopping and session windows, a
+(``drain_to_memory``, at the session's shuffle width) and returns the
+drained rows. On finite input a drain converges to the batch answer, so
+the batch DuckDB oracle checks it. The drains cover tumbling, hopping and session windows, a
 stream-stream and a stream-static join, watermark deduplication (exact
 and MinHash-keyed), streaming COUNT(DISTINCT), OHLC bars, word count,
 and custom per-key state via applyInPandasWithState (and
@@ -43,13 +43,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Streaming sources need the schema up front, but the fixture's
     physical ts layout has varied between driver rounds (INT64 nanos,
-    naive timestamp[us]/NTZ — see sources/tables.py). Declare the file's
-    own schema, memoised per session and file version by
+    naive timestamp[us]/NTZ — see sources/tables.py; INT64 nanos reads
+    as bigint under the ``nanosAsLong`` the registry's ``_shipped``
+    pins). Declare the file's own schema, memoised per session and file version by
     ``tables._file_schema`` (only the first drain of a session pays its
     footer-read job), and normalize to session-TZ TIMESTAMP so every
     downstream event-time operator sees one type.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = _file_schema(spark, f"{sf_dir}/events.parquet")
     physical = schema["ts"].dataType.simpleString()
     # The file stream source requires a directory basePath; select just
@@ -88,23 +88,6 @@ def drain_to_memory(result: DataFrame, output_mode: str) -> DataFrame:
         spark.catalog.dropTempView(name)
 
 
-def _run_to_memory(result: DataFrame, output_mode: str) -> DataFrame:
-    # Stateful streaming operators create one state store per shuffle
-    # partition PER OPERATOR; the batch session's partition count
-    # (sized for fact-table shuffles) buys nothing on the bounded
-    # per-micro-batch state here and multiplies store open/commit
-    # overhead. Pin a smaller count for the drain; the setting is read
-    # at start() and pinned into the query's checkpoint, so restoring
-    # it afterwards cannot affect this stream.
-    spark = result.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        return drain_to_memory(result, output_mode)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
 def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windowed counts computed BY THE STREAMING ENGINE
     (watermark + window agg), drained with availableNow into a memory
@@ -117,7 +100,7 @@ def streaming_hourly_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"))
     )
-    return _run_to_memory(agg, "complete").select(
+    return drain_to_memory(agg, "complete").select(
         F.date_format(F.col("w.start"), _TS_FMT).alias("hour"),
         "event_type",
         "n_events",
@@ -137,7 +120,7 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str, gap_minutes: int = 30
         .groupBy(F.session_window("ts", f"{gap_minutes} minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    return _run_to_memory(agg, "complete").select(
+    return drain_to_memory(agg, "complete").select(
         "user_id",
         F.date_format(F.col("w.start"), _TS_FMT).alias("session_start"),
         "n_events",
@@ -190,7 +173,7 @@ def streaming_purchase_click_join(
         "click_event_id",
         F.col("p_user").alias("user_id"),
     )
-    return _run_to_memory(joined, "append")
+    return drain_to_memory(joined, "append")
 
 
 def stream_to_parquet_exactly_once(spark: SparkSession, sf_dir: str, out_path: str) -> None:
@@ -250,7 +233,7 @@ def streaming_user_counts_stateful(spark: SparkSession, sf_dir: str) -> DataFram
     )
     # With availableNow the fixture drains in one batch per group →
     # the memory sink holds each user's final count exactly once.
-    return _run_to_memory(result, "update").groupBy("user_id").agg(
+    return drain_to_memory(result, "update").groupBy("user_id").agg(
         F.max("n_events").alias("n_events")
     )
 
@@ -270,7 +253,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
     deduped = events.dropDuplicatesWithinWatermark(["user_id", "event_type", "ts"])
     agg = deduped.groupBy("event_type").agg(F.count("*").alias("n_unique"))
-    return _run_to_memory(agg, "complete")
+    return drain_to_memory(agg, "complete")
 
 
 def streaming_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -299,7 +282,7 @@ def streaming_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("long").alias("n_events"),
         F.round(F.sum("value"), 6).alias("sum_value"),
     )
-    return _run_to_memory(agg, "complete")
+    return drain_to_memory(agg, "complete")
 
 
 def streaming_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -321,7 +304,7 @@ def streaming_hopping_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("value"), 4).alias("sum_value"),
         )
     )
-    return _run_to_memory(agg, "complete").select(
+    return drain_to_memory(agg, "complete").select(
         F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
         "event_type",
         "n_events",
@@ -417,7 +400,7 @@ def streaming_user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeMode="None",
     )
     return (
-        _run_to_memory(result, "update")
+        drain_to_memory(result, "update")
         .groupBy("user_id")
         .agg(
             F.max("n_events").alias("n_events"),
@@ -447,7 +430,7 @@ def streaming_incident_hours(spark: SparkSession, sf_dir: str, min_errors: int =
         .agg(F.count("*").alias("n_errors"))
     )
     return (
-        _run_to_memory(agg, "complete")
+        drain_to_memory(agg, "complete")
         .where(F.col("n_errors") >= min_errors)
         .select(
             F.date_format(F.col("w.start"), _TS_FMT).alias("hour"),
@@ -526,14 +509,14 @@ def streaming_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (word → count) agg exchanges, identical to the batch plan.
     Returns (word, cnt).
     """
-    from mapreduce_golang_spark.functions.tokenize import LETTERS_ONLY_RE
+    from mapreduce_golang_spark.functions.tokenize import letter_tokens
 
     docs = read_documents_stream(spark, sf_dir)
     words = docs.select(
-        F.explode(F.array_remove(F.split(F.col("text"), LETTERS_ONLY_RE), "")).alias("word")
+        F.explode(letter_tokens(F.col("text"))).alias("word")
     )
     agg = words.groupBy("word").agg(F.count("*").alias("cnt"))
-    return _run_to_memory(agg, "complete").select("word", F.col("cnt").cast("long").alias("cnt"))
+    return drain_to_memory(agg, "complete").select("word", F.col("cnt").cast("long").alias("cnt"))
 
 
 def streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -556,7 +539,7 @@ def streaming_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count("*").alias("n_users"))
     )
-    return _run_to_memory(agg, "complete").select(
+    return drain_to_memory(agg, "complete").select(
         "event_type", F.col("n_users").cast("long").alias("n_users")
     )
 
@@ -586,7 +569,7 @@ def streaming_hourly_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
         )
     )
-    return _run_to_memory(agg, "complete").select(
+    return drain_to_memory(agg, "complete").select(
         F.date_format(F.col("w.start"), _TS_FMT).alias("window_start"),
         "event_type",
         F.round(F.col("o.value"), 6).alias("open"),
@@ -658,7 +641,7 @@ def streaming_near_dup_docs(
     """
     survivors = near_dup_survivors_stream(spark, sf_dir, k=k, n_hashes=n_hashes)
     return (
-        _run_to_memory(survivors, "append")
+        drain_to_memory(survivors, "append")
         .groupBy("source")
         .agg(F.count("*").cast("long").alias("n_unique_docs"))
     )
@@ -674,7 +657,7 @@ def near_dup_survivors_stream(
     kafka, ...) — tests/test_round9_wave1.py proves the foreachBatch
     parquet drain emits the same survivors as the memory sink. Emits
     (source,) rows, one per surviving document."""
-    from mapreduce_golang_spark.functions.tokenize import LETTERS_ONLY_RE
+    from mapreduce_golang_spark.functions.tokenize import letter_tokens
 
     docs = read_documents_stream(spark, sf_dir)
     # Short-doc drop happens HERE, on the cheap token count, NOT as a
@@ -693,7 +676,7 @@ def near_dup_survivors_stream(
     toks = docs.select(
         "doc_id",
         "source",
-        F.array_remove(F.split(F.col("text"), LETTERS_ONLY_RE), "").alias("toks"),
+        letter_tokens(F.col("text")).alias("toks"),
     ).where(F.size("toks") >= k)
     shingled = toks.select(
         "doc_id",

@@ -164,8 +164,6 @@ def state_schema_evolution_counts(spark: SparkSession, sf_dir: str) -> DataFrame
         spark, sf_dir, os.path.join(work_dir, "era2"),
         n_chunks=N_CHUNKS, chunk_range=(ERA_SPLIT, N_CHUNKS),
     )
-    # drained at the session's shuffle width: the width pin of the
-    # events drains (events_stream._run_to_memory) would reshape this plan
     era2 = drain_to_memory(_evolved_plan(spark, era2_dir), "complete").select(
         "event_type",
         F.col("n").alias("new_n"),

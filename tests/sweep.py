@@ -19,6 +19,8 @@ their stateful plans are covered in tests/test_streaming_*.
 
 from __future__ import annotations
 
+import warnings
+
 import __spark_entry__ as entrymod
 from tests.oracle import assert_same_rowset, negzero_columns, run_oracle
 
@@ -118,9 +120,20 @@ _BOUNDED_NLJ_OK = {
 }
 
 
+#: The message PySpark's applyInPandas warns with when it cannot infer an
+#: eval type from a function's type hints.
+_TYPE_HINT_WARNING = "Cannot infer the eval type from type hints"
+
+
 def check_query(spark, sf_dir: str, name: str) -> int:
-    """Check one registered query; return its row count."""
-    df = entrymod.queries()[name](spark, sf_dir)
+    """Check one registered query; return its row count. Building it
+    must not raise PySpark's warning that a pandas function's type hints
+    name no eval type (hints on only some of its parameters)."""
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        df = entrymod.queries()[name](spark, sf_dir)
+    hint_warnings = [str(w.message) for w in caught if _TYPE_HINT_WARNING in str(w.message)]
+    assert not hint_warnings, (name, hint_warnings)
     if not name.startswith("streaming_"):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan, name

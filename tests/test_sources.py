@@ -1,11 +1,15 @@
 from __future__ import annotations
 
+import os
+
+import __spark_entry__ as entrymod
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from mapreduce_golang_spark.sources import formats
 from mapreduce_golang_spark.sources.tables import TABLES, load_table
+from tests.oracle import assert_same_rowset
 
 
 def _events_sample(spark, sf_dir):
@@ -36,6 +40,27 @@ def test_load_table_schema_follows_rewritten_file(spark, tmp_path, launched_jobs
     df = load_table(spark, str(tmp_path), "t")
     assert df.dtypes == [("a", "bigint"), ("c", "double"), ("d", "boolean")]
     assert [tuple(r) for r in df.collect()] == [(3, 0.5, True)]
+
+
+def test_nanos_events_read_as_the_fixture_does(spark, sf_dir, tmp_path):
+    # events.ts has shipped as parquet TIMESTAMP(NANOS), which Spark
+    # reads only with nanosAsLong on; every registry query pins that
+    # itself, so a session that has it off still gets the fixture's rows
+    # from the batch and the streaming read
+    for name in TABLES:
+        if name != "events":
+            os.symlink(os.path.join(sf_dir, f"{name}.parquet"), tmp_path / f"{name}.parquet")
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    ts = events.schema.get_field_index("ts")
+    nanos = events.set_column(ts, "ts", events["ts"].cast(pa.timestamp("ns")))
+    pq.write_table(nanos, tmp_path / "events.parquet", version="2.6")
+    assert "timeUnit=nanoseconds" in str(pq.ParquetFile(tmp_path / "events.parquet").schema.column(ts))
+
+    qs = entrymod.queries()
+    for name in ("hourly_event_counts", "streaming_hourly_counts"):
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+        got = qs[name](spark, str(tmp_path)).toPandas()
+        assert assert_same_rowset(got, qs[name](spark, sf_dir).toPandas()) > 0, name
 
 
 def test_csv_roundtrip(spark, sf_dir, tmp_path):

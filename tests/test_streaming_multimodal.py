@@ -107,8 +107,7 @@ def test_drains_drop_their_sinks_and_keep_their_rows(spark, sf_dir):
     # Each drain names its own memory sink and drops the sink's view
     # before it returns; the frame it returns reads the sink itself, so
     # a later drain of the same query neither collides with it nor
-    # replaces its rows. Sequential on purpose: concurrent drains race
-    # on the shuffle-partition pin of _run_to_memory.
+    # replaces its rows.
     from tests.oracle import assert_same_rowset
 
     def views():
